@@ -79,7 +79,7 @@ def _within_bound(est_df: DataFrame, exact_df: DataFrame, key: str) -> DataFrame
     # whole register collisions — E[collisions] = n^2/2m, each an O(1)
     # ABSOLUTE error — so a tiny group (e.g. 15 users at sf0.001) may sit
     # 1 register off while being exactly as accurate as the algorithm
-    # promises.  abs err <= 2 only matters for n <= 2/_BOUND (~82 at
+    # promises.  abs err <= 2 only matters for n <= 2/_BOUND (~41 at
     # p=12); at driver scale the relative bound dominates unchanged.
     j = est_df.join(exact_df, key)
     return (

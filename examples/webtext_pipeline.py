@@ -37,7 +37,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import pyspark.sql.functions as F
 
 from hllspark import (
-    agg, curation, decontam, dedup, io as hio, sampling, session, sketch, text,
+    agg, conf, curation, decontam, dedup, io as hio, sampling, sketch, text,
 )
 from hllspark.sketches import cpc, generic, misragries as mg
 
@@ -45,7 +45,7 @@ from hllspark.sketches import cpc, generic, misragries as mg
 def main() -> int:
     n_rows = int(sys.argv[1]) if len(sys.argv) > 1 else 200_000
     t0 = time.time()
-    spark = session.configured_builder("webtext-pipeline", cores=8).getOrCreate()
+    spark = conf.configured_builder("webtext-pipeline", cores=8).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     pages = hio.generate_pages(spark, n_rows, num_partitions=16).cache()

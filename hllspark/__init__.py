@@ -20,12 +20,13 @@ Layering:
     crawl      — frontier seen-set (persisted Bloom) + robots compliance
     bpe        — BPE tokenizer training/encoding over the word-type table
     dedup / similarity / text / multimodal — training-data operators
-    session    — Spark configs for local dev through cluster runs
+    conf       — Spark configs for local dev through cluster runs
 """
 
 from . import (
     agg,
     bpe,
+    conf,
     crawl,
     curation,
     decontam,
@@ -40,7 +41,6 @@ from . import (
     multimodal,
     packedvector,
     sampling,
-    session,
     sessions,
     sketch,
     sketches,
@@ -54,6 +54,7 @@ from . import (
 __all__ = [
     "agg",
     "bpe",
+    "conf",
     "crawl",
     "curation",
     "decontam",
@@ -68,7 +69,6 @@ __all__ = [
     "multimodal",
     "packedvector",
     "sampling",
-    "session",
     "sessions",
     "sketch",
     "sketches",

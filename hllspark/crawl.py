@@ -523,11 +523,11 @@ def snapshot_delta(
 
     Plan shape: each side reduces to (key, fingerprint) — the
     fingerprint is ``xxhash64`` over ``fingerprint_cols`` (default: all
-    shared non-key columns), computed BEFORE the join so only two thin
-    columns shuffle, never page bodies — then ONE full-outer
-    sort-merge/hash join on the key.  If both snapshots were written
-    with :func:`hllspark.io.write_bucketed` on the key, the join runs
-    with zero Exchange (the pay-the-shuffle-once shape); the output
+    shared non-key columns) and their null mask, computed BEFORE the
+    join so only two thin columns shuffle, never page bodies — then ONE
+    full-outer sort-merge/hash join on the key.  If both snapshots were
+    written with :func:`hllspark.io.write_bucketed` on the key, the join
+    runs with zero Exchange (the pay-the-shuffle-once shape); the output
     carries (key, status) plus both fingerprints for audit.
     """
     if fingerprint_cols is None:
@@ -537,14 +537,15 @@ def snapshot_delta(
         if not shared:
             raise ValueError("no shared non-key columns to fingerprint")
         fingerprint_cols = shared
-    o = old.select(
-        F.col(key_col),
-        F.xxhash64(*[F.col(c) for c in fingerprint_cols]).alias("__fp_old"),
+    # xxhash64 skips null fields, so (NULL,'x') and ('x',NULL) would
+    # hash alike (so would xxhash64(struct(...))); hashing a per-column
+    # null mask ahead of the values makes null positions significant
+    fp = F.xxhash64(
+        F.array(*[F.col(c).isNull() for c in fingerprint_cols]),
+        *[F.col(c) for c in fingerprint_cols],
     )
-    n = new.select(
-        F.col(key_col),
-        F.xxhash64(*[F.col(c) for c in fingerprint_cols]).alias("__fp_new"),
-    )
+    o = old.select(F.col(key_col), fp.alias("__fp_old"))
+    n = new.select(F.col(key_col), fp.alias("__fp_new"))
     j = o.join(n, key_col, "full_outer")
     status = (
         F.when(F.col("__fp_old").isNull(), F.lit("added"))

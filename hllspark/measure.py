@@ -207,9 +207,9 @@ def _spark_baseline(args, p, dt, data, mode):
     import pandas as pd
     from pyspark.sql import functions as F
 
-    from . import session
+    from . import conf
 
-    spark = session.configured_builder("hllspark-measure-baseline").getOrCreate()
+    spark = conf.configured_builder("hllspark-measure-baseline").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     if dt == "uint64":
         pdf = pd.DataFrame({"v": np.asarray(data, dtype=np.uint64).view(np.int64)})
@@ -244,9 +244,9 @@ def _spark_baseline(args, p, dt, data, mode):
 
 
 def _spark(args, p, dt, data, mode):
-    from . import agg, session
+    from . import agg, conf
 
-    spark = session.configured_builder("hllspark-measure").getOrCreate()
+    spark = conf.configured_builder("hllspark-measure").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import pandas as pd
 

@@ -367,6 +367,22 @@ def test_snapshot_delta(spark):
         ).collect()
     }
     assert got2 == {"a": "removed", "d": "added"}
+    # null position is part of the fingerprint: xxhash64 skips null
+    # fields, so (NULL,'x') -> ('x',NULL) must still come out 'changed'
+    # while an all-null row that stays all-null stays unchanged
+    swap_old = spark.createDataFrame(
+        [("e", None, "x"), ("f", None, None)], "k string, a string, b string"
+    )
+    swap_new = spark.createDataFrame(
+        [("e", "x", None), ("f", None, None)], "k string, a string, b string"
+    )
+    got3 = {
+        r["k"]: r["status"]
+        for r in crawl.snapshot_delta(
+            swap_old, swap_new, key_col="k", include_unchanged=True
+        ).collect()
+    }
+    assert got3 == {"e": "changed", "f": "unchanged"}
     # no shared non-key columns -> loud failure
     import pytest as _pytest
 

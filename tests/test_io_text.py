@@ -226,13 +226,13 @@ def test_snapshot_resume(spark, tmp_path, pages):
 
 
 def test_session_builders():
-    from hllspark import session as hsession
+    from hllspark import conf as hconf
 
-    b = hsession.configured_builder("t", cores=4)
+    b = hconf.configured_builder("t", cores=4)
     opts = b._options
     assert opts["spark.sql.adaptive.enabled"] == "true"
     assert opts["spark.sql.shuffle.partitions"] == "4"
-    b2 = hsession.apply_cluster_defaults(b)
+    b2 = hconf.apply_cluster_defaults(b)
     opts2 = b2._options
     assert opts2["spark.io.compression.codec"] == "zstd"
     assert "auto" not in opts2.values()

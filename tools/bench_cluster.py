@@ -5,7 +5,7 @@ local standalone cluster — the closest sandbox emulation of the north_rule's
 Topology: 1 master + 4 workers x 8 cores x 20g on this 32-core box.
 Levels: spark.cores.max=8  -> 1 executor  (N)
         spark.cores.max=32 -> 4 executors (4N)
-Same input (the 32M-row pages fixture from bench_scaling, scanned 8x),
+Same input (the approx_distinct fixture of tools/scaling.py, scanned 8x),
 library shipped to executors via --py-files hllspark.zip.
 
 Usage: python tools/bench_cluster.py           # orchestrates both levels
@@ -26,12 +26,14 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 os.environ.setdefault("SPARK_LOCAL_IP", "127.0.0.1")
 
-FIXTURE = os.path.join(REPO, ".bench_data", "pages_32m")
+import scaling  # noqa: E402  (tools/scaling.py owns the fixture)
+
+FIXTURE = scaling.fixture_path("approx_distinct")
 MASTER = "spark://127.0.0.1:7077"
-COPIES = 8
+COPIES = scaling.COPIES
 REPS = int(os.environ.get("HLLSPARK_CLUSTER_REPS", "5"))
-N_ROWS = 32_000_000
-P = 14
+N_ROWS = scaling.OPS["approx_distinct"].size
+P = scaling.P
 LEVELS = (8, 32)
 SPARK_HOME = os.environ.get("SPARK_HOME", "/opt/spark")
 
@@ -134,6 +136,7 @@ def main() -> None:
     if len(sys.argv) > 2 and sys.argv[1] == "--job":
         job(int(sys.argv[2]))
         return
+    scaling.ensure_fixture("approx_distinct")
     ensure_cluster()
     zip_path = build_zip()
     levels = {}

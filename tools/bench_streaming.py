@@ -27,14 +27,14 @@ os.environ.setdefault("SPARK_LOCAL_IP", "127.0.0.1")
 
 import pyspark.sql.functions as F  # noqa: E402
 
-from hllspark import session, streaming  # noqa: E402
+from hllspark import conf, streaming  # noqa: E402
 
 N_ROWS = int(os.environ.get("HLLSPARK_STREAM_ROWS", str(2_000_000)))
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
 def main() -> None:
-    spark = session.configured_builder("hllspark-stream-bench", cores=CPUS).getOrCreate()
+    spark = conf.configured_builder("hllspark-stream-bench", cores=CPUS).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     tmp = tempfile.mkdtemp(prefix="hllspark_stream_bench_")
     src = os.path.join(tmp, "src")
