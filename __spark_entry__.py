@@ -560,7 +560,7 @@ def _q_jr_build_estimate(spark: SparkSession, sf: str) -> DataFrame:
     stay within bound of the exact count."""
     ev = _t(spark, sf, "events")
     v = F.xxhash64(F.col("user_id"))
-    j_expr, r_expr = agg._jr_columns_sql(v)(_P)
+    j_expr, r_expr = agg._jr_columns_sql(v, _P)
     jr = ev.where(F.col("user_id").isNotNull()).select(
         j_expr.alias("j"), r_expr.alias("r")
     )

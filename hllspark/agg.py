@@ -12,20 +12,26 @@ row just hash + two shifts + clz + array max, no per-row map probe — the
 same imperative-buffer strategy as Spark's built-in approx_count_distinct,
 and measured at ~1x its throughput (vs ~3x slower for impl='sql').
 
-impl='sql' (default) — everything hot stays in the JVM / whole-stage codegen:
+impl='sql' — everything hot stays in the JVM / whole-stage codegen:
 
     scan (column-pruned) -> [JVM] j = top-p bits of xxhash64(v),
-                                  r = clz(hash<<p)+1   (bit-smear + bit_count,
-                                  pure integer exprs — no UDF)
-      -> groupBy(keys, j).agg(max(r))   # native HashAggregate: Catalyst does
+                                  w = sign-flipped (hash << p)
+      -> groupBy(keys, j).agg(min(w))   # native HashAggregate: Catalyst does
                                         # map-side partial aggregation, so the
                                         # shuffle carries <= m rows per key per
                                         # map task regardless of input size
+      -> r = clz(w) + 1 (bit-smear + bit_count, pure integer exprs — no UDF)
       -> groupBy(keys).applyInPandas(assemble)  # <= m tiny (j, r) rows per
                                         # group -> one serialized sketch row
 
     Measured ~66M rows/s on local[32] vs ~3M rows/s for the Arrow/pandas
     path — Python never touches row-scale data.
+
+    Kept beside 'jvm' for two reasons: it is the ONLY plan on a session
+    without the jar (e.g. spark-submit without ``--jars``:
+    conf.apply_cluster_defaults does not ship it), and it is the reference
+    the jvm plan is checked against (perfbench ``sketch_build`` and the
+    pytest parity tests).
 
 impl='pandas' — per-partition vectorized build via mapInPandas
 (np.maximum.at scatter), one sketch row per (partition, key), then a
@@ -34,7 +40,7 @@ the hash itself runs in numpy) and preferred when the key cardinality is so
 high that keys x m native agg groups would blow the hash-aggregate state
 (rule of thumb: #keys x 2^p > ~10M per executor).
 
-Both implementations produce byte-identical sketches for the same
+All three implementations produce byte-identical sketches for the same
 (hash_mode, p): they share the j/r derivation (hashing.jr_split twins the
 SQL expression) and merging is an exact max.
 
@@ -55,6 +61,8 @@ intermediate merge level for extreme partition counts (north_rule).
 
 from __future__ import annotations
 
+from functools import reduce
+from itertools import combinations
 from typing import Iterator, Sequence
 
 import numpy as np
@@ -71,6 +79,7 @@ from pyspark.sql.types import (
 )
 
 from . import hll as _hll
+from . import jvmagg
 from . import sketch as _sketch
 from .hashing import farmhash64, fingerprint64, jr_from_hash, jr_split
 
@@ -79,6 +88,7 @@ _J_COL = "__hllspark_j"
 _R_COL = "__hllspark_r"
 _SKETCH_COL = "sketch"
 _GLOBAL_KEY = "__hllspark_g"
+_LONG_MIN = -(1 << 63)
 
 
 # ---------------------------------------------------------------------------
@@ -98,24 +108,31 @@ def _hash_series_farmhash(s: pd.Series, int_dtype: bool = False) -> np.ndarray:
     return farmhash64(s.astype("string").fillna("").to_numpy(dtype=object))
 
 
-def _jr_columns_sql(v):
-    """The JVM twin of hashing.jr_split: j = top p-bits (applied by caller),
-    r = clz(v << p) + 1 via bit-smear + bit_count, with the w == 0 edge
-    capped at 64 - p + 1 (see jr_split) — pure integer expressions, fully
-    codegen'd."""
+def _hashed(df: DataFrame, value_col: str, hash_mode: str):
+    """(null-filtered df, bigint hash column of value_col) for the JVM hash
+    modes: Spark's xxhash64(NULL) is the seed hash, so nulls are dropped
+    BEFORE hashing (COUNT DISTINCT semantics); 'prehashed' casts as is."""
+    v = (
+        F.xxhash64(F.col(value_col))
+        if hash_mode == "xxhash64"
+        else F.col(value_col).cast("long")
+    )
+    return df.where(F.col(value_col).isNotNull()), v
 
-    def exprs(p: int):
-        j = F.shiftrightunsigned(v, 64 - p)
-        w0 = F.shiftleft(v, p)
-        w = w0
-        for s in (1, 2, 4, 8, 16, 32):
-            w = w.bitwiseOR(F.shiftrightunsigned(w, s))
-        r = F.when(w0 == 0, F.lit(64 - p + 1)).otherwise(
-            F.lit(65) - F.bit_count(w)
-        )
-        return j, r
 
-    return exprs
+def _rank(w, p: int):
+    """r = clz(w) + 1 via bit-smear + bit_count, with the w == 0 edge capped
+    at 64 - p + 1 (jr_split's convention) — pure integer expressions."""
+    x = w
+    for s in (1, 2, 4, 8, 16, 32):
+        x = x.bitwiseOR(F.shiftrightunsigned(x, s))
+    return F.when(w == 0, F.lit(64 - p + 1)).otherwise(F.lit(65) - F.bit_count(x))
+
+
+def _jr_columns_sql(v, p: int):
+    """The JVM twin of hashing.jr_split: (j, r) columns of bigint hash v,
+    j = top p bits, r = clz(v << p) + 1 — fully codegen'd."""
+    return F.shiftrightunsigned(v, 64 - p), _rank(F.shiftleft(v, p), p)
 
 
 # ---------------------------------------------------------------------------
@@ -206,13 +223,28 @@ def merge_udaf(algo: str = "hll", m_bits: int = 3):
     return F.pandas_udf(_merge, BinaryType())
 
 
+def _raw_regs(b) -> np.ndarray:
+    """Raw dense register bytes (JVM aggregate output) -> uint8 registers."""
+    return np.frombuffer(bytes(b), dtype=np.uint8)
+
+
+def _estimate_series(s: pd.Series, decode) -> pd.Series:
+    if len(s) == 0:
+        return pd.Series([], dtype="float64")
+    return pd.Series(_hll.estimate(np.stack([decode(b) for b in s])))
+
+
 @F.pandas_udf(DoubleType())
 def estimate_udf(s: pd.Series) -> pd.Series:
     """Scalar pandas UDF: serialized sketch -> distinct-count estimate."""
-    if len(s) == 0:
-        return pd.Series([], dtype="float64")
-    regs = np.stack([_sketch.decode(b) for b in s])
-    return pd.Series(_hll.estimate(regs))
+    return _estimate_series(s, _sketch.decode)
+
+
+@F.pandas_udf(DoubleType())
+def estimate_raw_udf(s: pd.Series) -> pd.Series:
+    """Scalar pandas UDF: raw dense register bytes -> distinct estimate
+    (same numpy estimator as estimate_udf, so jvm/sql/pandas paths agree)."""
+    return _estimate_series(s, _raw_regs)
 
 
 @F.pandas_udf(LongType())
@@ -225,7 +257,8 @@ def bit_size_udf(s: pd.Series) -> pd.Series:
 # public operators
 # ---------------------------------------------------------------------------
 
-def _validate(p: int, algo: str, hash_mode: str, impl: str) -> None:
+def _validate(p: int, algo: str, hash_mode: str, impl: str,
+              key_encode: str | None = None) -> None:
     if not 4 <= p <= 18:
         raise ValueError(f"p must be in [4, 18], got {p}")
     if algo not in ("hll", "hlll", "hllzstd"):
@@ -236,6 +269,10 @@ def _validate(p: int, algo: str, hash_mode: str, impl: str) -> None:
         raise ValueError(f"unknown impl {impl!r}")
     if impl in ("sql", "jvm") and hash_mode == "farmhash":
         raise ValueError("farmhash parity mode requires impl='pandas'")
+    if key_encode not in (None, "hash64"):
+        raise ValueError(f"unknown key_encode {key_encode!r}")
+    if key_encode and impl != "jvm":
+        raise ValueError("key_encode='hash64' requires impl='jvm'")
 
 
 def _resolve_impl(df: DataFrame, hash_mode: str, impl: str | None) -> str:
@@ -247,8 +284,6 @@ def _resolve_impl(df: DataFrame, hash_mode: str, impl: str | None) -> str:
         return impl
     if hash_mode == "farmhash":
         return "pandas"
-    from . import jvmagg
-
     return "jvm" if jvmagg.is_available(df.sparkSession) else "sql"
 
 
@@ -260,27 +295,16 @@ def _key_schema(df: DataFrame, keys: Sequence[str]) -> str:
     )
 
 
+def _sketch_schema(df: DataFrame, keys: Sequence[str]) -> str:
+    """DDL of a sketch table: ``df``'s key columns, then the sketch."""
+    key_schema = _key_schema(df, keys)
+    return (key_schema + ", " if key_schema else "") + f"{_SKETCH_COL} binary"
+
+
 def _seed_row(spark, algo: str, p: int, m_bits: int) -> DataFrame:
     return spark.createDataFrame(
         [(bytearray(_sketch.encode(_hll.empty(p), algo, m_bits)),)],
         f"{_SKETCH_COL} binary",
-    )
-
-
-_LONG_MIN = -(1 << 63)
-
-
-def _r_from_minned_w(p: int):
-    """Decode rank r from the min-aggregated sign-flipped shifted hash:
-    r = clz(w) + 1 for w != 0, capped at 64 - p + 1 for w == 0 (jr_split's
-    convention).  The cap keeps the decode monotone non-increasing in the
-    unsigned w, so min_unsigned(w) decodes to exactly max(r)."""
-    w0 = F.col("__w").bitwiseXOR(F.lit(_LONG_MIN))
-    x = w0
-    for s in (1, 2, 4, 8, 16, 32):
-        x = x.bitwiseOR(F.shiftrightunsigned(x, s))
-    return F.when(w0 == 0, F.lit(64 - p + 1)).otherwise(
-        F.lit(65) - F.bit_count(x)
     )
 
 
@@ -296,18 +320,16 @@ def _maxed_registers_sql(df, value_col, keys, p, hash_mode):
     HashAggregate (map-side combine), so the shuffle is bounded by
     #keys * m rows per map task; per input row only hash + shift + xor +
     map-probe remain (~27% faster global builds, byte-identical results).
+    The w == 0 rank cap keeps the decode monotone non-increasing in the
+    unsigned w, so min_unsigned(w) decodes to exactly max(r).
     """
-    filtered = df.where(F.col(value_col).isNotNull())
-    v = (
-        F.xxhash64(F.col(value_col))
-        if hash_mode == "xxhash64"
-        else F.col(value_col).cast("long")
-    )
+    filtered, v = _hashed(df, value_col, hash_mode)
     j = F.shiftrightunsigned(v, 64 - p)
     w = F.shiftleft(v, p).bitwiseXOR(F.lit(_LONG_MIN))  # unsigned-order key
     projected = filtered.select(*keys, j.alias(_J_COL), w.alias("__w"))
     agged = projected.groupBy(*keys, _J_COL).agg(F.min("__w").alias("__w"))
-    return agged.select(*keys, _J_COL, _r_from_minned_w(p).alias(_R_COL))
+    r = _rank(F.col("__w").bitwiseXOR(F.lit(_LONG_MIN)), p)
+    return agged.select(*keys, _J_COL, r.alias(_R_COL))
 
 
 def _estimate_expr(p: int):
@@ -348,47 +370,26 @@ def _approx_distinct_sql(df, value_col, keys, p, hash_mode, estimate_col):
     return maxed.groupBy(*keys).agg(est)
 
 
-def _sketch_by_sql(df, value_col, keys, p, algo, m_bits, hash_mode):
-    maxed = _maxed_registers_sql(df, value_col, keys, p, hash_mode)
-    return _assemble_sketches(
-        df.sparkSession, maxed, keys, _key_schema(df, keys), p, algo, m_bits
-    )
-
-
 def _encode_raw_udf(algo: str, m_bits: int):
     """Scalar pandas UDF: raw dense register bytes (JVM aggregate output)
     -> the engine's serialized sketch format.  Runs over one row per group."""
 
     @F.pandas_udf(BinaryType())
     def _enc(s: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                _sketch.encode(
-                    np.frombuffer(bytes(b), dtype=np.uint8), algo, m_bits
-                )
-                for b in s
-            ]
-        )
+        return pd.Series([_sketch.encode(_raw_regs(b), algo, m_bits) for b in s])
 
     return _enc
 
 
-@F.pandas_udf(DoubleType())
-def estimate_raw_udf(s: pd.Series) -> pd.Series:
-    """Scalar pandas UDF: raw dense register bytes -> distinct estimate
-    (same numpy estimator as estimate_udf, so jvm/sql/pandas paths agree)."""
-    if len(s) == 0:
-        return pd.Series([], dtype="float64")
-    regs = np.stack([np.frombuffer(bytes(b), dtype=np.uint8) for b in s])
-    return pd.Series(_hll.estimate(regs))
-
-
-def _raw_registers_jvm(df, value_col, keys, p, hash_mode, key_encode=None):
+def _raw_registers_jvm(df, value_col, keys, p, hash_mode, key_encode=None,
+                       agg_column=jvmagg.regs_agg_column, alias="__regs"):
     """scan -> JVM hash projection -> ObjectHashAggregate with a dense
-    byte[m] register buffer (hllspark.jvmagg) -> one raw-register row per
-    group.  Partial aggregation ships one m-byte buffer per (group, map
-    task): the same shuffle shape as the reference's treeAggregate-style
-    build and Spark's own HLL++ (no per-row (keys, j) map probe).
+    byte[m] register buffer (hllspark.jvmagg) -> one row per group carrying
+    ``agg_column`` as ``alias``: raw registers (regs_agg_column, the
+    default) or the finished estimate (est_agg_column).  Partial
+    aggregation ships one m-byte buffer per (group, map task): the same
+    shuffle shape as the reference's treeAggregate-style build and Spark's
+    own HLL++ (no per-row (keys, j) map probe).
 
     key_encode='hash64': group on xxhash64 of each key instead of the key
     itself (the key value is carried to the output via FIRST over the
@@ -400,47 +401,31 @@ def _raw_registers_jvm(df, value_col, keys, p, hash_mode, key_encode=None):
     Dictionary-encoding via a broadcast-joined dim table was A/B'd and
     REJECTED: the per-row join probe costs more than the agg probe it
     replaces (3.0s vs 0.8s baseline, PLANS.md §8)."""
-    from . import jvmagg
-
-    filtered = df.where(F.col(value_col).isNotNull())
-    v = (
-        F.xxhash64(F.col(value_col))
-        if hash_mode == "xxhash64"
-        else F.col(value_col).cast("long")
-    )
-    regs = jvmagg.regs_agg_column(df.sparkSession, p, _HASH_COL).alias("__regs")
+    filtered, v = _hashed(df, value_col, hash_mode)
+    regs = agg_column(df.sparkSession, p, _HASH_COL).alias(alias)
     if keys and key_encode == "hash64":
-        hashed = [F.xxhash64(F.col(k)).alias(f"__gk{i}") for i, k in enumerate(keys)]
+        gks = [f"__gk{i}" for i in range(len(keys))]
+        hashed = [F.xxhash64(F.col(k)).alias(g) for k, g in zip(keys, gks)]
         projected = filtered.select(*hashed, *keys, v.alias(_HASH_COL))
         firsts = [F.first(k).alias(k) for k in keys]
-        return (
-            projected.groupBy(*[f"__gk{i}" for i in range(len(keys))])
-            .agg(*firsts, regs)
-            .drop(*[f"__gk{i}" for i in range(len(keys))])
-        )
+        return projected.groupBy(*gks).agg(*firsts, regs).drop(*gks)
     projected = filtered.select(*keys, v.alias(_HASH_COL))
     if keys:
         return projected.groupBy(*keys).agg(regs)
     return projected.agg(regs)  # empty input -> zero() buffer == empty sketch
 
 
-def _sketch_by_jvm(df, value_col, keys, p, algo, m_bits, hash_mode,
-                   key_encode=None):
-    built = _raw_registers_jvm(df, value_col, keys, p, hash_mode, key_encode)
-    enc = _encode_raw_udf(algo, m_bits)
-    return built.select(*keys, enc(F.col("__regs")).alias(_SKETCH_COL))
-
-
-def _assemble_sketches(spark, maxed, keys, key_schema, p, algo, m_bits):
-    """groupBy(keys).applyInPandas over maxed (j, r) rows — at most m tiny
-    rows per group reach Python regardless of input size."""
-    out_schema = (key_schema + ", " if key_schema else "") + f"{_SKETCH_COL} binary"
+def _assemble_sketches(df, maxed, keys, p, algo, m_bits):
+    """groupBy(keys).applyInPandas over maxed (j, r) rows derived from
+    ``df`` — at most m tiny rows per group reach Python regardless of input
+    size."""
+    out_schema = _sketch_schema(df, keys)
     group_cols = list(keys) if keys else [_GLOBAL_KEY]
     if not keys:
         # seed one (j=0, r=0) row so the assembly group exists even on empty
         # input (r=0 never survives a real max: r >= 1 by construction)
         maxed = maxed.withColumn(_GLOBAL_KEY, F.lit(1)).unionByName(
-            spark.range(1).select(
+            df.sparkSession.range(1).select(
                 F.lit(1).alias(_GLOBAL_KEY),
                 F.lit(0).cast("long").alias(_J_COL),
                 F.lit(0).cast("integer").alias(_R_COL),
@@ -467,19 +452,12 @@ def _assemble_sketches(spark, maxed, keys, key_schema, p, algo, m_bits):
 
 def _sketch_by_pandas(df, value_col, keys, p, algo, m_bits, hash_mode, salt_buckets):
     spark = df.sparkSession
-    if hash_mode == "xxhash64":
-        projected = df.where(F.col(value_col).isNotNull()).select(
-            *keys, F.xxhash64(F.col(value_col)).alias(_HASH_COL)
-        )
-    elif hash_mode == "prehashed":
-        projected = df.where(F.col(value_col).isNotNull()).select(
-            *keys, F.col(value_col).cast("long").alias(_HASH_COL)
-        )
-    else:  # farmhash: raw values go to Python
+    if hash_mode == "farmhash":  # raw values go to Python
         projected = df.select(*keys, value_col)
+    else:
+        filtered, v = _hashed(df, value_col, hash_mode)
+        projected = filtered.select(*keys, v.alias(_HASH_COL))
 
-    key_schema = _key_schema(df, keys)
-    out_schema = (key_schema + ", " if key_schema else "") + f"{_SKETCH_COL} binary"
     partials = projected.mapInPandas(
         _make_build_partials(
             keys, p, algo, m_bits, hash_mode, value_col,
@@ -488,7 +466,7 @@ def _sketch_by_pandas(df, value_col, keys, p, algo, m_bits, hash_mode, salt_buck
                 (ByteType, ShortType, IntegerType, LongType),
             ),
         ),
-        schema=out_schema,
+        schema=_sketch_schema(df, keys),
     )
     merge = merge_udaf(algo, m_bits)
     if not keys:
@@ -525,7 +503,7 @@ def sketch_by(
 
     Returns DataFrame[keys..., sketch binary].  Nulls in value_col are
     ignored (COUNT DISTINCT semantics); null group keys form a group.
-    See module docstring for the two physical plans.
+    See module docstring for the three physical plans.
 
     key_encode='hash64' (jvm impl only): probe the grouped aggregate on
     xxhash64(key) longs instead of raw string keys — ~1.3x at 100k string
@@ -534,17 +512,14 @@ def sketch_by(
     """
     keys = list(keys or [])
     impl = _resolve_impl(df, hash_mode, impl)
-    _validate(p, algo, hash_mode, impl)
-    if key_encode not in (None, "hash64"):
-        raise ValueError(f"unknown key_encode {key_encode!r}")
-    if key_encode and impl != "jvm":
-        raise ValueError("key_encode='hash64' requires impl='jvm'")
+    _validate(p, algo, hash_mode, impl, key_encode)
     if impl == "jvm":
-        return _sketch_by_jvm(
-            df, value_col, keys, p, algo, m_bits, hash_mode, key_encode
-        )
+        built = _raw_registers_jvm(df, value_col, keys, p, hash_mode, key_encode)
+        enc = _encode_raw_udf(algo, m_bits)
+        return built.select(*keys, enc(F.col("__regs")).alias(_SKETCH_COL))
     if impl == "sql":
-        return _sketch_by_sql(df, value_col, keys, p, algo, m_bits, hash_mode)
+        maxed = _maxed_registers_sql(df, value_col, keys, p, hash_mode)
+        return _assemble_sketches(df, maxed, keys, p, algo, m_bits)
     return _sketch_by_pandas(
         df, value_col, keys, p, algo, m_bits, hash_mode, salt_buckets
     )
@@ -604,9 +579,25 @@ def sketch_from_jr(
         .groupBy(*keys, _J_COL)
         .agg(F.max(_R_COL).alias(_R_COL))
     )
-    return _assemble_sketches(
-        df.sparkSession, maxed, keys, _key_schema(df, keys), p, algo, m_bits
-    )
+    return _assemble_sketches(df, maxed, keys, p, algo, m_bits)
+
+
+def _ordered_union(sets: Sequence[Sequence[str]]) -> list[str]:
+    """Every key of ``sets``, once each, in first-seen order."""
+    return list(dict.fromkeys(k for s in sets for k in s))
+
+
+def _rollup_sets(keys: Sequence[str]) -> list[list[str]]:
+    """ROLLUP grains: (k1..kn), (k1..kn-1), ..., ()."""
+    keys = list(keys)
+    return [keys[:i] for i in range(len(keys), -1, -1)]
+
+
+def _cube_sets(keys: Sequence[str]) -> list[list[str]]:
+    """CUBE grains: every subset of keys, largest first."""
+    return [
+        list(c) for r in range(len(keys), -1, -1) for c in combinations(keys, r)
+    ]
 
 
 def estimate_grouping_sets(
@@ -648,11 +639,7 @@ def estimate_grouping_sets(
 
     if df.storageLevel == StorageLevel.NONE:
         df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    all_keys: list[str] = []
-    for s in sets:
-        for k in s:
-            if k not in all_keys:
-                all_keys.append(k)
+    all_keys = _ordered_union(sets)
     dtypes = dict(df.dtypes)
     merge = merge_udaf(algo, m_bits)
     parts = []
@@ -668,9 +655,7 @@ def estimate_grouping_sets(
                 F.lit(gid).alias("grouping_set_id"), *cols, F.col(sketch_col)
             )
         )
-    expanded = parts[0]
-    for p_ in parts[1:]:
-        expanded = expanded.unionByName(p_)
+    expanded = reduce(DataFrame.unionByName, parts)
     merged = expanded.groupBy("grouping_set_id", *all_keys).agg(
         merge(F.col(sketch_col)).alias(sketch_col)
     )
@@ -690,8 +675,9 @@ def sketch_rollup(
     estimate_col: str = "distinct_estimate",
 ) -> DataFrame:
     """ROLLUP(k1, k2, ...) over sketch rows: (k1..kn), (k1..kn-1), ..., ()."""
-    sets = [list(keys)[:i] for i in range(len(keys), -1, -1)]
-    return estimate_grouping_sets(df, sets, sketch_col, algo, m_bits, estimate_col)
+    return estimate_grouping_sets(
+        df, _rollup_sets(keys), sketch_col, algo, m_bits, estimate_col
+    )
 
 
 def approx_distinct_grouping_sets(
@@ -724,34 +710,20 @@ def approx_distinct_grouping_sets(
     grouping sets also take that path (native GROUPING SETS computes a
     duplicated grain once)."""
     sets = [list(s) for s in sets]
-    keys_union: list[str] = []
-    for s in sets:
-        for k in s:
-            if k not in keys_union:
-                keys_union.append(k)
+    keys_union = _ordered_union(sets)
     impl = _resolve_impl(df, hash_mode, impl)
-    masks = []
     n = len(keys_union)
-    for s in sets:
-        mask = 0
-        for i, k in enumerate(keys_union):
-            if k not in s:
-                mask |= 1 << (n - 1 - i)
-        masks.append(mask)
+    masks = [
+        sum(1 << (n - 1 - i) for i, k in enumerate(keys_union) if k not in s)
+        for s in sets
+    ]
     if impl != "jvm" or len(set(masks)) != len(masks):
         sk = sketch_by(
             df, value_col, keys_union, p=p, hash_mode=hash_mode, impl=impl
         )
         return estimate_grouping_sets(sk, sets, estimate_col=estimate_col)
-    from . import jvmagg
-
     _validate(p, "hll", hash_mode, impl)
-    filtered = df.where(F.col(value_col).isNotNull())
-    v = (
-        F.xxhash64(F.col(value_col))
-        if hash_mode == "xxhash64"
-        else F.col(value_col).cast("long")
-    )
+    filtered, v = _hashed(df, value_col, hash_mode)
     projected = filtered.select(*keys_union, v.alias(_HASH_COL))
     est = jvmagg.est_agg_column(df.sparkSession, p, _HASH_COL).alias(
         estimate_col
@@ -780,9 +752,8 @@ def approx_distinct_rollup(
 ) -> DataFrame:
     """ROLLUP(k1, ..., kn) distinct-count estimates from one base scan:
     grains (k1..kn), (k1..kn-1), ..., () — see approx_distinct_grouping_sets."""
-    sets = [list(keys)[:i] for i in range(len(keys), -1, -1)]
     return approx_distinct_grouping_sets(
-        df, value_col, sets, p, hash_mode, impl, estimate_col
+        df, value_col, _rollup_sets(keys), p, hash_mode, impl, estimate_col
     )
 
 
@@ -797,16 +768,8 @@ def approx_distinct_cube(
 ) -> DataFrame:
     """CUBE(k1, ..., kn) distinct-count estimates from one base scan: every
     subset of keys — see approx_distinct_grouping_sets."""
-    from itertools import combinations
-
-    keys = list(keys)
-    sets = [
-        list(c)
-        for r in range(len(keys), -1, -1)
-        for c in combinations(keys, r)
-    ]
     return approx_distinct_grouping_sets(
-        df, value_col, sets, p, hash_mode, impl, estimate_col
+        df, value_col, _cube_sets(keys), p, hash_mode, impl, estimate_col
     )
 
 
@@ -819,15 +782,9 @@ def sketch_cube(
     estimate_col: str = "distinct_estimate",
 ) -> DataFrame:
     """CUBE(k1, k2, ...) over sketch rows: every subset of keys."""
-    from itertools import combinations
-
-    keys = list(keys)
-    sets = [
-        list(c)
-        for r in range(len(keys), -1, -1)
-        for c in combinations(keys, r)
-    ]
-    return estimate_grouping_sets(df, sets, sketch_col, algo, m_bits, estimate_col)
+    return estimate_grouping_sets(
+        df, _cube_sets(keys), sketch_col, algo, m_bits, estimate_col
+    )
 
 
 def approx_distinct(
@@ -844,49 +801,21 @@ def approx_distinct(
 ) -> DataFrame:
     """Convenience: build + estimate. DataFrame[keys..., estimate double].
 
-    With impl='sql' (default for JVM hash modes) the whole query — hashing,
-    register max, and the Flajolet estimator — runs as native Spark SQL with
-    no Python stage at all.  key_encode='hash64' (jvm impl only): see
+    With the jvm impl (the default when the jar is on the classpath) the
+    whole query is one ObjectHashAggregate finishing to the estimate in the
+    JVM — the plan shape of approx_count_distinct; with impl='sql' hashing,
+    register max and the Flajolet estimator run as native Spark SQL.
+    Neither has a Python stage.  key_encode='hash64' (jvm impl only): see
     sketch_by."""
     keys = list(keys or [])
     impl = _resolve_impl(df, hash_mode, impl)
-    if key_encode not in (None, "hash64"):
-        raise ValueError(f"unknown key_encode {key_encode!r}")
-    if key_encode and impl != "jvm":
-        raise ValueError("key_encode='hash64' requires impl='jvm'")
+    _validate(p, algo, hash_mode, impl, key_encode)
     if impl == "jvm":
-        # single ObjectHashAggregate finishing to the estimate in the JVM —
-        # the exact plan shape of approx_count_distinct, zero Python
-        from . import jvmagg
-
-        _validate(p, algo, hash_mode, impl)
-        filtered = df.where(F.col(value_col).isNotNull())
-        v = (
-            F.xxhash64(F.col(value_col))
-            if hash_mode == "xxhash64"
-            else F.col(value_col).cast("long")
+        return _raw_registers_jvm(
+            df, value_col, keys, p, hash_mode, key_encode,
+            jvmagg.est_agg_column, estimate_col,
         )
-        est = jvmagg.est_agg_column(df.sparkSession, p, _HASH_COL).alias(
-            estimate_col
-        )
-        if keys and key_encode == "hash64":
-            hashed = [
-                F.xxhash64(F.col(k)).alias(f"__gk{i}")
-                for i, k in enumerate(keys)
-            ]
-            projected = filtered.select(*hashed, *keys, v.alias(_HASH_COL))
-            firsts = [F.first(k).alias(k) for k in keys]
-            return (
-                projected.groupBy(*[f"__gk{i}" for i in range(len(keys))])
-                .agg(*firsts, est)
-                .drop(*[f"__gk{i}" for i in range(len(keys))])
-            )
-        projected = filtered.select(*keys, v.alias(_HASH_COL))
-        if keys:
-            return projected.groupBy(*keys).agg(est)
-        return projected.agg(est)
     if impl == "sql":
-        _validate(p, algo, hash_mode, impl)
         return _approx_distinct_sql(df, value_col, keys, p, hash_mode, estimate_col)
     sk = sketch_by(
         df, value_col, keys, p=p, algo=algo, hash_mode=hash_mode, impl=impl, **kw
@@ -924,12 +853,8 @@ def approx_distinct_multi(
     if impl == "pandas":  # explicit ask for a plan that does not exist
         raise ValueError("approx_distinct_multi has no pandas impl")
     impl = _resolve_impl(df, "xxhash64", impl)
-    if impl == "pandas":  # resolved default (farmhash never lands here,
-        impl = "sql"  # but keep the coercion for resolver changes)
     _validate(p, "hll", "xxhash64", impl)
     if impl == "jvm":
-        from . import jvmagg
-
         # null mask BEFORE hashing: Spark's xxhash64(NULL) yields the seed
         # hash (would count null as a value); a null hash is skipped by the
         # aggregator, and an all-null column keeps its zero() buffer whose
@@ -955,18 +880,8 @@ def approx_distinct_multi(
     hashes = F.array(
         *[F.when(F.col(c).isNotNull(), F.xxhash64(F.col(c))) for c in value_cols]
     )
-    exploded = df.select(*keys, F.posexplode(hashes).alias("__ci", "__v")).where(
-        F.col("__v").isNotNull()
-    )
-    v = F.col("__v")
-    j = F.shiftrightunsigned(v, 64 - p)
-    w = F.shiftleft(v, p).bitwiseXOR(F.lit(_LONG_MIN))
-    agged = (
-        exploded.select(*keys, F.col("__ci"), j.alias(_J_COL), w.alias("__w"))
-        .groupBy(*keys, "__ci", _J_COL)
-        .agg(F.min("__w").alias("__w"))
-    )
-    maxed = agged.select(*keys, "__ci", _J_COL, _r_from_minned_w(p).alias(_R_COL))
+    exploded = df.select(*keys, F.posexplode(hashes).alias("__ci", "__v"))
+    maxed = _maxed_registers_sql(exploded, "__v", [*keys, "__ci"], p, "prehashed")
     per_col = maxed.groupBy(*keys, "__ci").agg(_estimate_expr(p).alias("__est"))
     pivoted = (
         per_col.groupBy(*keys)
@@ -1059,8 +974,6 @@ def rolling_distinct(
     covered = contrib.join(F.broadcast(ends), "window_end", "leftsemi")
     grouped = covered.groupBy(*keys, "window_end")
     if impl == "jvm":
-        from . import jvmagg
-
         out = grouped.agg(
             jvmagg.merge_est_agg_column(df.sparkSession, p, "__regs").alias(
                 estimate_col

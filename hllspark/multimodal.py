@@ -856,14 +856,25 @@ def synthesize_media_containers(
 # planes), not the explode-only plan of frame_sample_plan.
 # ---------------------------------------------------------------------------
 
-# bytes per frame for the colorspaces we decode (luma plane is always the
-# first w*h bytes; chroma layout only affects the per-frame stride)
-_Y4M_CHROMA_FACTOR = {
-    "mono": 1.0,
-    "420": 1.5, "420jpeg": 1.5, "420mpeg2": 1.5, "420paldv": 1.5,
-    "422": 2.0,
-    "444": 3.0,
+# chroma subsampling (x, y) per colorspace we decode; mono has no chroma
+_Y4M_CHROMA = {
+    "mono": None,
+    "420": (2, 2), "420jpeg": (2, 2), "420mpeg2": (2, 2), "420paldv": (2, 2),
+    "422": (2, 1),
+    "444": (1, 1),
 }
+
+
+def _y4m_frame_size(w: int, h: int, colorspace: str) -> int | None:
+    """Bytes per frame: the w*h luma plane first, then two chroma planes
+    whose subsampled dimensions round UP (a 3x3 420 frame carries 2x2
+    chroma planes).  None for colorspaces we do not decode."""
+    if colorspace not in _Y4M_CHROMA:
+        return None
+    sub = _Y4M_CHROMA[colorspace]
+    if sub is None:
+        return w * h
+    return w * h + 2 * -(-w // sub[0]) * -(-h // sub[1])
 
 
 def y4m_frame_value(seed: int, f, y, x):
@@ -889,20 +900,39 @@ def make_y4m(width: int, height: int, n_frames: int, seed: int | None = None) ->
     return b"".join(parts)
 
 
-def y4m_params(payload: bytes) -> dict | None:
-    """Stream parameters from the YUV4MPEG2 header line: dict with
-    width, height, fps_num, fps_den, colorspace, n_frames.  n_frames
-    comes from a pointer walk over the FRAME markers (O(frames) header
-    reads, zero plane bytes touched)."""
-    if payload is None or not payload.startswith(b"YUV4MPEG2"):
+def _find_newline(mv: memoryview, start: int) -> int:
+    """Index of the first newline at or after ``start`` (-1 if none),
+    copying a window that doubles from 256 bytes: header lines of any
+    length are found while plane bytes past the line are never copied."""
+    win, pos, n = 256, start, len(mv)
+    while pos < n:
+        end = min(pos + win, n)
+        i = bytes(mv[pos:end]).find(b"\n")
+        if i >= 0:
+            return pos + i
+        pos, win = end, win * 2
+    return -1
+
+
+def _y4m_walk(buf) -> tuple[dict, list[int]] | None:
+    """(params, [luma-plane offset per frame]) of a YUV4MPEG2 stream in
+    bytes or any buffer (an Arrow data slice is walked zero-copy); None
+    for non-Y4M bytes.  params: width, height, fps_num, fps_den,
+    colorspace, n_frames.  The walk reads header lines only, never plane
+    bytes, so callers slice just the frames they sample (a stride-30
+    sample of a long video reads ~1/30 of the plane bytes).  Colorspaces
+    we cannot stride report n_frames 0."""
+    mv = memoryview(buf)
+    n = len(mv)
+    if bytes(mv[:9]) != b"YUV4MPEG2":
         return None
-    nl = payload.find(b"\n")
+    nl = _find_newline(mv, 0)
     if nl < 0:
         return None
     width = height = None
     fps_num, fps_den = 0, 1
     colorspace = "420jpeg"  # the Y4M spec default when C is absent
-    for tok in payload[9:nl].split():
+    for tok in bytes(mv[9:nl]).split():
         t = tok.decode("ascii", "replace")
         if t[:1] == "W":
             width = int(t[1:])
@@ -915,53 +945,60 @@ def y4m_params(payload: bytes) -> dict | None:
             colorspace = t[1:]
     if not width or not height:
         return None
-    factor = _Y4M_CHROMA_FACTOR.get(colorspace)
-    n_frames = 0
-    if factor is not None:
-        frame_size = int(width * height * factor)
-        pos = nl + 1
-        n = len(payload)
-        while pos < n and payload[pos : pos + 5] == b"FRAME":
-            fnl = payload.find(b"\n", pos)
-            if fnl < 0 or fnl + 1 + frame_size > n:
-                break
-            n_frames += 1
-            pos = fnl + 1 + frame_size
-    return {
+    frame_size = _y4m_frame_size(width, height, colorspace)
+    offsets: list[int] = []
+    pos = nl + 1
+    while frame_size is not None and bytes(mv[pos : pos + 5]) == b"FRAME":
+        fnl = _find_newline(mv, pos)
+        if fnl < 0 or fnl + 1 + frame_size > n:
+            break
+        offsets.append(fnl + 1)
+        pos = fnl + 1 + frame_size
+    params = {
         "width": width,
         "height": height,
         "fps_num": fps_num,
         "fps_den": fps_den,
         "colorspace": colorspace,
-        "n_frames": n_frames,
+        "n_frames": len(offsets),
     }
+    return params, offsets
 
 
-def _y4m_luma_offsets(payload: bytes) -> tuple[dict, list[int]]:
-    """(params, [luma-plane offset per frame]).  Offsets only — callers
-    slice just the frames they sample, so a stride-30 sample of a long
-    video reads ~1/30 of the plane bytes (the frame walk itself touches
-    6-byte markers, not planes)."""
-    p = y4m_params(payload)
-    if p is None:
-        raise ValueError("not a YUV4MPEG2 stream")
-    factor = _Y4M_CHROMA_FACTOR.get(p["colorspace"])
-    if factor is None:
+def y4m_params(payload: bytes) -> dict | None:
+    """Stream parameters from the YUV4MPEG2 header line: dict with
+    width, height, fps_num, fps_den, colorspace, n_frames.  n_frames
+    comes from a pointer walk over the FRAME markers (O(frames) header
+    reads, zero plane bytes touched)."""
+    walked = None if payload is None else _y4m_walk(payload)
+    return walked[0] if walked else None
+
+
+def _y4m_luma_offsets(buf) -> tuple[dict, list[int]] | None:
+    """_y4m_walk for decoding: raises for colorspaces it cannot stride."""
+    walked = _y4m_walk(buf)
+    if walked and walked[0]["colorspace"] not in _Y4M_CHROMA:
         raise NotImplementedError(
-            f"y4m colorspace {p['colorspace']!r} not supported "
+            f"y4m colorspace {walked[0]['colorspace']!r} not supported "
             "(mono/420*/422/444 are)"
         )
-    frame_size = int(p["width"] * p["height"] * factor)
-    offsets: list[int] = []
-    pos = payload.find(b"\n") + 1
-    n = len(payload)
-    while pos < n and payload[pos : pos + 5] == b"FRAME":
-        fnl = payload.find(b"\n", pos)
-        if fnl < 0 or fnl + 1 + frame_size > n:
-            break
-        offsets.append(fnl + 1)
-        pos = fnl + 1 + frame_size
-    return p, offsets
+    return walked
+
+
+def _frame_rows(mid: int, buf, every_n: int):
+    """(mid, frame_idx, width, height, luma_sum, luma_mean) for frames 0,
+    every_n, ... of the Y4M stream in ``buf`` (bytes or a zero-copy
+    buffer slice); nothing for non-Y4M bytes."""
+    parsed = _y4m_luma_offsets(buf)
+    if parsed is None:
+        return
+    p, offsets = parsed
+    w, h = p["width"], p["height"]
+    plane = w * h
+    for fi in range(0, len(offsets), every_n):
+        luma = np.frombuffer(buf, dtype=np.uint8, count=plane, offset=offsets[fi])
+        s = int(luma.sum(dtype=np.int64))
+        yield mid, fi, w, h, s, s / plane
 
 
 def decode_y4m(payload: bytes, every_n: int = 1) -> tuple[dict, np.ndarray]:
@@ -969,7 +1006,10 @@ def decode_y4m(payload: bytes, every_n: int = 1) -> tuple[dict, np.ndarray]:
     0, every_n, 2*every_n, …  Chroma planes are skipped by stride (luma
     is the standard frame-sampling feature input); only sampled planes
     are materialized."""
-    p, offsets = _y4m_luma_offsets(payload)
+    parsed = _y4m_luma_offsets(payload)
+    if parsed is None:
+        raise ValueError("not a YUV4MPEG2 stream")
+    p, offsets = parsed
     w, h = p["width"], p["height"]
     plane = w * h
     sampled = offsets[::every_n] if every_n > 1 else offsets
@@ -977,41 +1017,6 @@ def decode_y4m(payload: bytes, every_n: int = 1) -> tuple[dict, np.ndarray]:
     for i, off in enumerate(sampled):
         out[i] = np.frombuffer(payload, dtype=np.uint8, count=plane, offset=off).reshape(h, w)
     return p, out
-
-
-def _y4m_luma_offsets_view(mv: memoryview) -> tuple[dict, list[int]] | None:
-    """_y4m_luma_offsets over a memoryview WITHOUT materializing the
-    payload: the stream-header line and each frame-header line are
-    copied from bounded windows (<=4 KB / <=256 B); plane bytes are
-    never touched.  Returns None for non-Y4M bytes."""
-    n = len(mv)
-    head = bytes(mv[: min(n, 4096)])
-    if not head.startswith(b"YUV4MPEG2"):
-        return None
-    nl = head.find(b"\n")
-    if nl < 0:
-        return None
-    p = y4m_params(head[: nl + 1])
-    if p is None:
-        return None
-    factor = _Y4M_CHROMA_FACTOR.get(p["colorspace"])
-    if factor is None:
-        raise NotImplementedError(
-            f"y4m colorspace {p['colorspace']!r} not supported "
-            "(mono/420*/422/444 are)"
-        )
-    frame_size = int(p["width"] * p["height"] * factor)
-    offsets: list[int] = []
-    pos = nl + 1
-    while pos + 6 <= n and bytes(mv[pos : pos + 5]) == b"FRAME":
-        win = bytes(mv[pos : min(pos + 256, n)])
-        fnl = win.find(b"\n")
-        if fnl < 0 or pos + fnl + 1 + frame_size > n:
-            break
-        offsets.append(pos + fnl + 1)
-        pos = pos + fnl + 1 + frame_size
-    p["n_frames"] = len(offsets)
-    return p, offsets
 
 
 def frame_sample_stats(
@@ -1044,9 +1049,13 @@ def frame_sample_stats(
         f"{id_col} bigint, frame_idx int, width int, height int, "
         "luma_sum bigint, luma_mean double"
     )
+    names = [id_col, "frame_idx", "width", "height", "luma_sum", "luma_mean"]
 
     if impl == "arrow":
         import pyarrow as pa
+
+        types = [pa.int64(), pa.int32(), pa.int32(), pa.int32(), pa.int64(),
+                 pa.float64()]
 
         def run_arrow(batches):
             for batch in batches:
@@ -1067,44 +1076,18 @@ def frame_sample_stats(
                     if pay.null_count == 0
                     else pay.is_valid().to_numpy(zero_copy_only=False)
                 )
-                o_id, o_fi, o_w, o_h, o_sum, o_mean = [], [], [], [], [], []
-                for j in range(len(pay)):
-                    if valid is not None and not valid[j]:
-                        continue
-                    mv = data[offs[j] : offs[j + 1]]
-                    parsed = _y4m_luma_offsets_view(mv)
-                    if parsed is None:
-                        continue
-                    p, frame_offs = parsed
-                    w, h = p["width"], p["height"]
-                    plane = w * h
-                    mid = ids[j].as_py()
-                    for fi in range(0, len(frame_offs), every_n):
-                        luma = np.frombuffer(
-                            mv, dtype=np.uint8, count=plane,
-                            offset=frame_offs[fi],
-                        )
-                        s = int(luma.sum(dtype=np.int64))
-                        o_id.append(mid)
-                        o_fi.append(fi)
-                        o_w.append(w)
-                        o_h.append(h)
-                        o_sum.append(s)
-                        o_mean.append(s / plane)
-                if o_id:
+                rows = [
+                    r
+                    for j in range(len(pay))
+                    if valid is None or valid[j]
+                    for r in _frame_rows(
+                        ids[j].as_py(), data[offs[j] : offs[j + 1]], every_n
+                    )
+                ]
+                if rows:
                     yield pa.RecordBatch.from_arrays(
-                        [
-                            pa.array(o_id, pa.int64()),
-                            pa.array(o_fi, pa.int32()),
-                            pa.array(o_w, pa.int32()),
-                            pa.array(o_h, pa.int32()),
-                            pa.array(o_sum, pa.int64()),
-                            pa.array(o_mean, pa.float64()),
-                        ],
-                        names=[
-                            id_col, "frame_idx", "width", "height",
-                            "luma_sum", "luma_mean",
-                        ],
+                        [pa.array(c, t) for c, t in zip(zip(*rows), types)],
+                        names=names,
                     )
 
         return df.select(id_col, payload_col).mapInArrow(
@@ -1113,31 +1096,14 @@ def frame_sample_stats(
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                b = bytes(payload) if payload is not None else b""
-                if not b.startswith(b"YUV4MPEG2"):
-                    continue
-                p, offsets = _y4m_luma_offsets(b)
-                w, h = p["width"], p["height"]
-                plane = w * h
-                for fi in range(0, len(offsets), every_n):
-                    luma = np.frombuffer(
-                        b, dtype=np.uint8, count=plane, offset=offsets[fi]
-                    )
-                    s = int(luma.sum(dtype=np.int64))
-                    rows.append(
-                        {
-                            id_col: int(mid),
-                            "frame_idx": fi,
-                            "width": w,
-                            "height": h,
-                            "luma_sum": s,
-                            "luma_mean": s / plane,
-                        }
-                    )
+            rows = [
+                r
+                for mid, payload in zip(pdf[id_col], pdf[payload_col])
+                if payload is not None
+                for r in _frame_rows(int(mid), bytes(payload), every_n)
+            ]
             if rows:
-                yield pd.DataFrame(rows)
+                yield pd.DataFrame(rows, columns=names)
 
     return df.select(id_col, payload_col).mapInPandas(run, out_schema)
 

@@ -17,12 +17,17 @@ from .generic import GroupedState, SketchKind
 _MAGIC = b"BLM1"
 
 
+def k_for(m_bits: int, n_expected: int) -> int:
+    """Hash count minimizing the false-positive rate of an m_bits filter
+    holding n_expected keys: k = round(m/n ln 2)."""
+    return max(1, int(round(m_bits / n_expected * np.log(2))))
+
+
 def params_for(n_expected: int, fpp: float) -> tuple[int, int]:
     """(m_bits, k) minimizing size for a target false-positive rate."""
     m = int(np.ceil(-n_expected * np.log(fpp) / (np.log(2) ** 2)))
     m = max(64, (m + 7) // 8 * 8)
-    k = max(1, int(round(m / n_expected * np.log(2))))
-    return m, k
+    return m, k_for(m, n_expected)
 
 
 def zero(m_bits: int) -> np.ndarray:

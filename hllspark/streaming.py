@@ -53,7 +53,7 @@ from pyspark.sql.types import (
 
 from . import hll as _hll
 from . import sketch as _sketch
-from .agg import _jr_columns_sql, _key_schema
+from .agg import _hashed, _jr_columns_sql, _key_schema
 from .hashing import jr_split
 
 _HASH_COL = "__hllspark_hash"
@@ -66,9 +66,8 @@ _GLOBAL_KEY = "__hllspark_g"
 def _hash_projection(sdf: DataFrame, value_col: str, keys: Sequence[str],
                      extra: Sequence[str] = ()) -> DataFrame:
     """JVM-side xxhash64 projection (column-pruned; no Python)."""
-    return sdf.where(F.col(value_col).isNotNull()).select(
-        *keys, *extra, F.xxhash64(F.col(value_col)).alias(_HASH_COL)
-    )
+    filtered, v = _hashed(sdf, value_col, "xxhash64")
+    return filtered.select(*keys, *extra, v.alias(_HASH_COL))
 
 
 def register_stream(
@@ -81,7 +80,7 @@ def register_stream(
     """
     keys = list(keys or [])
     projected = _hash_projection(sdf, value_col, keys)
-    j, r = _jr_columns_sql(F.col(_HASH_COL))(p)
+    j, r = _jr_columns_sql(F.col(_HASH_COL), p)
     jr = projected.select(*keys, j.alias(_J_COL), r.alias(_R_COL))
     return jr.groupBy(*keys, _J_COL).agg(F.max(_R_COL).alias(_R_COL))
 
@@ -187,7 +186,7 @@ def windowed_register_stream(
     projected = _hash_projection(
         sdf.withWatermark(ts_col, watermark_delay), value_col, keys, extra=[ts_col]
     )
-    j, r = _jr_columns_sql(F.col(_HASH_COL))(p)
+    j, r = _jr_columns_sql(F.col(_HASH_COL), p)
     jr = projected.select(
         F.window(ts_col, window_duration).alias("window"),
         *keys,

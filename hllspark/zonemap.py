@@ -45,6 +45,23 @@ def _zonemap_root(path: str) -> str:
     return os.path.join(path, "_zonemaps")
 
 
+def _sidecar(data: DataFrame, col: str, kind) -> DataFrame:
+    """(file, vmin, vmax, n, sketch): one row per file of ``data``
+    (``__file`` + ``col``).  The Bloom side is LEFT-joined: a file that is
+    all-null in ``col`` has no Bloom row, and keeps its sidecar row with
+    vmin NULL (always pruned) so file totals and append coverage stay
+    exact."""
+    stats = data.groupBy("__file").agg(
+        F.min(col).alias("vmin"),
+        F.max(col).alias("vmax"),
+        F.count(col).alias("n"),
+    )
+    blooms = sketch_agg(data, col, kind, keys=["__file"])
+    return stats.join(blooms, "__file", "left").select(
+        F.col("__file").alias("file"), "vmin", "vmax", "n", "sketch"
+    )
+
+
 def build_zonemaps(
     spark: SparkSession,
     path: str,
@@ -60,27 +77,17 @@ def build_zonemaps(
     plain codegen min/max/count agg, joined on the file name — both
     sides are #files-sized.  The scan reads only the key columns
     (column-pruned), so the build costs one narrow pass, not a rewrite.
+    An explicit ``m_bits`` gets the k that is optimal for THAT bitmap.
     """
-    if m_bits is None:
-        m_bits, k = bloom.params_for(expected_keys_per_file, fpp)
-    else:
-        _, k = bloom.params_for(expected_keys_per_file, fpp)
+    m_bits = m_bits or bloom.params_for(expected_keys_per_file, fpp)[0]
+    k = bloom.k_for(m_bits, expected_keys_per_file)
     kind = bloom.kind(m_bits=m_bits, k=k)
     root = _zonemap_root(path)
     data = spark.read.parquet(path).select(
         F.col("_metadata.file_path").alias("__file"), *key_cols
     )
     for col in key_cols:
-        stats = data.groupBy("__file").agg(
-            F.min(col).alias("vmin"),
-            F.max(col).alias("vmax"),
-            F.count(col).alias("n"),
-        )
-        blooms = sketch_agg(data, col, kind, keys=["__file"])
-        side = stats.join(blooms, "__file").select(
-            F.col("__file").alias("file"), "vmin", "vmax", "n", "sketch"
-        )
-        side.coalesce(1).write.mode("overwrite").parquet(
+        _sidecar(data, col, kind).coalesce(1).write.mode("overwrite").parquet(
             os.path.join(root, f"col={col}")
         )
     meta = {"cols": key_cols, "fpp": fpp, "m_bits": m_bits, "k": k}
@@ -244,14 +251,5 @@ def append_zonemaps(
         data = spark.read.parquet(*new_files).select(
             F.col("_metadata.file_path").alias("__file"), col
         )
-        stats = data.groupBy("__file").agg(
-            F.min(col).alias("vmin"),
-            F.max(col).alias("vmax"),
-            F.count(col).alias("n"),
-        )
-        blooms = sketch_agg(data, col, kind, keys=["__file"])
-        side = stats.join(blooms, "__file").select(
-            F.col("__file").alias("file"), "vmin", "vmax", "n", "sketch"
-        )
-        side.coalesce(1).write.mode("append").parquet(side_dir)
+        _sidecar(data, col, kind).coalesce(1).write.mode("append").parquet(side_dir)
     return meta

@@ -1264,3 +1264,28 @@ def test_y4m_video_codec(spark):
 
     with _pytest.raises(ValueError):
         mm.decode_y4m(b"RIFF not a y4m stream")
+    # odd dimensions: subsampled chroma planes round UP (3x3 420 carries
+    # 2x2 chroma planes -> 17-byte frames; 3x3 422 carries 2x3 -> 21)
+    for cs, chroma in (("C420jpeg", 8), ("C422", 12)):
+        odd = b"YUV4MPEG2 W3 H3 F25:1 %s\n" % cs.encode() + b"".join(
+            b"FRAME\n" + bytes([f] * 9) + bytes(chroma) for f in (1, 2)
+        )
+        p, luma = mm.decode_y4m(odd)
+        assert mm.y4m_params(odd)["n_frames"] == p["n_frames"] == 2
+        assert np.array_equal(luma[:, 0, 0], [1, 2])
+    # header lines of any length: a 5000-byte X token in the stream header
+    # and a 300-byte one in a frame header decode the same under both impls
+    def long_headers(i):
+        b = mm.make_y4m(5, 3, 4, seed=i)
+        b = b.replace(b" Cmono\n", b" Cmono X" + b"x" * 5000 + b"\n", 1)
+        return b.replace(b"FRAME\n", b"FRAME X" + b"y" * 300 + b"\n")
+
+    long_df = spark.createDataFrame(
+        [(i, long_headers(i)) for i in range(3)], "media_id bigint, payload binary"
+    )
+    arrow_rows = sorted(mm.frame_sample_stats(long_df, every_n=1).collect())
+    pandas_rows = sorted(
+        mm.frame_sample_stats(long_df, every_n=1, impl="pandas").collect()
+    )
+    assert len(arrow_rows) == 12
+    assert arrow_rows == pandas_rows

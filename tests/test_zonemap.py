@@ -96,6 +96,13 @@ def test_zonemap_string_keys_and_meta(spark):
     # second indexed column works independently
     got_k = zm.read_pruned(spark, path, "k", [7]).count()
     assert got_k == 40
+    # an explicit m_bits sizes k for that bitmap, not for the fpp-optimal one
+    zm.build_zonemaps(
+        spark, path, ["host"], expected_keys_per_file=1000, m_bits=4096
+    )
+    meta = zm.zonemap_meta(path)
+    assert (meta["m_bits"], meta["k"]) == (4096, 3)  # round(4096/1000 ln 2)
+    assert zm.read_pruned(spark, path, "host", ["host-7"]).count() == 50
 
 
 def test_zonemap_all_null_file_skipped(spark):
@@ -110,6 +117,12 @@ def test_zonemap_all_null_file_skipped(spark):
     zm.write_with_zonemaps(layout, path, ["maybe"], expected_keys_per_file=100)
     got = zm.read_pruned(spark, path, "maybe", [7]).collect()
     assert len(got) == 1 and got[0]["id"] == 7
+    # the all-null file has its own sidecar row (vmin NULL, pruned), so
+    # the file total is exact and an append does not rescan it
+    files, total = zm.pruned_files(spark, path, "maybe", [7])
+    assert (len(files), total) == (1, 2)
+    zm.append_zonemaps(spark, path)
+    assert zm.pruned_files(spark, path, "maybe", [7])[1] == 2
 
 
 def test_zonemap_range_pruning(spark, events):
