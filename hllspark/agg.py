@@ -44,6 +44,21 @@ All three implementations produce byte-identical sketches for the same
 (hash_mode, p): they share the j/r derivation (hashing.jr_split twins the
 SQL expression) and merging is an exact max.
 
+Sketch tables (encode, merge, estimate): with the jar on the session, the
+serialized-sketch operators run in the JVM too, through the HLSK codec in
+java/src/hllspark/HllSketchCodec.java (byte-identical to hllspark.sketch).
+sketch_by(impl='jvm') finishes its register aggregate straight to hll/hlll
+bytes; merge_sketches, estimate_grouping_sets (sketch_rollup / sketch_cube)
+and the pandas plan's merges use HllSketchMergeAggregator, which decodes
+any format into an m-byte buffer and aggregates partially; with_estimate
+and every estimate of sketch bytes is the HllSketchEstimate function
+(_merge_column / _estimate_column choose).  The pandas UDFs over the numpy
+codec still run on sessions without the jar, for 'hllzstd' encodes (only
+pyarrow's zstd reproduces its frames byte for byte), and in farmhash
+builds (whose hashing is numpy); the numpy codec is also the parity
+reference the JVM one is tested against.  Measured on sketch_rollup
+(4 vCPUs, 10 interleaved pairs): vs_builtin 2.24 -> 1.12 (PLANS.md §55).
+
 Hash modes:
     'xxhash64'  — production default: hashing in the JVM (codegen'd).
     'farmhash'  — reference-parity (mkarppa/hyperlogloglog Hash.hpp):
@@ -61,7 +76,7 @@ intermediate merge level for extreme partition counts (north_rule).
 
 from __future__ import annotations
 
-from functools import reduce
+from functools import partial, reduce
 from itertools import combinations
 from typing import Iterator, Sequence
 
@@ -207,9 +222,13 @@ def _make_build_partials(keys: Sequence[str], p: int, algo: str, m_bits: int,
 # shared: merge / estimate / size UDFs
 # ---------------------------------------------------------------------------
 
-def _merge_buffers(series: pd.Series, algo: str, m_bits: int) -> bytes:
-    stack = np.stack([_sketch.decode(b) for b in series if b is not None])
-    return _sketch.encode(np.maximum.reduce(stack), algo, m_bits)
+def _merge_buffers(series: pd.Series, algo: str, m_bits: int) -> bytes | None:
+    """Register-wise max of the non-null sketches, re-encoded; None (a NULL
+    sketch) when the group has none."""
+    regs = [_sketch.decode(b) for b in series if b is not None]
+    if not regs:
+        return None
+    return _sketch.encode(np.maximum.reduce(np.stack(regs)), algo, m_bits)
 
 
 def merge_udaf(algo: str = "hll", m_bits: int = 3):
@@ -229,9 +248,13 @@ def _raw_regs(b) -> np.ndarray:
 
 
 def _estimate_series(s: pd.Series, decode) -> pd.Series:
-    if len(s) == 0:
-        return pd.Series([], dtype="float64")
-    return pd.Series(_hll.estimate(np.stack([decode(b) for b in s])))
+    """Batched estimates; a NULL sketch estimates to NULL (NaN here, which
+    the Arrow conversion turns into a null)."""
+    present = s.notna().to_numpy()
+    out = np.full(len(s), np.nan)
+    if present.any():
+        out[present] = _hll.estimate(np.stack([decode(b) for b in s[present]]))
+    return pd.Series(out)
 
 
 @F.pandas_udf(DoubleType())
@@ -245,6 +268,26 @@ def estimate_raw_udf(s: pd.Series) -> pd.Series:
     """Scalar pandas UDF: raw dense register bytes -> distinct estimate
     (same numpy estimator as estimate_udf, so jvm/sql/pandas paths agree)."""
     return _estimate_series(s, _raw_regs)
+
+
+def _merge_column(df: DataFrame, col: str, algo: str, m_bits: int):
+    """Aggregate expression merging the serialized sketches of ``col`` into
+    one ``algo`` sketch per group: the JVM HllSketchMergeAggregator (partial
+    aggregation, no Python) when the jar is on ``df``'s session and
+    ``algo`` is 'hll' or 'hlll', else the pandas GROUPED_AGG UDF (no jar,
+    or an 'hllzstd' target, whose zstd frames only pyarrow reproduces)."""
+    if algo in ("hll", "hlll") and jvmagg.is_available(df.sparkSession):
+        return jvmagg.merge_agg_column(df.sparkSession, col, algo, m_bits)
+    return merge_udaf(algo, m_bits)(F.col(col))
+
+
+def _estimate_column(df: DataFrame, col: str):
+    """Scalar expression: serialized sketch ``col`` -> distinct estimate, as
+    the JVM HllSketchEstimate function when the jar is on ``df``'s
+    session, else the pandas UDF."""
+    if jvmagg.is_available(df.sparkSession):
+        return jvmagg.estimate_column(df.sparkSession, col)
+    return estimate_udf(F.col(col))
 
 
 @F.pandas_udf(LongType())
@@ -372,7 +415,9 @@ def _approx_distinct_sql(df, value_col, keys, p, hash_mode, estimate_col):
 
 def _encode_raw_udf(algo: str, m_bits: int):
     """Scalar pandas UDF: raw dense register bytes (JVM aggregate output)
-    -> the engine's serialized sketch format.  Runs over one row per group."""
+    -> the engine's serialized sketch format.  Runs over one row per group;
+    the jvm plan needs it only for 'hllzstd', whose frames only pyarrow's
+    zstd reproduces (hll / hlll encode in HllSketchAggregator)."""
 
     @F.pandas_udf(BinaryType())
     def _enc(s: pd.Series) -> pd.Series:
@@ -468,23 +513,19 @@ def _sketch_by_pandas(df, value_col, keys, p, algo, m_bits, hash_mode, salt_buck
         ),
         schema=_sketch_schema(df, keys),
     )
-    merge = merge_udaf(algo, m_bits)
+    merged = _merge_column(df, _SKETCH_COL, algo, m_bits).alias(_SKETCH_COL)
     if not keys:
         seed = _seed_row(spark, algo, p, m_bits)
-        return partials.unionByName(seed).agg(
-            merge(F.col(_SKETCH_COL)).alias(_SKETCH_COL)
-        )
+        return partials.unionByName(seed).agg(merged)
     if salt_buckets and salt_buckets > 1:
         # 3-level tree: partial -> salted merge -> final (north_rule skew
         # handling: bounds fan-in per reducer to #partitions/buckets)
         salted = partials.withColumn(
             "__salt", F.spark_partition_id() % F.lit(salt_buckets)
         )
-        mid = salted.groupBy(*keys, "__salt").agg(
-            merge(F.col(_SKETCH_COL)).alias(_SKETCH_COL)
-        )
-        return mid.groupBy(*keys).agg(merge(F.col(_SKETCH_COL)).alias(_SKETCH_COL))
-    return partials.groupBy(*keys).agg(merge(F.col(_SKETCH_COL)).alias(_SKETCH_COL))
+        mid = salted.groupBy(*keys, "__salt").agg(merged)
+        return mid.groupBy(*keys).agg(merged)
+    return partials.groupBy(*keys).agg(merged)
 
 
 def sketch_by(
@@ -513,10 +554,15 @@ def sketch_by(
     keys = list(keys or [])
     impl = _resolve_impl(df, hash_mode, impl)
     _validate(p, algo, hash_mode, impl, key_encode)
-    if impl == "jvm":
+    if impl == "jvm" and algo == "hllzstd":
         built = _raw_registers_jvm(df, value_col, keys, p, hash_mode, key_encode)
         enc = _encode_raw_udf(algo, m_bits)
         return built.select(*keys, enc(F.col("__regs")).alias(_SKETCH_COL))
+    if impl == "jvm":
+        sketch_agg = partial(jvmagg.sketch_agg_column, algo=algo, m_bits=m_bits)
+        return _raw_registers_jvm(
+            df, value_col, keys, p, hash_mode, key_encode, sketch_agg, _SKETCH_COL
+        )
     if impl == "sql":
         maxed = _maxed_registers_sql(df, value_col, keys, p, hash_mode)
         return _assemble_sketches(df, maxed, keys, p, algo, m_bits)
@@ -533,12 +579,18 @@ def merge_sketches(
     m_bits: int = 3,
 ) -> DataFrame:
     """Re-aggregate existing sketch rows to coarser grouping keys (sketch
-    GROUP BY re-aggregation, e.g. per-day sketches -> per-month)."""
+    GROUP BY re-aggregation, e.g. per-day sketches -> per-month).
+
+    Input sketches may be of any format and are re-encoded as ``algo``.
+    NULL sketches are skipped; a group with none merges to NULL; sketches
+    of different p raise.  One difference between the two plans (see
+    _merge_column): with no ``keys`` and no input rows, the JVM aggregate
+    returns one row with a NULL sketch, the pandas UDF returns no row."""
     keys = list(keys or [])
-    merge = merge_udaf(algo, m_bits)
+    merged = _merge_column(df, sketch_col, algo, m_bits).alias(sketch_col)
     if not keys:
-        return df.agg(merge(F.col(sketch_col)).alias(sketch_col))
-    return df.groupBy(*keys).agg(merge(F.col(sketch_col)).alias(sketch_col))
+        return df.agg(merged)
+    return df.groupBy(*keys).agg(merged)
 
 
 def sketch_from_jr(
@@ -625,9 +677,11 @@ def estimate_grouping_sets(
     Expand + single aggregate.  Each fine row is projected once per grain
     with the grain's absent keys masked to NULL, then ONE grouped merge over
     (grouping_set_id, keys...) and ONE estimate pass run for every grain
-    together — one shuffle, one GROUPED_AGG python stage, one job, however
-    many grains are asked for.  Row amplification is len(sets) x the FINE
-    table (one row per fine key combo — tiny by design), never the base data.
+    together — one shuffle, one merge aggregate (the JVM one when the jar
+    is present, with partial aggregation; else a pandas GROUPED_AGG), one
+    job, however many grains are asked for.  Row amplification is
+    len(sets) x the FINE table (one row per fine key combo — tiny by
+    design), never the base data.
 
     The fine sketch table is persisted (lazy; skipped when the caller
     already persisted it) so the per-grain projections share one
@@ -641,7 +695,6 @@ def estimate_grouping_sets(
         df = df.persist(StorageLevel.MEMORY_AND_DISK)
     all_keys = _ordered_union(sets)
     dtypes = dict(df.dtypes)
-    merge = merge_udaf(algo, m_bits)
     parts = []
     for gid, s in enumerate(sets):
         cols = [
@@ -657,12 +710,12 @@ def estimate_grouping_sets(
         )
     expanded = reduce(DataFrame.unionByName, parts)
     merged = expanded.groupBy("grouping_set_id", *all_keys).agg(
-        merge(F.col(sketch_col)).alias(sketch_col)
+        _merge_column(df, sketch_col, algo, m_bits).alias(sketch_col)
     )
     return merged.select(
         "grouping_set_id",
         *all_keys,
-        estimate_udf(F.col(sketch_col)).alias(estimate_col),
+        _estimate_column(df, sketch_col).alias(estimate_col),
     )
 
 
@@ -706,7 +759,7 @@ def approx_distinct_grouping_sets(
     back to the positional ``grouping_set_id`` so the output schema matches
     ``estimate_grouping_sets``, and genuine NULL key values cannot be
     confused with grain masking.  Other impls fall back to sketch_by +
-    estimate_grouping_sets (one pandas merge stage, any algo); duplicate
+    estimate_grouping_sets (one sketch merge stage, any algo); duplicate
     grouping sets also take that path (native GROUPING SETS computes a
     duplicated grain once)."""
     sets = [list(s) for s in sets]
@@ -820,9 +873,7 @@ def approx_distinct(
     sk = sketch_by(
         df, value_col, keys, p=p, algo=algo, hash_mode=hash_mode, impl=impl, **kw
     )
-    return sk.select(
-        *keys, estimate_udf(F.col(_SKETCH_COL)).alias(estimate_col)
-    )
+    return sk.select(*keys, _estimate_column(df, _SKETCH_COL).alias(estimate_col))
 
 
 def approx_distinct_multi(
@@ -899,7 +950,9 @@ def approx_distinct_multi(
 
 def with_estimate(df: DataFrame, sketch_col: str = _SKETCH_COL,
                   estimate_col: str = "distinct_estimate") -> DataFrame:
-    return df.withColumn(estimate_col, estimate_udf(F.col(sketch_col)))
+    """Adds the distinct-count estimate of every sketch (NULL for a NULL
+    sketch)."""
+    return df.withColumn(estimate_col, _estimate_column(df, sketch_col))
 
 
 def rolling_distinct(
@@ -933,8 +986,8 @@ def rolling_distinct(
     buffers with map-side partial merging; ends that exist in the data
     are taken from the built grain itself (broadcast semi-join), so no
     second base scan.  impl='jvm' keeps the whole pipeline zero-Python
-    (raw byte[m] buffers end-to-end); other impls reuse the pandas merge
-    UDAF over serialized sketches."""
+    (raw byte[m] buffers end-to-end); other impls merge and estimate
+    serialized sketches (_merge_column / _estimate_column)."""
     keys = list(keys or [])
     if window < 1:
         raise ValueError("window must be >= 1")
@@ -980,10 +1033,9 @@ def rolling_distinct(
             )
         )
     else:
-        merge = merge_udaf("hll", 3)
-        out = grouped.agg(merge(F.col("__regs")).alias("__regs")).withColumn(
-            estimate_col, estimate_udf(F.col("__regs"))
-        ).drop("__regs")
+        out = grouped.agg(
+            _merge_column(df, "__regs", "hll", 3).alias("__regs")
+        ).withColumn(estimate_col, _estimate_column(df, "__regs")).drop("__regs")
     return out.orderBy(*keys, "window_end")
 
 

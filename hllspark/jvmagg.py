@@ -1,4 +1,4 @@
-"""Optional JVM fast path for the HLL register build.
+"""Optional JVM fast path: the HLL register build and the sketch codec.
 
 The declarative SQL build (hllspark.agg impl='sql') pays a per-row
 HashAggregate probe on (keys, j); Spark's own approx_count_distinct avoids
@@ -11,6 +11,15 @@ JVM build runs at ~0.95-1.1x Spark's built-in HLL++ (vs 3.2x slower for the
 SQL formulation) and produces byte-identical registers to impl='sql' /
 impl='pandas' (same jr_split convention; pytest-gated).
 
+The jar also carries the HLSK sketch codec (HllSketchCodec, byte-identical
+to hllspark.sketch for hll and hlll), so sketch tables need no Python
+stage: HllSketchAggregator builds and encodes (sketch_by),
+HllSketchMergeAggregator merges sketches of any format with partial
+aggregation (merge_sketches, sketch_rollup / sketch_cube), and the
+HllSketchEstimate function estimates them (with_estimate).  The pandas
+UDFs of hllspark.agg remain for sessions without the jar, 'hllzstd'
+encodes and farmhash builds.
+
 Availability: the pre-built jar ships at hllspark/jars/hllspark-jvm.jar
 (source + build script under java/); it must be on the DRIVER classpath at
 JVM launch — e.g.::
@@ -21,7 +30,8 @@ JVM launch — e.g.::
 
 Sessions without the jar (e.g. an externally-created SparkSession) simply
 report ``is_available() == False`` and hllspark.agg falls back to the pure
-SQL plan — results are identical either way, only speed differs.
+SQL plan and the pandas UDFs — results are identical either way, only
+speed differs.
 """
 
 from __future__ import annotations
@@ -30,8 +40,8 @@ import os
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, SparkSession
+from pyspark.sql.types import DoubleType
 
-_AGG_CLASS = "hllspark.HllRegAggregator"
 # availability is a CLASSPATH property — JVM-wide, so per-application
 # caching is correct.  Registration is per-SparkSession (newSession() has
 # an isolated function registry), so it is NOT cached: re-registering is a
@@ -80,48 +90,61 @@ def is_available(spark: SparkSession) -> bool:
     return _availability[key]
 
 
-def _register(spark: SparkSession, p: int, flavor: str) -> str:
-    """Register (idempotently) one of the UDAFs for precision ``p`` and
-    return its SQL function name.  flavor: 'regs' (bigint hash in, raw
-    register bytes out — for sketch_by / checkpointing), 'est' (bigint hash
-    in, double estimate out — the single-stage pure-JVM approx_distinct
-    plan), or 'merge_est' (raw register bytes IN, register-wise max merge,
-    double estimate out — the re-aggregation half of the monoid, used by the
-    zero-Python rollup/grouping-sets plan)."""
-    name = f"hllspark_{flavor}_p{p}"
+# flavor -> (aggregator class, input encoder): 'regs' bigint hash in, raw
+# register bytes out (hllzstd sketch_by, rolling_distinct's build); 'est'
+# bigint hash in, double estimate out (approx_distinct); 'merge_est' raw
+# register bytes in, register-wise max, double estimate out
+# (rolling_distinct); 'sketch' bigint hash in, serialized hll/hlll sketch
+# out (sketch_by); 'merge' serialized sketches in, register-wise max,
+# serialized hll/hlll sketch out (merge_sketches, rollup / cube).
+_AGGREGATORS = {
+    "regs": ("HllRegAggregator", "LONG"),
+    "est": ("HllEstimateAggregator", "LONG"),
+    "merge_est": ("HllMergeEstimateAggregator", "BINARY"),
+    "sketch": ("HllSketchAggregator", "LONG"),
+    "merge": ("HllSketchMergeAggregator", "BINARY"),
+}
+_ESTIMATE_FN = "hllspark_sketch_estimate"
+
+
+def _require(spark: SparkSession) -> None:
     if not is_available(spark):
         raise RuntimeError(
             "hllspark JVM fast path unavailable: put "
             f"{jar_path()} on spark.driver.extraClassPath (see "
             "hllspark.jvmagg docstring)"
         )
+
+
+def _register(spark: SparkSession, flavor: str, *args) -> str:
+    """Register (idempotently) the ``flavor`` UDAF (see _AGGREGATORS) built
+    with constructor ``args`` and return its SQL function name, which
+    encodes the arguments (``hllspark_sketch_12_hlll_3``)."""
+    _require(spark)
+    name = "_".join(["hllspark", flavor, *map(str, args)])
     jvm = spark._jvm
-    enc = jvm.org.apache.spark.sql.Encoders
-    if flavor == "regs":
-        agg_obj, in_enc = jvm.hllspark.HllRegAggregator(p), enc.LONG()
-    elif flavor == "est":
-        agg_obj, in_enc = jvm.hllspark.HllEstimateAggregator(p), enc.LONG()
-    else:  # merge_est
-        agg_obj, in_enc = jvm.hllspark.HllMergeEstimateAggregator(p), enc.BINARY()
-    udaf = jvm.org.apache.spark.sql.functions.udaf(agg_obj, in_enc)
+    cls, in_enc = _AGGREGATORS[flavor]
+    agg_obj = getattr(jvm.hllspark, cls)(*args)
+    enc = getattr(jvm.org.apache.spark.sql.Encoders, in_enc)()
+    udaf = jvm.org.apache.spark.sql.functions.udaf(agg_obj, enc)
     spark._jsparkSession.udf().register(name, udaf)
     return name
 
 
 def register(spark: SparkSession, p: int) -> str:
-    return _register(spark, p, "regs")
+    return _register(spark, "regs", p)
 
 
 def regs_agg_column(spark: SparkSession, p: int, hash_col: str) -> Column:
     """Aggregate expression building the raw dense byte[2^p] register array
     from a bigint hash column."""
-    return F.expr(f"{_register(spark, p, 'regs')}(`{hash_col}`)")
+    return F.expr(f"{_register(spark, 'regs', p)}(`{hash_col}`)")
 
 
 def est_agg_column(spark: SparkSession, p: int, hash_col: str) -> Column:
     """Aggregate expression producing the distinct-count estimate (double)
     from a bigint hash column — no Python stage anywhere in the plan."""
-    return F.expr(f"{_register(spark, p, 'est')}(`{hash_col}`)")
+    return F.expr(f"{_register(spark, 'est', p)}(`{hash_col}`)")
 
 
 def merge_est_agg_column(spark: SparkSession, p: int, regs_col: str) -> Column:
@@ -129,4 +152,30 @@ def merge_est_agg_column(spark: SparkSession, p: int, regs_col: str) -> Column:
     (register-wise max) and producing the distinct-count estimate (double).
     The re-aggregation plan: fine registers -> coarser grains with no
     Python stage (reference merge HyperLogLog.hpp:124-131)."""
-    return F.expr(f"{_register(spark, p, 'merge_est')}(`{regs_col}`)")
+    return F.expr(f"{_register(spark, 'merge_est', p)}(`{regs_col}`)")
+
+
+def sketch_agg_column(spark: SparkSession, p: int, hash_col: str,
+                      algo: str, m_bits: int) -> Column:
+    """Aggregate expression building the serialized ``algo`` ('hll' or
+    'hlll') sketch from a bigint hash column: sketch_by in one
+    ObjectHashAggregate, byte-identical to hllspark.sketch.encode."""
+    return F.expr(f"{_register(spark, 'sketch', p, algo, m_bits)}(`{hash_col}`)")
+
+
+def merge_agg_column(spark: SparkSession, sketch_col: str, algo: str,
+                     m_bits: int) -> Column:
+    """Aggregate expression merging serialized sketches of any format
+    (register-wise max) into one ``algo`` ('hll' or 'hlll') sketch, with
+    partial aggregation; NULL for a group with no sketch."""
+    return F.expr(f"{_register(spark, 'merge', algo, m_bits)}(`{sketch_col}`)")
+
+
+def estimate_column(spark: SparkSession, sketch_col: str) -> Column:
+    """Scalar expression: serialized sketch of any format -> distinct-count
+    estimate (double), NULL for a NULL sketch."""
+    _require(spark)
+    spark.udf.registerJavaFunction(
+        _ESTIMATE_FN, "hllspark.HllSketchEstimate", DoubleType()
+    )
+    return F.expr(f"{_ESTIMATE_FN}(`{sketch_col}`)")

@@ -1,7 +1,7 @@
 package hllspark;
 
 /**
- * Shared register-buffer operations for the two aggregators.  Semantics are
+ * Shared register-buffer operations for the aggregators.  Semantics are
  * byte-identical to hllspark.hashing.jr_split and the numpy estimator in
  * hllspark.hll.estimate (Flajolet et al. 2007 with linear-counting and
  * large-range corrections, mirroring the reference HyperLogLog.hpp:95-149).
@@ -38,6 +38,10 @@ final class HllRegOps {
   }
 
   static byte[] merge(byte[] a, byte[] b) {
+    if (a.length != b.length) {
+      throw new IllegalArgumentException(
+          "register count mismatch: " + a.length + " != " + b.length);
+    }
     for (int i = 0; i < a.length; i++) {
       if ((b[i] & 0xFF) > (a[i] & 0xFF)) {
         a[i] = b[i];

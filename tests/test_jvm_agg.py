@@ -1,15 +1,20 @@
-"""JVM fast-path (hllspark.jvmagg + java/HllRegAggregator) parity tests.
+"""JVM fast-path (hllspark.jvmagg + java/src/hllspark) parity tests.
 
 The jvm impl must be a pure drop-in for impl='sql': byte-identical sketch
-serialization, identical estimates, partition invariance.  Skipped when the
-pre-built jar is not loadable in the test session.
+serialization, identical estimates, partition invariance.  The JVM sketch
+codec (merge_sketches / with_estimate on a jar session) must match the
+numpy codec of hllspark.sketch byte for byte, and both paths must agree on
+NULL and error semantics.  Skipped when the pre-built jar is not loadable
+in the test session.
 """
+
+import struct
 
 import numpy as np
 import pyspark.sql.functions as F
 import pytest
 
-from hllspark import agg, jvmagg, sketch
+from hllspark import agg, hll, jvmagg, sketch
 from tests.conftest import SF_TEST
 
 
@@ -19,7 +24,11 @@ def events(spark):
 
 
 @pytest.fixture(autouse=True)
-def _require_jvm(spark):
+def _require_jvm(request, spark):
+    # the codec_path='pandas' cases run as on a jar-less session anyway
+    callspec = getattr(request.node, "callspec", None)
+    if callspec is not None and callspec.params.get("codec_path") == "pandas":
+        return
     if not jvmagg.is_available(spark):
         pytest.skip("hllspark-jvm.jar not on session classpath")
 
@@ -125,3 +134,197 @@ def test_raw_registers_api_with_estimate_udf(spark, events):
         ).collect()
     }
     assert via_raw == via_jvm
+
+
+# ---------------------------------------------------------------------------
+# sketch codec: JVM encode / decode / estimate vs the numpy codec
+# ---------------------------------------------------------------------------
+
+_SOURCE_FORMATS = ["dense", "sparse", "hlll1", "hlll3", "hlll4", "zstd", "v1"]
+_TARGETS = [("hll", 3), ("hlll", 1), ("hlll", 3), ("hlll", 4)]
+
+
+def _header(version, algo, p, extra=0):
+    return struct.pack("<4sBBBB", sketch.MAGIC, version, algo, p, extra)
+
+
+def _shapes(p, rng):
+    """Register arrays of every shape the codec has a branch for."""
+    m, cap = 1 << p, 64 - p + 1
+    sparse = np.zeros(m, dtype=np.uint8)
+    idx = rng.choice(m, size=max(1, m // 64), replace=False)
+    sparse[idx] = rng.integers(1, cap + 1, idx.size)
+    hashes = rng.integers(0, 2**63, size=4 * m, dtype=np.uint64) << np.uint64(1)
+    return {
+        "zero": np.zeros(m, dtype=np.uint8),
+        "sparse": sparse,
+        "geometric": hll.build_from_hashes(hashes, p),
+        "uniform": rng.integers(0, cap + 1, m).astype(np.uint8),
+        "saturated": np.full(m, cap, dtype=np.uint8),
+    }
+
+
+def _as_format(regs, fmt):
+    """``regs`` serialized in source format ``fmt``, whatever encode_hll
+    itself would choose (dense and sparse are both forced)."""
+    p = regs.size.bit_length() - 1
+    if fmt == "dense":
+        return _header(2, sketch.ALGO_HLL, p) + regs.tobytes()
+    if fmt == "v1":
+        return _header(1, sketch.ALGO_HLL, p) + regs.tobytes()
+    if fmt == "sparse":
+        nz = np.flatnonzero(regs)
+        pairs = (nz.astype(np.uint64) << np.uint64(6)) | regs[nz].astype(np.uint64)
+        return (
+            _header(2, sketch.ALGO_HLL, p, 1)
+            + struct.pack("<I", nz.size)
+            + sketch.pack_uints(pairs, p + 6)
+        )
+    if fmt == "zstd":
+        return sketch.encode_zstd(regs)
+    return sketch.encode_hlll(regs, int(fmt[len("hlll"):]))
+
+
+@pytest.fixture(scope="module")
+def codec_cases():
+    """(case id, registers, sketch bytes): p 4-18 x 5 shapes x 7 formats."""
+    rng = np.random.default_rng(7)
+    cases = []
+    for p in range(4, 19):
+        for shape, regs in _shapes(p, rng).items():
+            for fmt in _SOURCE_FORMATS:
+                cases.append((f"{p}/{shape}/{fmt}", regs, _as_format(regs, fmt)))
+    return cases
+
+
+@pytest.fixture(scope="module")
+def codec_df(spark, codec_cases):
+    return spark.createDataFrame(
+        [(cid, bytearray(buf)) for cid, _, buf in codec_cases],
+        "case string, sketch binary",
+    )
+
+
+def _plan(df):
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.mark.parametrize("algo,m_bits", _TARGETS)
+def test_jvm_merge_reencodes_byte_identical(spark, codec_cases, codec_df,
+                                            algo, m_bits):
+    merged = agg.merge_sketches(codec_df, ["case"], algo=algo, m_bits=m_bits)
+    assert "Python" not in _plan(merged)  # decode + re-encode in the JVM
+    got = {r["case"]: bytes(r["sketch"]) for r in merged.collect()}
+    want = {cid: sketch.encode(regs, algo, m_bits) for cid, regs, _ in codec_cases}
+    assert len(got) == len(want)
+    bad = [cid for cid in want if got[cid] != want[cid]]
+    assert not bad, bad[:5]
+
+
+def test_jvm_estimate_matches_numpy(spark, codec_cases, codec_df):
+    est = agg.with_estimate(codec_df)
+    assert "Python" not in _plan(est)
+    got = {r["case"]: r["distinct_estimate"] for r in est.collect()}
+    for cid, regs, _ in codec_cases:
+        # saturated small-p registers overflow the range correction: NaN
+        with np.errstate(invalid="ignore"):
+            want = hll.estimate(regs)
+        assert got[cid] == pytest.approx(want, rel=1e-12, abs=0, nan_ok=True), cid
+
+
+@pytest.mark.parametrize("algo,m_bits", _TARGETS)
+def test_jvm_grouped_merge_of_mixed_formats(spark, algo, m_bits):
+    """Each group holds sketches of different shapes, each in a different
+    source format; the merge is their register max re-encoded, and does
+    not depend on how the rows are partitioned."""
+    rng = np.random.default_rng(11)
+    rows, want = [], {}
+    for p in (4, 10, 14, 18):
+        for g in range(3):
+            key = f"{p}/{g}"
+            shapes = list(_shapes(p, rng).values())
+            fmts = rng.permutation(_SOURCE_FORMATS)[: len(shapes)]
+            rows += [(key, bytearray(_as_format(r, f))) for r, f in zip(shapes, fmts)]
+            want[key] = sketch.encode(np.maximum.reduce(shapes), algo, m_bits)
+    df = spark.createDataFrame(rows, "k string, sketch binary")
+    outs = [
+        {
+            r["k"]: bytes(r["sketch"])
+            for r in agg.merge_sketches(
+                df.repartition(parts), ["k"], algo=algo, m_bits=m_bits
+            ).collect()
+        }
+        for parts in (1, 7)
+    ]
+    assert outs[0] == want
+    assert outs[1] == want
+
+
+# ---------------------------------------------------------------------------
+# edge semantics, the same on the JVM and the numpy (no-jar) path
+# ---------------------------------------------------------------------------
+
+@pytest.fixture(params=["jvm", "pandas"])
+def codec_path(request, monkeypatch):
+    """'pandas' runs the operators as on a session without the jar."""
+    if request.param == "pandas":
+        monkeypatch.setattr(jvmagg, "is_available", lambda _spark: False)
+    return request.param
+
+
+def _sketch_rows(spark, rows):
+    return spark.createDataFrame(
+        [(k, None if b is None else bytearray(b)) for k, b in rows],
+        "k int, sketch binary",
+    )
+
+
+@pytest.mark.parametrize("algo", ["hll", "hlll", "hllzstd"])
+def test_merge_all_null_group_is_null(spark, codec_path, algo):
+    regs = hll.build_from_hashes(np.arange(1, 50, dtype=np.uint64) << np.uint64(40), 8)
+    df = _sketch_rows(spark, [(1, None), (1, None), (2, sketch.encode(regs)), (2, None)])
+    got = {
+        r["k"]: r["sketch"]
+        for r in agg.merge_sketches(df, ["k"], algo=algo).collect()
+    }
+    assert got[1] is None
+    assert bytes(got[2]) == sketch.encode(regs, algo)
+
+
+def test_estimate_of_null_sketch_is_null(spark, codec_path):
+    regs = hll.build_from_hashes(np.arange(1, 50, dtype=np.uint64) << np.uint64(40), 8)
+    df = _sketch_rows(spark, [(1, None), (2, sketch.encode(regs))])
+    got = {r["k"]: r["distinct_estimate"] for r in agg.with_estimate(df).collect()}
+    assert got[1] is None
+    assert got[2] == pytest.approx(hll.estimate(regs), rel=1e-12)
+
+
+def test_merge_of_different_p_raises(spark, codec_path):
+    df = _sketch_rows(
+        spark,
+        [(1, sketch.encode(hll.empty(8))), (1, sketch.encode(hll.empty(10)))],
+    )
+    with pytest.raises(Exception):
+        agg.merge_sketches(df.repartition(1), ["k"]).collect()
+    with pytest.raises(Exception):
+        agg.merge_sketches(df.repartition(2)).collect()
+
+
+def test_empty_no_key_merge(spark, codec_path):
+    """The documented difference: a JVM aggregate without keys always
+    yields one row (NULL here), a pandas GROUPED_AGG yields none."""
+    rows = agg.merge_sketches(_sketch_rows(spark, [])).collect()
+    if codec_path == "jvm":
+        assert len(rows) == 1 and rows[0]["sketch"] is None
+    else:
+        assert rows == []
+
+
+def test_jvm_bad_header_raises(spark):
+    good = sketch.encode(hll.empty(8))
+    for bad in (b"XXXX" + good[4:], good[:4] + bytes([9]) + good[5:], good[:5]):
+        df = _sketch_rows(spark, [(1, bad)])
+        with pytest.raises(Exception):
+            agg.with_estimate(df).collect()
+        with pytest.raises(Exception):
+            agg.merge_sketches(df, ["k"]).collect()
