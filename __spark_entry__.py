@@ -74,20 +74,23 @@ def _q_hll_users_by_type_estimate(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _within_bound(est_df: DataFrame, exact_df: DataFrame, key: str) -> DataFrame:
-    # relative 3-sigma HLL bound, plus the linear-counting small-n slack:
+    # relative 3-sigma HLL bound, plus a per-group linear-counting slack:
     # at n << m the estimator is linear counting, whose error events are
-    # whole register collisions — E[collisions] = n^2/2m, each an O(1)
-    # ABSOLUTE error — so a tiny group (e.g. 15 users at sf0.001) may sit
-    # 1 register off while being exactly as accurate as the algorithm
-    # promises.  abs err <= 2 only matters for n <= 2/_BOUND (~41 at
-    # p=12); at driver scale the relative bound dominates unchanged.
+    # whole register collisions, each an O(1) ABSOLUTE error, so a tiny
+    # group (e.g. 15 users at sf0.001) may sit 1 register off while being
+    # exactly as accurate as the algorithm promises.  The slack is the
+    # expected collision count E = n^2/2m plus 3 of its (Poisson) sigmas,
+    # rounded up and capped at 2: at p=12 it is 1 for n <= ~27 and 2
+    # above, where the relative bound takes over by n ~ 41.
     j = est_df.join(exact_df, key)
+    collisions = F.col("exact") * F.col("exact") / F.lit(2.0 * (1 << _P))
+    slack = F.least(F.ceil(collisions + 3 * F.sqrt(collisions)), F.lit(2))
     return (
         j.select(
             key,
             (
                 F.abs(F.col("distinct_estimate") - F.col("exact"))
-                <= F.greatest(F.lit(_BOUND) * F.col("exact"), F.lit(2.0))
+                <= F.greatest(F.lit(_BOUND) * F.col("exact"), slack)
             )
             .cast("int")
             .alias("within_bound"),

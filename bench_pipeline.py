@@ -1,52 +1,21 @@
-"""Composed curation-pipeline benchmark — the 100 TB user's job shape.
-
-Every operator in bench.py is timed in isolation; the thing a training-
-data team actually runs is the COMPOSITION:
+"""The 8-stage curation chain that perfbench's ``curation_pipeline``
+workload and ``sketch_build``'s traced run execute:
 
   pages -> canonical-url exact dedup -> Gopher quality filter
         -> boilerplate line dedup -> MinHash near-dedup -> decontam
         -> mixture sampling -> deterministic shuffle -> sequence packing
 
-This module runs that chain twice over the same Common-Crawl-style pages
-fixture and reports BOTH views:
-
-- **staged**: each stage materialized (``localCheckpoint(eager=True)``),
-  with per-stage wall seconds, rows in/out, and shuffle read/write +
-  scan input + spill bytes from the Spark status REST API (the public
-  monitoring surface) — so a regression in ONE stage of the composition
-  is attributable, and the shuffle-byte column shows directly which
-  stages move corpus-scale data at 100 TB.
-- **chained**: the whole pipeline as ONE lazy plan with a single action,
-  plus the executed plan's Exchange count — what Catalyst makes of the
-  eight-stage lineage when nothing is pinned in between.
-
-Standalone:  python bench_pipeline.py  (env: SPARK_GRAFT_SF_DIR ignored;
-HLLSPARK_PIPELINE_ROWS rows, default 200_000).  bench.py imports
-``run_pipeline`` and merges the stage timings into its own JSON line as
-``p_*`` keys, so the driver's BENCH_r{N}.json carries the composition
-round over round.
+``pipeline_stages`` builds the chain; perfbench times it stage by stage
+(``python3 perfbench/run.py --workload curation_pipeline --trace 1``).
 """
 
 from __future__ import annotations
 
-import json
-import os
-import sys
-import time
-import urllib.request
-
-os.environ.setdefault("SPARK_LOCAL_IP", "127.0.0.1")
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 from hllspark import curation, decontam, dedup, sampling
 from hllspark.text import token_count
-
-# default sized so the staged run adds ~2 min to bench.py; raise for
-# standalone scale studies
-PIPELINE_ROWS = int(os.environ.get("HLLSPARK_PIPELINE_ROWS", str(200_000)))
 
 # word-soup fixture thresholds (same as examples/webtext_pipeline.py):
 # the synthetic corpus has 5-200 token docs of short dictionary words, so
@@ -136,197 +105,3 @@ def pipeline_stages(eval_docs: DataFrame, seed: int = 0):
         ("shuffle", shuffle),
         ("pack", pack),
     ]
-
-
-# ---------------------------------------------------------------------------
-# stage-attributed metrics via the Spark status REST API
-# ---------------------------------------------------------------------------
-
-
-def _drain_listener_bus(spark: SparkSession) -> None:
-    """Block until the status listener has processed every queued event,
-    so the REST snapshot reflects the action that just returned."""
-    try:
-        spark._jsc.sc().listenerBus().waitUntilEmpty()
-    except Exception:
-        time.sleep(0.5)
-
-
-def _metrics_snapshot(spark: SparkSession) -> dict[str, int]:
-    """Cumulative byte counters summed over all completed stages (the
-    documented /api/v1 monitoring endpoint). Zeros when the UI is off."""
-    ui = spark.sparkContext.uiWebUrl
-    zero = dict(shuffle_read=0, shuffle_write=0, input=0, spill=0)
-    if not ui:
-        return zero
-    _drain_listener_bus(spark)
-    app = spark.sparkContext.applicationId
-    try:
-        with urllib.request.urlopen(f"{ui}/api/v1/applications/{app}/stages") as r:
-            stages = json.load(r)
-    except Exception:
-        return zero
-    return dict(
-        shuffle_read=sum(s.get("shuffleReadBytes", 0) for s in stages),
-        shuffle_write=sum(s.get("shuffleWriteBytes", 0) for s in stages),
-        input=sum(s.get("inputBytes", 0) for s in stages),
-        spill=sum(
-            s.get("memoryBytesSpilled", 0) + s.get("diskBytesSpilled", 0)
-            for s in stages
-        ),
-    )
-
-
-def _mb(n: int) -> float:
-    return round(n / (1024 * 1024), 2)
-
-
-def run_pipeline(
-    spark: SparkSession, pages: DataFrame, seed: int = 0, chained: bool = True
-) -> dict:
-    """Run the chain staged (per-stage attribution) and, when
-    ``chained``, also as one lazy plan with a single action; return the
-    full report dict.
-
-    Measured finding (100k rows, local[16]): chained is ~4.8x SLOWER
-    than staged (277s vs 58s) with ~1.4x the shuffle bytes — the dedup/
-    decontam/mixture operators reference their input DataFrame more than
-    once, so without a pinned stage boundary the whole upstream lineage
-    (including the full Gopher statistic scan) re-executes per
-    reference.  The production recommendation is therefore the staged
-    shape: localCheckpoint (single job) or parquet (multi-job pipelines)
-    between stages — which is also what a 100 TB pipeline wants for
-    restartability.  bench.py integrates the staged run only."""
-    eval_docs = (
-        pages.where(F.pmod(F.xxhash64("url"), F.lit(20)) == 0)
-        .select("url", "text")
-        .localCheckpoint(eager=True)
-    )
-    stages = pipeline_stages(eval_docs, seed)
-
-    # -- staged run ---------------------------------------------------
-    df = pages.select("url", "warc_ts", "text", "lang")
-    rows_in_total = df.count()
-    report: dict[str, dict] = {}
-    checkpoints = []  # keep handles so blocks live until the run ends
-    rows_in = rows_in_total
-    for name, fn in stages:
-        before = _metrics_snapshot(spark)
-        t0 = time.perf_counter()
-        out = fn(df).localCheckpoint(eager=True)
-        sec = time.perf_counter() - t0
-        after = _metrics_snapshot(spark)
-        rows_out = out.count()
-        report[name] = {
-            "sec": round(sec, 3),
-            "rows_in": rows_in,
-            "rows_out": rows_out,
-            "shuffle_read_mb": _mb(after["shuffle_read"] - before["shuffle_read"]),
-            "shuffle_write_mb": _mb(after["shuffle_write"] - before["shuffle_write"]),
-            "input_mb": _mb(after["input"] - before["input"]),
-            "spill_mb": _mb(after["spill"] - before["spill"]),
-        }
-        checkpoints.append(out)
-        df, rows_in = out, rows_out
-    staged_total = round(sum(s["sec"] for s in report.values()), 3)
-    rows_final = rows_in
-
-    out = {
-        "rows_in": rows_in_total,
-        "rows_out": rows_final,
-        "stages": report,
-        "staged_total_sec": staged_total,
-        "staged_docs_per_sec": round(rows_in_total / staged_total)
-        if staged_total
-        else None,
-    }
-    if not chained:
-        del checkpoints
-        return out
-
-    # -- chained run (one lazy plan, one action) ----------------------
-    # the timer wraps plan CONSTRUCTION too: several operators pin
-    # intermediate grains via localCheckpoint(eager=True) (pack's global
-    # cumsum, the connected-components iteration), so real work happens
-    # while the chain is being composed — excluding it would credit the
-    # chained run with stages that already ran
-    before = _metrics_snapshot(spark)
-    t0 = time.perf_counter()
-    df = pages.select("url", "warc_ts", "text", "lang")
-    for _, fn in stages:
-        df = fn(df)
-    df.agg(
-        F.max("chunk_id"), F.sum("n_chunks_spanned"), F.count(F.lit(1))
-    ).collect()
-    chained_sec = round(time.perf_counter() - t0, 3)
-    after = _metrics_snapshot(spark)
-
-    del checkpoints
-    out.update(
-        chained_sec=chained_sec,
-        chained_shuffle_write_mb=_mb(
-            after["shuffle_write"] - before["shuffle_write"]
-        ),
-        chained_docs_per_sec=round(rows_in_total / chained_sec)
-        if chained_sec
-        else None,
-    )
-    return out
-
-
-def materialize_pages(spark: SparkSession, n_rows: int, cpus: int) -> DataFrame:
-    """Pipeline fixture: the same deterministic crawl generator as
-    bench.py's q0/q17/q18 pages, but at ``vocab_scale=256`` (8192-token
-    effective vocabulary) so shingle-based stages see a realistic
-    collision rate.  Materialized to parquet once, untimed."""
-    from hllspark import io as hio
-
-    path = f"/tmp/hllspark_bench_pipeline_pages_{n_rows}_v256"
-    if not os.path.exists(f"{path}/_SUCCESS"):
-        hio.generate_pages(
-            spark, n_rows, num_partitions=2 * cpus, vocab_scale=256
-        ).write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
-
-
-def main() -> None:
-    from hllspark import jvmagg
-
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    builder = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("hllspark-bench-pipeline")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", "16g")
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.port", "0")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "16384")
-    )
-    if os.path.exists(jvmagg.jar_path()):
-        builder = builder.config(
-            "spark.driver.extraClassPath", jvmagg.jar_path()
-        ).config("spark.jars", jvmagg.jar_path())
-    spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    pages = materialize_pages(spark, PIPELINE_ROWS, cpus)
-
-    out = run_pipeline(spark, pages)
-    print(
-        json.dumps(
-            {
-                "metric": "composed curation pipeline wall time (staged + chained)",
-                "value": out["chained_sec"],
-                "unit": "sec",
-                "pipeline": out,
-            }
-        )
-    )
-    spark.stop()
-
-
-if __name__ == "__main__":
-    main()

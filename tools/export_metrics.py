@@ -3,7 +3,9 @@
 Reference analogue: data_export.py:9-29 walks results/*.hdf5 and flattens
 each measurement matrix + its attrs into a single CSV row stream.  Ours
 walks BENCH/*.json plus any BENCH_r*.json at the repo root and emits one
-row per (file, query) with the run-level metadata repeated per row.
+row per (file, query) with the run-level metadata repeated per row.  A
+BENCH_r*.json driver record's bench line is unwrapped from ``parsed``
+(null when it overflowed the captured stdout ``tail``, which is dropped).
 
 Usage: python tools/export_metrics.py [out.csv]   (default BENCH/metrics.csv)
 """
@@ -20,11 +22,11 @@ import pandas as pd
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def collect() -> pd.DataFrame:
+def collect(root: str = ROOT) -> pd.DataFrame:
     rows = []
     paths = sorted(
-        glob.glob(os.path.join(ROOT, "BENCH", "*.json"))
-        + glob.glob(os.path.join(ROOT, "BENCH_r*.json"))
+        glob.glob(os.path.join(root, "BENCH", "*.json"))
+        + glob.glob(os.path.join(root, "BENCH_r*.json"))
     )
     for path in paths:
         try:
@@ -32,7 +34,11 @@ def collect() -> pd.DataFrame:
                 doc = json.load(f)
         except (json.JSONDecodeError, OSError):
             continue
-        base = {"file": os.path.relpath(path, ROOT)}
+        doc.pop("tail", None)
+        parsed = doc.pop("parsed", None)
+        if isinstance(parsed, dict):
+            doc.update(parsed)
+        base = {"file": os.path.relpath(path, root)}
         for k, v in doc.items():
             if isinstance(v, (str, int, float, bool)):
                 base[k] = v
