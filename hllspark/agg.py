@@ -6,11 +6,21 @@ Three physical implementations of the same logical aggregate, chosen by
 hllspark-jvm.jar is on the session classpath, else 'sql'; farmhash parity
 always routes to 'pandas'):
 
-impl='jvm' — ObjectHashAggregate with a dense byte[m] register buffer
-(java/src/hllspark/HllRegAggregator.java via hllspark.jvmagg): per input
-row just hash + two shifts + clz + array max, no per-row map probe — the
-same imperative-buffer strategy as Spark's built-in approx_count_distinct,
-and measured at ~1x its throughput (vs ~3x slower for impl='sql').
+impl='jvm' — dense byte[m] register buffers in the JVM (java/src/hllspark
+via hllspark.jvmagg): per input row just hash + two shifts + clz + array
+max — the same imperative-buffer strategy as Spark's built-in
+approx_count_distinct, and measured at ~1x its throughput (vs ~3x slower
+for impl='sql').  approx_distinct, rolling_distinct and 'hllzstd' builds
+run it as an ObjectHashAggregate (HllRegAggregator /
+HllEstimateAggregator).  sketch_by runs it map-side instead, because that
+aggregate holds only spark.sql.objectHashAggregate.sortBased.
+fallbackThreshold (128) groups per task and then sorts every remaining
+row of the task: HllSketchPartials (mapPartitions) keeps a register map
+per task over Spark's internal rows (UnsafeRow keys), charging each group
+its register, key and entry bytes against that threshold x 2^18 B, and
+emits one hll partial per (group, task) and flush;
+HllSketchMergeAggregator merges them by key.  Same plan shape as
+impl='pandas' below, with no Python.
 
 impl='sql' — everything hot stays in the JVM / whole-stage codegen:
 
@@ -36,9 +46,9 @@ impl='sql' — everything hot stays in the JVM / whole-stage codegen:
 impl='pandas' — per-partition vectorized build via mapInPandas
 (np.maximum.at scatter), one sketch row per (partition, key), then a
 grouped-agg merge.  Required for hash_mode='farmhash' (reference parity —
-the hash itself runs in numpy) and preferred when the key cardinality is so
-high that keys x m native agg groups would blow the hash-aggregate state
-(rule of thumb: #keys x 2^p > ~10M per executor).
+the hash itself runs in numpy).  At high key cardinality it holds #keys x
+2^p register bytes per task; the jvm plan bounds that memory instead and
+flushes extra partials, so it needs no rule of thumb on #keys.
 
 All three implementations produce byte-identical sketches for the same
 (hash_mode, p): they share the j/r derivation (hashing.jr_split twins the
@@ -47,17 +57,18 @@ SQL expression) and merging is an exact max.
 Sketch tables (encode, merge, estimate): with the jar on the session, the
 serialized-sketch operators run in the JVM too, through the HLSK codec in
 java/src/hllspark/HllSketchCodec.java (byte-identical to hllspark.sketch).
-sketch_by(impl='jvm') finishes its register aggregate straight to hll/hlll
-bytes; merge_sketches, estimate_grouping_sets (sketch_rollup / sketch_cube)
-and the pandas plan's merges use HllSketchMergeAggregator, which decodes
-any format into an m-byte buffer and aggregates partially; with_estimate
-and every estimate of sketch bytes is the HllSketchEstimate function
-(_merge_column / _estimate_column choose).  The pandas UDFs over the numpy
-codec still run on sessions without the jar, for 'hllzstd' encodes (only
-pyarrow's zstd reproduces its frames byte for byte), and in farmhash
-builds (whose hashing is numpy); the numpy codec is also the parity
-reference the JVM one is tested against.  Measured on sketch_rollup
-(4 vCPUs, 10 interleaved pairs): vs_builtin 2.24 -> 1.12 (PLANS.md §55).
+sketch_by's merges (both partial plans), merge_sketches and
+estimate_grouping_sets (sketch_rollup / sketch_cube) use
+HllSketchMergeAggregator, which decodes any format into an m-byte buffer
+and aggregates partially; with_estimate and every estimate of sketch bytes
+is the HllSketchEstimate function (_merge_column / _estimate_column
+choose).  The pandas UDFs over the numpy codec still run on sessions
+without the jar, for 'hllzstd' encodes (only pyarrow's zstd reproduces its
+frames byte for byte), and in farmhash builds (whose hashing is numpy);
+the numpy codec is also the parity reference the JVM one is tested
+against.  Measured on sketch_rollup (4 vCPUs, interleaved pairs):
+vs_builtin 2.24 -> 1.12 with the JVM codec (PLANS.md §55), then below 1.0
+with the map-side partial build (§56).
 
 Hash modes:
     'xxhash64'  — production default: hashing in the JVM (codegen'd).
@@ -69,14 +80,15 @@ Hash modes:
                   'jr' benchmark path, measure.hpp:49-67).
 
 Skew: with impl='sql', map-side partial aggregation absorbs hot keys by
-construction.  With impl='pandas', each partition emits at most one row per
-key, so reducer fan-in is bounded by #partitions; ``salt_buckets`` adds an
-intermediate merge level for extreme partition counts (north_rule).
+construction.  sketch_by's partial plans (jvm and pandas) emit about one
+row per key and partition, so reducer fan-in is bounded by #partitions;
+``salt_buckets`` adds an intermediate merge level for extreme partition
+counts (north_rule).
 """
 
 from __future__ import annotations
 
-from functools import partial, reduce
+from functools import reduce
 from itertools import combinations
 from typing import Iterator, Sequence
 
@@ -344,13 +356,6 @@ def _sketch_schema(df: DataFrame, keys: Sequence[str]) -> str:
     return (key_schema + ", " if key_schema else "") + f"{_SKETCH_COL} binary"
 
 
-def _seed_row(spark, algo: str, p: int, m_bits: int) -> DataFrame:
-    return spark.createDataFrame(
-        [(bytearray(_sketch.encode(_hll.empty(p), algo, m_bits)),)],
-        f"{_SKETCH_COL} binary",
-    )
-
-
 def _maxed_registers_sql(df, value_col, keys, p, hash_mode):
     """scan -> JVM (j, w) projection -> native groupBy(keys, j).min(w) ->
     r from w on the <= #keys * m surviving rows.
@@ -417,7 +422,7 @@ def _encode_raw_udf(algo: str, m_bits: int):
     """Scalar pandas UDF: raw dense register bytes (JVM aggregate output)
     -> the engine's serialized sketch format.  Runs over one row per group;
     the jvm plan needs it only for 'hllzstd', whose frames only pyarrow's
-    zstd reproduces (hll / hlll encode in HllSketchAggregator)."""
+    zstd reproduces (hll / hlll sketches are encoded in the jar)."""
 
     @F.pandas_udf(BinaryType())
     def _enc(s: pd.Series) -> pd.Series:
@@ -495,28 +500,36 @@ def _assemble_sketches(df, maxed, keys, p, algo, m_bits):
     return assembled
 
 
-def _sketch_by_pandas(df, value_col, keys, p, algo, m_bits, hash_mode, salt_buckets):
-    spark = df.sparkSession
+def _sketch_by_partials(df, value_col, keys, p, algo, m_bits, hash_mode, impl,
+                        salt_buckets):
+    """Per-task partial sketches, then one merge per group (_merge_column).
+    The partial step is the jar's HllSketchPartials for impl='jvm' (a
+    register map per task, hll partials) and a mapInPandas numpy build for
+    impl='pandas' (``algo`` partials)."""
     if hash_mode == "farmhash":  # raw values go to Python
         projected = df.select(*keys, value_col)
     else:
         filtered, v = _hashed(df, value_col, hash_mode)
         projected = filtered.select(*keys, v.alias(_HASH_COL))
 
-    partials = projected.mapInPandas(
-        _make_build_partials(
-            keys, p, algo, m_bits, hash_mode, value_col,
-            int_dtype=isinstance(
-                df.schema[value_col].dataType,
-                (ByteType, ShortType, IntegerType, LongType),
+    if impl == "jvm":
+        partials = jvmagg.sketch_partials(projected, p, _SKETCH_COL)
+    else:
+        partials = projected.mapInPandas(
+            _make_build_partials(
+                keys, p, algo, m_bits, hash_mode, value_col,
+                int_dtype=isinstance(
+                    df.schema[value_col].dataType,
+                    (ByteType, ShortType, IntegerType, LongType),
+                ),
             ),
-        ),
-        schema=_sketch_schema(df, keys),
-    )
-    merged = _merge_column(df, _SKETCH_COL, algo, m_bits).alias(_SKETCH_COL)
-    if not keys:
-        seed = _seed_row(spark, algo, p, m_bits)
-        return partials.unionByName(seed).agg(merged)
+            schema=_sketch_schema(df, keys),
+        )
+    merged = _merge_column(df, _SKETCH_COL, algo, m_bits)
+    if not keys:  # both merges give NULL over no partials: empty input
+        empty = bytearray(_sketch.encode(_hll.empty(p), algo, m_bits))
+        return partials.agg(F.coalesce(merged, F.lit(empty)).alias(_SKETCH_COL))
+    merged = merged.alias(_SKETCH_COL)
     if salt_buckets and salt_buckets > 1:
         # 3-level tree: partial -> salted merge -> final (north_rule skew
         # handling: bounds fan-in per reducer to #partitions/buckets)
@@ -545,11 +558,14 @@ def sketch_by(
     Returns DataFrame[keys..., sketch binary].  Nulls in value_col are
     ignored (COUNT DISTINCT semantics); null group keys form a group.
     See module docstring for the three physical plans.
+    ``salt_buckets`` applies to the partial plans (jvm and pandas).
 
-    key_encode='hash64' (jvm impl only): probe the grouped aggregate on
-    xxhash64(key) longs instead of raw string keys — ~1.3x at 100k string
-    keys; opt-in because a 64-bit key collision merges two groups (see
-    _raw_registers_jvm).
+    key_encode='hash64' (jvm impl only) cheapens a grouped aggregate's
+    string-key probe (_raw_registers_jvm), so it applies where sketch_by
+    builds with one: 'hllzstd' on the jvm impl (grouped register
+    aggregate, then a pandas encode).  The jvm partial build keys its
+    register map on the key row's bytes and has no such probe, so there
+    the option is validated and changes nothing.
     """
     keys = list(keys or [])
     impl = _resolve_impl(df, hash_mode, impl)
@@ -558,16 +574,11 @@ def sketch_by(
         built = _raw_registers_jvm(df, value_col, keys, p, hash_mode, key_encode)
         enc = _encode_raw_udf(algo, m_bits)
         return built.select(*keys, enc(F.col("__regs")).alias(_SKETCH_COL))
-    if impl == "jvm":
-        sketch_agg = partial(jvmagg.sketch_agg_column, algo=algo, m_bits=m_bits)
-        return _raw_registers_jvm(
-            df, value_col, keys, p, hash_mode, key_encode, sketch_agg, _SKETCH_COL
-        )
     if impl == "sql":
         maxed = _maxed_registers_sql(df, value_col, keys, p, hash_mode)
         return _assemble_sketches(df, maxed, keys, p, algo, m_bits)
-    return _sketch_by_pandas(
-        df, value_col, keys, p, algo, m_bits, hash_mode, salt_buckets
+    return _sketch_by_partials(
+        df, value_col, keys, p, algo, m_bits, hash_mode, impl, salt_buckets
     )
 
 
@@ -859,7 +870,7 @@ def approx_distinct(
     JVM — the plan shape of approx_count_distinct; with impl='sql' hashing,
     register max and the Flajolet estimator run as native Spark SQL.
     Neither has a Python stage.  key_encode='hash64' (jvm impl only): see
-    sketch_by."""
+    _raw_registers_jvm."""
     keys = list(keys or [])
     impl = _resolve_impl(df, hash_mode, impl)
     _validate(p, algo, hash_mode, impl, key_encode)

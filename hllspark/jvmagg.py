@@ -1,4 +1,4 @@
-"""Optional JVM fast path: the HLL register build and the sketch codec.
+"""Optional JVM fast path: the HLL register builds and the sketch codec.
 
 The declarative SQL build (hllspark.agg impl='sql') pays a per-row
 HashAggregate probe on (keys, j); Spark's own approx_count_distinct avoids
@@ -11,14 +11,24 @@ JVM build runs at ~0.95-1.1x Spark's built-in HLL++ (vs 3.2x slower for the
 SQL formulation) and produces byte-identical registers to impl='sql' /
 impl='pandas' (same jr_split convention; pytest-gated).
 
+That aggregate holds at most spark.sql.objectHashAggregate.sortBased.
+fallbackThreshold (128) buffers per task; past that it sorts every
+remaining input row of the task.  Many small groups per task (sketch_by
+at a fine grain) hit that sort, so sketch_by builds map-side instead:
+HllSketchPartials keeps a per-task hash map from key to register
+buffer, bounded by the same threshold x 2^18 B (the most dense register
+memory ObjectHashAggregate holds per task at any p; each group is
+charged its register, key and map-entry bytes), and streams one HLSK hll
+partial per (group, task), which HllSketchMergeAggregator merges by key
+(sketch_partials).
+
 The jar also carries the HLSK sketch codec (HllSketchCodec, byte-identical
 to hllspark.sketch for hll and hlll), so sketch tables need no Python
-stage: HllSketchAggregator builds and encodes (sketch_by),
-HllSketchMergeAggregator merges sketches of any format with partial
-aggregation (merge_sketches, sketch_rollup / sketch_cube), and the
-HllSketchEstimate function estimates them (with_estimate).  The pandas
-UDFs of hllspark.agg remain for sessions without the jar, 'hllzstd'
-encodes and farmhash builds.
+stage: HllSketchMergeAggregator merges sketches of any format with
+partial aggregation (sketch_by's merge step, merge_sketches,
+sketch_rollup / sketch_cube) and the HllSketchEstimate function
+estimates them (with_estimate).  The pandas UDFs of hllspark.agg remain
+for sessions without the jar, 'hllzstd' encodes and farmhash builds.
 
 Availability: the pre-built jar ships at hllspark/jars/hllspark-jvm.jar
 (source + build script under java/); it must be on the DRIVER classpath at
@@ -39,7 +49,7 @@ from __future__ import annotations
 import os
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql.types import DoubleType
 
 # availability is a CLASSPATH property — JVM-wide, so per-application
@@ -91,17 +101,15 @@ def is_available(spark: SparkSession) -> bool:
 
 
 # flavor -> (aggregator class, input encoder): 'regs' bigint hash in, raw
-# register bytes out (hllzstd sketch_by, rolling_distinct's build); 'est'
-# bigint hash in, double estimate out (approx_distinct); 'merge_est' raw
-# register bytes in, register-wise max, double estimate out
-# (rolling_distinct); 'sketch' bigint hash in, serialized hll/hlll sketch
-# out (sketch_by); 'merge' serialized sketches in, register-wise max,
-# serialized hll/hlll sketch out (merge_sketches, rollup / cube).
+# register bytes out (hllzstd sketch_by, rolling_distinct's build); 'est' bigint hash in, double estimate out (approx_distinct);
+# 'merge_est' raw register bytes in, register-wise max, double estimate
+# out (rolling_distinct); 'merge' serialized sketches in, register-wise
+# max, serialized hll/hlll sketch out (sketch_by's merge step,
+# merge_sketches, rollup / cube).
 _AGGREGATORS = {
     "regs": ("HllRegAggregator", "LONG"),
     "est": ("HllEstimateAggregator", "LONG"),
     "merge_est": ("HllMergeEstimateAggregator", "BINARY"),
-    "sketch": ("HllSketchAggregator", "LONG"),
     "merge": ("HllSketchMergeAggregator", "BINARY"),
 }
 _ESTIMATE_FN = "hllspark_sketch_estimate"
@@ -155,12 +163,18 @@ def merge_est_agg_column(spark: SparkSession, p: int, regs_col: str) -> Column:
     return F.expr(f"{_register(spark, 'merge_est', p)}(`{regs_col}`)")
 
 
-def sketch_agg_column(spark: SparkSession, p: int, hash_col: str,
-                      algo: str, m_bits: int) -> Column:
-    """Aggregate expression building the serialized ``algo`` ('hll' or
-    'hlll') sketch from a bigint hash column: sketch_by in one
-    ObjectHashAggregate, byte-identical to hllspark.sketch.encode."""
-    return F.expr(f"{_register(spark, 'sketch', p, algo, m_bits)}(`{hash_col}`)")
+def sketch_partials(df: DataFrame, p: int, sketch_col: str) -> DataFrame:
+    """Per-task partial sketches of ``df`` (key columns, then a bigint
+    hash column last): DataFrame[keys..., ``sketch_col`` binary],
+    one hll sketch per (group, task), or more when the task's register
+    map reaches its budget.  Merge them by key for the group's sketch.
+    Lazy like any transformation: ``df`` is planned and run at the first
+    action on the result."""
+    _require(df.sparkSession)
+    jdf = df.sparkSession._jvm.hllspark.HllSketchPartials.build(
+        df._jdf, p, sketch_col
+    )
+    return DataFrame(jdf, df.sparkSession)
 
 
 def merge_agg_column(spark: SparkSession, sketch_col: str, algo: str,

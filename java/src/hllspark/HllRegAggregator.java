@@ -22,8 +22,7 @@ import org.apache.spark.sql.expressions.Aggregator;
  * <p>Register semantics are byte-identical to hllspark.hashing.jr_split:
  * j = top p bits of the hash, r = clz(hash &lt;&lt; p) + 1, with the
  * all-zero suffix capped at 64 - p + 1.  The finish() output is the raw
- * dense register array; {@link HllSketchAggregator} finishes to the
- * serialized sketch instead.
+ * dense register array.
  */
 public class HllRegAggregator extends Aggregator<Long, byte[], byte[]> {
   private final int p;

@@ -24,10 +24,10 @@ final class HllRegOps {
   }
 
   static byte[] update(byte[] regs, Long hash, int p) {
-    if (hash == null) {
-      return regs;
-    }
-    final long v = hash;
+    return hash == null ? regs : update(regs, hash.longValue(), p);
+  }
+
+  static byte[] update(byte[] regs, long v, int p) {
     final int j = (int) (v >>> (64 - p));
     final long w = v << p;
     final int r = (w == 0) ? (64 - p + 1) : (Long.numberOfLeadingZeros(w) + 1);

@@ -1,6 +1,9 @@
 package hllspark;
 
 import com.github.luben.zstd.Zstd;
+import java.lang.invoke.MethodHandles;
+import java.lang.invoke.VarHandle;
+import java.nio.ByteOrder;
 
 /**
  * The HLSK sketch wire format of hllspark.sketch, in the JVM.
@@ -13,6 +16,12 @@ import com.github.luben.zstd.Zstd;
  * folds the registers into a buffer with a register-wise max.  Encoding to
  * zstd stays in Python: zstd-jni's frame bytes are not guaranteed to equal
  * pyarrow's, and the format promises byte identity across plans.
+ *
+ * <p>m = 2^p is a multiple of 8 (p &gt;= 4), and 8 HLLL offsets of mBits
+ * bits fill exactly mBits bytes, so the kernels walk registers 8 at a time:
+ * an all-zero 8-register word is skipped where it cannot change the output,
+ * and each group of offsets packs into (or unpacks from) its own whole
+ * bytes, with one routine for every mBits in [0, 32].
  */
 final class HllSketchCodec {
   private HllSketchCodec() {}
@@ -25,6 +34,8 @@ final class HllSketchCodec {
   private static final int HEADER = 8; // "HLSK", version, algo, p, extra
   private static final int HLL_SPARSE = 1; // header extra flag of sparse HLL
   private static final int S_BITS = 6; // exception / sparse value width
+  private static final VarHandle WORDS =
+      MethodHandles.byteArrayViewVarHandle(long[].class, ByteOrder.LITTLE_ENDIAN);
 
   /** Target format id of an encodable algo name ('hll' or 'hlll'). */
   static int algoId(String algo) {
@@ -45,14 +56,25 @@ final class HllSketchCodec {
 
   static byte[] encode(byte[] regs, int algo, int mBits) {
     final int p = Integer.numberOfTrailingZeros(regs.length);
+    HllRegOps.checkP(p);
+    if (regs.length != 1 << p) {
+      throw new IllegalArgumentException("register count " + regs.length + " is not 2^p");
+    }
     return algo == ALGO_HLLL ? encodeHlll(regs, p, mBits) : encodeHll(regs, p);
+  }
+
+  /** Registers j..j+7 as one word; zero iff all eight are zero. */
+  private static long word(byte[] regs, int j) {
+    return (long) WORDS.get(regs, j);
   }
 
   private static byte[] encodeHll(byte[] regs, int p) {
     int nnz = 0;
-    for (byte r : regs) {
-      if (r != 0) {
-        nnz++;
+    for (int j = 0; j < regs.length; j += 8) {
+      if (word(regs, j) != 0) {
+        for (int k = j; k < j + 8; k++) {
+          nnz += regs[k] != 0 ? 1 : 0;
+        }
       }
     }
     final int width = p + S_BITS;
@@ -65,9 +87,14 @@ final class HllSketchCodec {
     final byte[] out = header(HEADER + (int) sparseBytes, ALGO_HLL, p, HLL_SPARSE);
     putInt(out, HEADER, nnz);
     final BitWriter w = new BitWriter(out, HEADER + 4);
-    for (int j = 0; j < regs.length; j++) {
-      if (regs[j] != 0) {
-        w.write(((long) j << S_BITS) | (regs[j] & 0xFF), width);
+    for (int j = 0; j < regs.length; j += 8) {
+      if (word(regs, j) == 0) {
+        continue;
+      }
+      for (int k = j; k < j + 8; k++) {
+        if (regs[k] != 0) {
+          w.write(((long) k << S_BITS) | (regs[k] & 0xFF), width);
+        }
       }
     }
     return out;
@@ -77,8 +104,14 @@ final class HllSketchCodec {
     final int m = regs.length;
     final long maxOffset = (1L << mBits) - 1;
     final long[] counts = new long[256];
-    for (byte r : regs) {
-      counts[r & 0xFF]++;
+    for (int j = 0; j < m; j += 8) {
+      if (word(regs, j) == 0) {
+        counts[0] += 8;
+        continue;
+      }
+      for (int k = j; k < j + 8; k++) {
+        counts[regs[k] & 0xFF]++;
+      }
     }
     // base minimizing the exception count, smallest base on ties
     int base = 0;
@@ -99,20 +132,33 @@ final class HllSketchCodec {
     }
     final int ns = (int) bestNs;
     final int width = p + S_BITS;
-    final long offBytes = ((long) m * mBits + 7) / 8;
+    final int offAt = HEADER + 5;
+    final long offBytes = (long) m / 8 * mBits;
     final long excBytes = ((long) ns * width + 7) / 8;
-    final byte[] out =
-        header((int) (HEADER + 5 + offBytes + excBytes), ALGO_HLLL, p, mBits);
+    final byte[] out = header((int) (offAt + offBytes + excBytes), ALGO_HLLL, p, mBits);
     out[HEADER] = (byte) base;
     putInt(out, HEADER + 1, ns);
-    final BitWriter offsets = new BitWriter(out, HEADER + 5);
-    final BitWriter exceptions = new BitWriter(out, (int) (HEADER + 5 + offBytes));
-    for (int j = 0; j < m; j++) {
-      final int r = regs[j] & 0xFF;
-      final boolean in = r >= base && r <= base + maxOffset;
-      offsets.write(in ? r - base : 0, mBits);
-      if (!in) {
-        exceptions.write(((long) j << S_BITS) | r, width);
+    final BitWriter exceptions = new BitWriter(out, (int) (offAt + offBytes));
+    for (int j = 0, at = offAt; j < m; j += 8, at += mBits) {
+      if (base == 0 && word(regs, j) == 0) {
+        continue; // eight zero offsets, no exception: out is already zero
+      }
+      long acc = 0;
+      int bits = 0;
+      int pos = at;
+      for (int k = j; k < j + 8; k++) {
+        final int r = regs[k] & 0xFF;
+        long off = r - base;
+        if (off < 0 || off > maxOffset) {
+          exceptions.write(((long) k << S_BITS) | r, width);
+          off = 0;
+        }
+        acc = (acc << mBits) | off;
+        bits += mBits;
+        while (bits >= 8) {
+          bits -= 8;
+          out[pos++] = (byte) (acc >>> bits);
+        }
       }
     }
     return out;
@@ -162,25 +208,68 @@ final class HllSketchCodec {
     return regs;
   }
 
+  /**
+   * An exception replaces its slot's offset.  With base 0 the encoder's
+   * offset there is 0, and max(acc, 0) leaves the accumulator as it is, so
+   * the offsets fold straight into {@code regs}; with base &gt; 0 an
+   * exception may be below base, and the sketch is decoded into a
+   * temporary first.
+   */
   private static void decodeHlllMax(byte[] buf, byte[] regs, int p, int mBits) {
     final int m = regs.length;
     checkMBits(mBits);
     need(buf, HEADER + 5);
     final int base = buf[HEADER] & 0xFF;
     final int ns = getInt(buf, HEADER + 1);
-    final long offBytes = ((long) m * mBits + 7) / 8;
-    final BitReader offsets = new BitReader(buf, HEADER + 5, m, mBits);
-    final byte[] vals = new byte[m];
-    for (int j = 0; j < m; j++) {
-      vals[j] = (byte) (offsets.read(mBits) + base);
-    }
+    final int offAt = HEADER + 5;
+    final long offBytes = (long) m / 8 * mBits;
     final int width = p + S_BITS;
-    final BitReader exceptions = new BitReader(buf, HEADER + 5 + offBytes, ns, width);
+    // checks the length of the offsets and the exceptions together
+    final BitReader exceptions = new BitReader(buf, offAt + offBytes, ns, width);
+    final boolean fold = base == 0;
+    final byte[] vals = fold ? regs : new byte[m];
+    final long mask = (1L << mBits) - 1;
+    for (int j = 0, at = offAt; j < m; j += 8, at += mBits) {
+      if (fold && zeroBytes(buf, at, mBits)) {
+        continue;
+      }
+      long acc = 0;
+      int bits = 0;
+      int pos = at;
+      for (int k = j; k < j + 8; k++) {
+        while (bits < mBits) {
+          acc = (acc << 8) | (buf[pos++] & 0xFF);
+          bits += 8;
+        }
+        bits -= mBits;
+        final int v = (int) (((acc >>> bits) & mask) + base) & 0xFF;
+        if (fold) {
+          max(regs, k, v);
+        } else {
+          vals[k] = (byte) v;
+        }
+      }
+    }
     for (int i = 0; i < ns; i++) {
       final long kv = exceptions.read(width);
-      vals[checkIndex(kv >>> S_BITS, m)] = (byte) (kv & 63);
+      final int j = checkIndex(kv >>> S_BITS, m);
+      if (fold) {
+        max(regs, j, (int) (kv & 63));
+      } else {
+        vals[j] = (byte) (kv & 63);
+      }
     }
-    HllRegOps.merge(regs, vals);
+    if (!fold) {
+      HllRegOps.merge(regs, vals);
+    }
+  }
+
+  private static boolean zeroBytes(byte[] buf, int at, int n) {
+    int or = 0;
+    for (int i = at; i < at + n; i++) {
+      or |= buf[i];
+    }
+    return or == 0;
   }
 
   private static int checkHeader(byte[] buf) {

@@ -140,8 +140,10 @@ def test_raw_registers_api_with_estimate_udf(spark, events):
 # sketch codec: JVM encode / decode / estimate vs the numpy codec
 # ---------------------------------------------------------------------------
 
-_SOURCE_FORMATS = ["dense", "sparse", "hlll1", "hlll3", "hlll4", "zstd", "v1"]
-_TARGETS = [("hll", 3), ("hlll", 1), ("hlll", 3), ("hlll", 4)]
+_M_BITS = [0, 1, 2, 3, 4, 5, 8, 16, 32]
+_SOURCE_FORMATS = ["dense", "sparse", *(f"hlll{b}" for b in _M_BITS), "zstd", "v1"]
+_TARGETS = [("hll", 3), *(("hlll", b) for b in _M_BITS)]
+_GROUPED_TARGETS = [("hll", 3), ("hlll", 1), ("hlll", 3), ("hlll", 4)]
 
 
 def _header(version, algo, p, extra=0):
@@ -187,7 +189,7 @@ def _as_format(regs, fmt):
 
 @pytest.fixture(scope="module")
 def codec_cases():
-    """(case id, registers, sketch bytes): p 4-18 x 5 shapes x 7 formats."""
+    """(case id, registers, sketch bytes): p 4-18 x 5 shapes x 13 formats."""
     rng = np.random.default_rng(7)
     cases = []
     for p in range(4, 19):
@@ -232,17 +234,16 @@ def test_jvm_estimate_matches_numpy(spark, codec_cases, codec_df):
         assert got[cid] == pytest.approx(want, rel=1e-12, abs=0, nan_ok=True), cid
 
 
-@pytest.mark.parametrize("algo,m_bits", _TARGETS)
-def test_jvm_grouped_merge_of_mixed_formats(spark, algo, m_bits):
-    """Each group holds sketches of different shapes, each in a different
-    source format; the merge is their register max re-encoded, and does
-    not depend on how the rows are partitioned."""
+def _check_grouped_merge(spark, algo, m_bits, shape_names):
+    """Each group holds sketches of the ``shape_names`` shapes, each in a
+    different source format; the merge is their register max re-encoded,
+    and does not depend on how the rows are partitioned."""
     rng = np.random.default_rng(11)
     rows, want = [], {}
     for p in (4, 10, 14, 18):
         for g in range(3):
             key = f"{p}/{g}"
-            shapes = list(_shapes(p, rng).values())
+            shapes = [r for name, r in _shapes(p, rng).items() if name in shape_names]
             fmts = rng.permutation(_SOURCE_FORMATS)[: len(shapes)]
             rows += [(key, bytearray(_as_format(r, f))) for r, f in zip(shapes, fmts)]
             want[key] = sketch.encode(np.maximum.reduce(shapes), algo, m_bits)
@@ -258,6 +259,173 @@ def test_jvm_grouped_merge_of_mixed_formats(spark, algo, m_bits):
     ]
     assert outs[0] == want
     assert outs[1] == want
+
+
+@pytest.mark.parametrize("algo,m_bits", _GROUPED_TARGETS)
+def test_jvm_grouped_merge_of_mixed_formats(spark, algo, m_bits):
+    _check_grouped_merge(
+        spark, algo, m_bits, {"zero", "sparse", "geometric", "uniform", "saturated"}
+    )
+
+
+@pytest.mark.parametrize("algo,m_bits", _GROUPED_TARGETS)
+def test_jvm_grouped_merge_without_saturated(spark, algo, m_bits):
+    """Every group above contains the saturated shape, so its expected max
+    is all-saturated and would hide a decode that raises a register."""
+    _check_grouped_merge(spark, algo, m_bits, {"zero", "sparse", "geometric", "uniform"})
+
+
+@pytest.mark.parametrize("algo,m_bits", [("hll", 3), ("hlll", 3)])
+def test_jvm_hlll_base_above_zero_exceptions_merge_into_zero(spark, algo, m_bits):
+    """An HLLL sketch with base > 0 whose exceptions are zero registers:
+    merged into a zero accumulator, the zero slots must stay zero (base is
+    not folded into exception slots)."""
+    p = 10
+    rng = np.random.default_rng(5)
+    regs = rng.integers(6, 10, 1 << p).astype(np.uint8)
+    regs[rng.choice(1 << p, size=40, replace=False)] = 0
+    buf = sketch.encode_hlll(regs, 3)
+    base, ns = struct.unpack_from("<BI", buf, 8)
+    assert base == 6 and ns == 40
+    df = _sketch_rows(spark, [(1, buf)])
+    got = agg.merge_sketches(df, ["k"], algo=algo, m_bits=m_bits).first()
+    assert bytes(got["sketch"]) == sketch.encode(regs, algo, m_bits)
+    est = agg.with_estimate(df).first()["distinct_estimate"]
+    assert est == pytest.approx(hll.estimate(regs), rel=1e-12)
+
+
+# ---------------------------------------------------------------------------
+# sketch_by's partial build (HllSketchPartials + HllSketchMergeAggregator)
+# ---------------------------------------------------------------------------
+
+def _sketches(df, keys):
+    return {
+        tuple(bytes(r[k]) if isinstance(r[k], bytearray) else r[k] for k in keys):
+        bytes(r["sketch"])
+        for r in df.collect()
+    }
+
+
+@pytest.fixture(scope="module")
+def keyed(spark):
+    """Rows with a nullable string key, an int key, a binary key and a few
+    null values, spread over several partitions."""
+    rng = np.random.default_rng(3)
+    rows = []
+    for i in range(3000):
+        k = int(rng.integers(0, 9))
+        rows.append((
+            None if k == 0 else f"k{k}",
+            i % 4,
+            bytearray(b"b%d" % (k % 5)),
+            None if i % 97 == 0 else int(rng.integers(0, 2000)),
+        ))
+    return spark.createDataFrame(rows, "s string, n int, b binary, v long").repartition(5)
+
+
+@pytest.mark.parametrize("keys", [["s"], []])
+def test_partials_plan_has_no_python_and_no_row_aggregate(spark, keyed, keys):
+    """The build is the partial step (the plan's one RDD scan: key-less
+    input's empty seed sketch is a literal, not a Python RDD) and the merge
+    aggregate over its sketches; no aggregate reads the hashes."""
+    plan = _plan(agg.sketch_by(keyed, "v", keys, p=12, algo="hlll", impl="jvm"))
+    assert "Python" not in plan
+    assert plan.count("ExistingRDD") == 1, plan
+    aggs = [line for line in plan.splitlines() if "ObjectHashAggregate" in line]
+    assert aggs and all("hllspark_merge_hlll_3" in line for line in aggs), plan
+    assert agg._HASH_COL not in plan
+
+
+@pytest.mark.parametrize("keys", [["s"], ["b"], ["s", "n"], ["b", "n", "s"]])
+def test_partials_keys_byte_identical_to_sql(spark, keyed, keys):
+    """Null keys form a group; binary keys group by content; multi-column
+    keys."""
+    def build(impl):
+        return _sketches(agg.sketch_by(keyed, "v", keys, p=10, algo="hlll", impl=impl), keys)
+
+    got = build("jvm")
+    assert got == build("sql")
+    if keys == ["s"]:
+        assert (None,) in got
+
+
+def test_partials_forced_flush_byte_identical(spark, keyed):
+    """With the fallback threshold at 1 the register budget is 2^18 B, one
+    p = 18 buffer, so the map flushes after every row; the merged sketches
+    cannot tell."""
+    p, keys = 18, ["s", "n"]
+    conf = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "1")
+    try:
+        projected = keyed.where(F.col("v").isNotNull()).select(
+            *keys, F.xxhash64("v").alias(agg._HASH_COL)
+        )
+        n_partials = jvmagg.sketch_partials(projected, p, "sketch").count()
+        got = _sketches(agg.sketch_by(keyed, "v", keys, p=p, algo="hlll", impl="jvm"), keys)
+    finally:
+        spark.conf.set(conf, old)
+    assert n_partials == projected.count()
+    assert got == _sketches(agg.sketch_by(keyed, "v", keys, p=p, algo="hlll", impl="sql"), keys)
+
+
+def test_partials_budget_counts_keys_and_entries_at_low_p(spark):
+    """At p = 4 a group's registers are 16 B; its key and map entry cost
+    more, and the budget counts them.  One task reads keys 0..n-1 twice:
+    with the fallback threshold at 1 (a 2^18 B budget, 16384 register
+    buffers) the map flushes before any key repeats, so every row is its
+    own partial; at the default threshold it holds all n groups."""
+    n, p = 4000, 4
+    projected = spark.range(0, 2 * n, numPartitions=1).select(
+        (F.col("id") % n).alias("k"), F.xxhash64("id").alias(agg._HASH_COL)
+    )
+    conf = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
+    old = spark.conf.get(conf)
+    try:
+        spark.conf.set(conf, "1")
+        flushed = jvmagg.sketch_partials(projected, p, "sketch")
+        n_flushed = flushed.count()
+        got = _sketches(agg.merge_sketches(flushed, ["k"]), ["k"])
+    finally:
+        spark.conf.set(conf, old)
+    assert n_flushed == 2 * n
+    assert jvmagg.sketch_partials(projected, p, "sketch").count() == n
+    want = _sketches(
+        agg.sketch_by(projected.withColumnRenamed(agg._HASH_COL, "h"), "h", ["k"],
+                      p=p, hash_mode="prehashed", impl="sql"),
+        ["k"],
+    )
+    assert got == want
+
+
+def test_partials_build_runs_nothing_until_an_action(spark, keyed):
+    """Over an input with a shuffle (adaptive execution runs its stages
+    when the plan is executed), sketch_by and explain start no job; the
+    first action runs the input and the build."""
+    sc = spark.sparkContext
+    shuffled = keyed.groupBy("s", "n").agg(F.max("v").alias("v"))
+    group = "hllspark-partials-lazy"
+    sc.setJobGroup(group, "lazy build")
+    try:
+        built = agg.sketch_by(shuffled, "v", ["s"], p=10, algo="hlll", impl="jvm")
+        built.explain()
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        got = _sketches(built, ["s"])
+        assert sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert got == _sketches(
+        agg.sketch_by(shuffled, "v", ["s"], p=10, algo="hlll", impl="sql"), ["s"]
+    )
+
+
+@pytest.mark.parametrize("impl", ["jvm", "pandas"])
+@pytest.mark.parametrize("algo,m_bits", [("hll", 3), ("hlll", 0), ("hlll", 3)])
+def test_partials_keyless_empty_input_is_empty_sketch(spark, algo, m_bits, impl):
+    df = spark.createDataFrame([], "v long")
+    rows = agg.sketch_by(df, "v", p=10, algo=algo, m_bits=m_bits, impl=impl).collect()
+    assert len(rows) == 1
+    assert bytes(rows[0]["sketch"]) == sketch.encode(hll.empty(10), algo, m_bits)
 
 
 # ---------------------------------------------------------------------------
