@@ -18,9 +18,14 @@ fallbackThreshold (128) groups per task and then sorts every remaining
 row of the task: HllSketchPartials (mapPartitions) keeps a register map
 per task over Spark's internal rows (UnsafeRow keys), charging each group
 its register, key and entry bytes against that threshold x 2^18 B, and
-emits one hll partial per (group, task) and flush;
-HllSketchMergeAggregator merges them by key.  Same plan shape as
-impl='pandas' below, with no Python.
+emits one hll partial per (group, task) and flush.  Keyed partials are
+then exchanged by key, sorted, and merged one group at a time
+(HllSketchStreamMerge: adjacent equal keys fold into one register
+buffer, encoded once), so neither step is an ObjectHashAggregate and
+neither has a fallback cliff; the keys are float-normalized before the
+partial step, as groupBy normalizes them.  Key-less partials (one group)
+merge with HllSketchMergeAggregator.  Same plan shape as impl='pandas'
+below, with no Python.
 
 impl='sql' — everything hot stays in the JVM / whole-stage codegen:
 
@@ -31,7 +36,7 @@ impl='sql' — everything hot stays in the JVM / whole-stage codegen:
                                         # shuffle carries <= m rows per key per
                                         # map task regardless of input size
       -> r = clz(w) + 1 (bit-smear + bit_count, pure integer exprs — no UDF)
-      -> groupBy(keys).applyInPandas(assemble)  # <= m tiny (j, r) rows per
+      -> groupBy(keys).applyInArrow(assemble)   # <= m tiny (j, r) rows per
                                         # group -> one serialized sketch row
 
     Measured ~66M rows/s on local[32] vs ~3M rows/s for the Arrow/pandas
@@ -44,8 +49,10 @@ impl='sql' — everything hot stays in the JVM / whole-stage codegen:
     pytest parity tests).
 
 impl='pandas' — per-partition vectorized build via mapInPandas
-(np.maximum.at scatter), one sketch row per (partition, key), then a
-grouped-agg merge.  Required for hash_mode='farmhash' (reference parity —
+(np.maximum.at scatter), one sketch row per (partition, key), then the
+jvm plan's merge (the stream merge on a jar session, else a grouped-agg
+merge).  Float keys cross pandas as strings: a pandas float column holds
+NaN and NULL alike.  Required for hash_mode='farmhash' (reference parity —
 the hash itself runs in numpy).  At high key cardinality it holds #keys x
 2^p register bytes per task; the jvm plan bounds that memory instead and
 flushes extra partials, so it needs no rule of thumb on #keys.
@@ -57,10 +64,11 @@ SQL expression) and merging is an exact max.
 Sketch tables (encode, merge, estimate): with the jar on the session, the
 serialized-sketch operators run in the JVM too, through the HLSK codec in
 java/src/hllspark/HllSketchCodec.java (byte-identical to hllspark.sketch).
-sketch_by's merges (both partial plans), merge_sketches and
-estimate_grouping_sets (sketch_rollup / sketch_cube) use
-HllSketchMergeAggregator, which decodes any format into an m-byte buffer
-and aggregates partially; with_estimate and every estimate of sketch bytes
+sketch_by's keyed merges (both partial plans) use the stream merge;
+its key-less merge, merge_sketches and estimate_grouping_sets
+(sketch_rollup / sketch_cube) use HllSketchMergeAggregator, which decodes
+any format into an m-byte buffer and aggregates partially, since their
+inputs collapse map-side; with_estimate and every estimate of sketch bytes
 is the HllSketchEstimate function (_merge_column / _estimate_column
 choose).  The pandas UDFs over the numpy codec still run on sessions
 without the jar, for 'hllzstd' encodes (only pyarrow's zstd reproduces its
@@ -68,7 +76,8 @@ frames byte for byte), and in farmhash builds (whose hashing is numpy);
 the numpy codec is also the parity reference the JVM one is tested
 against.  Measured on sketch_rollup (4 vCPUs, interleaved pairs):
 vs_builtin 2.24 -> 1.12 with the JVM codec (PLANS.md §55), then below 1.0
-with the map-side partial build (§56).
+with the map-side partial build (§56) and lower again with the stream
+merge (§57).
 
 Hash modes:
     'xxhash64'  — production default: hashing in the JVM (codegen'd).
@@ -81,9 +90,11 @@ Hash modes:
 
 Skew: with impl='sql', map-side partial aggregation absorbs hot keys by
 construction.  sketch_by's partial plans (jvm and pandas) emit about one
-row per key and partition, so reducer fan-in is bounded by #partitions;
-``salt_buckets`` adds an intermediate merge level for extreme partition
-counts (north_rule).
+row per key and partition, so a hot key sends the stream merge one
+reducer about #partitions rows, folded in one pass over a single register
+buffer; ``salt_buckets`` adds an intermediate merge level for extreme
+partition counts (north_rule): the same merge by (keys, salt), then by
+keys.
 """
 
 from __future__ import annotations
@@ -94,15 +105,20 @@ from typing import Iterator, Sequence
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
+    ArrayType,
     BinaryType,
     ByteType,
     DoubleType,
+    FloatType,
     IntegerType,
     LongType,
+    MapType,
     ShortType,
+    StructType,
 )
 
 from . import hll as _hll
@@ -466,11 +482,18 @@ def _raw_registers_jvm(df, value_col, keys, p, hash_mode, key_encode=None,
 
 
 def _assemble_sketches(df, maxed, keys, p, algo, m_bits):
-    """groupBy(keys).applyInPandas over maxed (j, r) rows derived from
+    """groupBy(keys).applyInArrow over maxed (j, r) rows derived from
     ``df`` — at most m tiny rows per group reach Python regardless of input
-    size."""
+    size.  Arrow, not pandas: the keys go back as they came, where pandas
+    holds NaN and NULL alike and a NaN key would come back NULL."""
     out_schema = _sketch_schema(df, keys)
     group_cols = list(keys) if keys else [_GLOBAL_KEY]
+    # Arrow checks nested nullability, and a DDL type is nullable all the
+    # way down: the keys go in as the types they come back as
+    maxed = maxed.select(
+        *[F.col(k).cast(df.schema[k].dataType.simpleString()).alias(k) for k in keys],
+        _J_COL, _R_COL,
+    )
     if not keys:
         # seed one (j=0, r=0) row so the assembly group exists even on empty
         # input (r=0 never survives a real max: r >= 1 by construction)
@@ -482,40 +505,75 @@ def _assemble_sketches(df, maxed, keys, p, algo, m_bits):
             )
         )
 
-    def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
+    def assemble(table: pa.Table) -> pa.Table:
         regs = np.zeros(1 << p, dtype=np.uint8)
         # maximum (not assignment): the global seed row may duplicate j=0
         np.maximum.at(
             regs,
-            pdf[_J_COL].to_numpy().astype(np.int64),
-            pdf[_R_COL].to_numpy().astype(np.uint8),
+            table.column(_J_COL).to_numpy().astype(np.int64),
+            table.column(_R_COL).to_numpy().astype(np.uint8),
         )
-        out = pdf.iloc[:1][list(keys)].copy() if keys else pd.DataFrame(index=[0])
-        out[_SKETCH_COL] = [_sketch.encode(regs, algo, m_bits)]
-        return out
+        sketch = pa.array([_sketch.encode(regs, algo, m_bits)], pa.binary())
+        return table.select(list(keys)).slice(0, 1).append_column(_SKETCH_COL, sketch)
 
-    assembled = maxed.groupBy(*group_cols).applyInPandas(assemble, schema=out_schema)
+    assembled = maxed.groupBy(*group_cols).applyInArrow(assemble, schema=out_schema)
     if not keys:
         return assembled.select(_SKETCH_COL)
     return assembled
 
 
+def _sortable(dt) -> bool:
+    """False for a map anywhere in ``dt``: groupBy takes map keys, a sort
+    does not."""
+    if isinstance(dt, MapType):
+        return False
+    if isinstance(dt, StructType):
+        return all(_sortable(f.dataType) for f in dt.fields)
+    if isinstance(dt, ArrayType):
+        return _sortable(dt.elementType)
+    return True
+
+
 def _sketch_by_partials(df, value_col, keys, p, algo, m_bits, hash_mode, impl,
                         salt_buckets):
-    """Per-task partial sketches, then one merge per group (_merge_column).
-    The partial step is the jar's HllSketchPartials for impl='jvm' (a
-    register map per task, hll partials) and a mapInPandas numpy build for
-    impl='pandas' (``algo`` partials)."""
+    """Per-task partial sketches, then one merge per group.  The partial
+    step is the jar's HllSketchPartials for impl='jvm' (a register map per
+    task, hll partials) and a mapInPandas numpy build for impl='pandas'
+    (``algo`` partials).
+
+    The merge is chosen here, on the partials: keyed partials on a jar
+    session are exchanged by key, sorted and merged one group at a time in
+    the jar (jvmagg.stream_merge), over keys float-normalized before the
+    partial step as groupBy would; key-less partials (one group), and
+    those the jar cannot merge (no jar, an 'hllzstd' target, map keys),
+    are merged by an aggregate (_merge_column)."""
+    stream = bool(keys) and (
+        algo in ("hll", "hlll")
+        and jvmagg.is_available(df.sparkSession)
+        and all(_sortable(df.schema[k].dataType) for k in keys)
+    )
     if hash_mode == "farmhash":  # raw values go to Python
         projected = df.select(*keys, value_col)
     else:
         filtered, v = _hashed(df, value_col, hash_mode)
         projected = filtered.select(*keys, v.alias(_HASH_COL))
+    if stream:
+        projected = jvmagg.normalize_keys(projected, len(keys))
 
     if impl == "jvm":
         partials = jvmagg.sketch_partials(projected, p, _SKETCH_COL)
     else:
-        partials = projected.mapInPandas(
+        # pandas holds NaN and NULL alike in a float column (and writes NaN
+        # back as NULL), so float keys cross it as their exact string form
+        floats = {
+            k: df.schema[k].dataType for k in keys
+            if isinstance(df.schema[k].dataType, (FloatType, DoubleType))
+        }
+        as_text = projected.select(
+            *[F.col(c).cast("string").alias(c) if c in floats else c
+              for c in projected.columns]
+        )
+        partials = as_text.mapInPandas(
             _make_build_partials(
                 keys, p, algo, m_bits, hash_mode, value_col,
                 int_dtype=isinstance(
@@ -523,22 +581,30 @@ def _sketch_by_partials(df, value_col, keys, p, algo, m_bits, hash_mode, impl,
                     (ByteType, ShortType, IntegerType, LongType),
                 ),
             ),
-            schema=_sketch_schema(df, keys),
+            schema=_sketch_schema(as_text, keys),
         )
-    merged = _merge_column(df, _SKETCH_COL, algo, m_bits)
+        partials = partials.select(
+            *[F.col(c).cast(floats[c]).alias(c) if c in floats else c
+              for c in partials.columns]
+        )
     if not keys:  # both merges give NULL over no partials: empty input
         empty = bytearray(_sketch.encode(_hll.empty(p), algo, m_bits))
+        merged = _merge_column(df, _SKETCH_COL, algo, m_bits)
         return partials.agg(F.coalesce(merged, F.lit(empty)).alias(_SKETCH_COL))
-    merged = merged.alias(_SKETCH_COL)
+
+    def merge(parts):  # every column but the last, the sketch, is a key
+        if stream:
+            return jvmagg.stream_merge(parts, algo, m_bits)
+        merged = _merge_column(df, _SKETCH_COL, algo, m_bits).alias(_SKETCH_COL)
+        return parts.groupBy(*parts.columns[:-1]).agg(merged)
+
     if salt_buckets and salt_buckets > 1:
         # 3-level tree: partial -> salted merge -> final (north_rule skew
         # handling: bounds fan-in per reducer to #partitions/buckets)
-        salted = partials.withColumn(
-            "__salt", F.spark_partition_id() % F.lit(salt_buckets)
-        )
-        mid = salted.groupBy(*keys, "__salt").agg(merged)
-        return mid.groupBy(*keys).agg(merged)
-    return partials.groupBy(*keys).agg(merged)
+        salt = (F.spark_partition_id() % F.lit(salt_buckets)).alias("__salt")
+        mid = merge(partials.select(*keys, salt, _SKETCH_COL))
+        return merge(mid.drop("__salt"))
+    return merge(partials)
 
 
 def sketch_by(

@@ -19,16 +19,20 @@ HllSketchPartials keeps a per-task hash map from key to register
 buffer, bounded by the same threshold x 2^18 B (the most dense register
 memory ObjectHashAggregate holds per task at any p; each group is
 charged its register, key and map-entry bytes), and streams one HLSK hll
-partial per (group, task), which HllSketchMergeAggregator merges by key
-(sketch_partials).
+partial per (group, task) (sketch_partials).  The partials' merge is no
+ObjectHashAggregate either, because that merge would hit the same
+threshold: HllSketchStreamMerge exchanges them by key, sorts, and folds
+each run of equal keys into one register buffer (stream_merge), over keys
+normalized first as groupBy normalizes them (normalize_keys).
 
 The jar also carries the HLSK sketch codec (HllSketchCodec, byte-identical
 to hllspark.sketch for hll and hlll), so sketch tables need no Python
 stage: HllSketchMergeAggregator merges sketches of any format with
-partial aggregation (sketch_by's merge step, merge_sketches,
-sketch_rollup / sketch_cube) and the HllSketchEstimate function
-estimates them (with_estimate).  The pandas UDFs of hllspark.agg remain
-for sessions without the jar, 'hllzstd' encodes and farmhash builds.
+partial aggregation (sketch_by's key-less merge, merge_sketches,
+sketch_rollup / sketch_cube, whose inputs collapse map-side) and the
+HllSketchEstimate function estimates them (with_estimate).  The pandas
+UDFs of hllspark.agg remain for sessions without the jar, 'hllzstd'
+encodes and farmhash builds.
 
 Availability: the pre-built jar ships at hllspark/jars/hllspark-jvm.jar
 (source + build script under java/); it must be on the DRIVER classpath at
@@ -104,8 +108,8 @@ def is_available(spark: SparkSession) -> bool:
 # register bytes out (hllzstd sketch_by, rolling_distinct's build); 'est' bigint hash in, double estimate out (approx_distinct);
 # 'merge_est' raw register bytes in, register-wise max, double estimate
 # out (rolling_distinct); 'merge' serialized sketches in, register-wise
-# max, serialized hll/hlll sketch out (sketch_by's merge step,
-# merge_sketches, rollup / cube).
+# max, serialized hll/hlll sketch out (sketch_by's key-less merge,
+# merge_sketches, rollup / cube; sketch_by's keyed merge is stream_merge).
 _AGGREGATORS = {
     "regs": ("HllRegAggregator", "LONG"),
     "est": ("HllEstimateAggregator", "LONG"),
@@ -175,6 +179,29 @@ def sketch_partials(df: DataFrame, p: int, sketch_col: str) -> DataFrame:
         df._jdf, p, sketch_col
     )
     return DataFrame(jdf, df.sparkSession)
+
+
+def normalize_keys(df: DataFrame, n_keys: int) -> DataFrame:
+    """``df`` with its first ``n_keys`` columns float-normalized the way
+    ``groupBy`` normalizes its keys (one NaN, 0.0 for -0.0, inside structs
+    and arrays too), for a plan that groups by a hash exchange instead."""
+    _require(df.sparkSession)
+    jdf = df.sparkSession._jvm.hllspark.HllSketchStreamMerge.normalizeKeys(
+        df._jdf, n_keys
+    )
+    return DataFrame(jdf, df.sparkSession)
+
+
+def stream_merge(partials: DataFrame, algo: str, m_bits: int) -> DataFrame:
+    """One ``algo`` sketch per key of ``partials`` (key columns, then a
+    sketch column of any format last): exchanged by key, sorted, and each
+    run of equal keys merged in the jar (HllSketchStreamMerge).  Lazy like
+    sketch_partials."""
+    _require(partials.sparkSession)
+    jdf = partials.sparkSession._jvm.hllspark.HllSketchStreamMerge.build(
+        partials._jdf, algo, m_bits
+    )
+    return DataFrame(jdf, partials.sparkSession)
 
 
 def merge_agg_column(spark: SparkSession, sketch_col: str, algo: str,

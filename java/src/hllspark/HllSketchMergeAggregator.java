@@ -8,7 +8,12 @@ import org.apache.spark.sql.expressions.Aggregator;
  * Register-wise max merge of serialized sketches (any format
  * {@link HllSketchCodec} decodes), re-encoded to hll or hlll: the
  * merge_sketches / rollup half of the sketch monoid (reference
- * HyperLogLog.hpp:124-131, HyperLogLogLog.hpp:192-283).
+ * HyperLogLog.hpp:124-131, HyperLogLogLog.hpp:192-283), and the merge of
+ * sketch_by's key-less partials.  Planned as ObjectHashAggregate, it holds
+ * 128 buffers per task before it sorts, which suits inputs that collapse
+ * map-side (a rollup read has about one row per coarse group and task);
+ * sketch_by's keyed partials, one per (fine group, task), go through
+ * {@link HllSketchStreamMerge} instead.
  *
  * <p>The buffer is the dense register array, sized by the first sketch's
  * header, so Spark aggregates partially and the shuffle carries one

@@ -32,9 +32,9 @@ import scala.reflect.ClassTag$;
  * sketch_by's map-side partial build: per task, a hash map from key row to
  * a dense register buffer, one {@link HllRegOps#update} per input row, and
  * each group streamed out as an HLSK hll sketch.  {@link
- * HllSketchMergeAggregator} then merges the partials by key, so the plan is
- * this partial step, then a partial + final merge aggregate over about one
- * row per (group, map task).
+ * HllSketchStreamMerge} then merges keyed partials (about one row per
+ * (group, map task)) by an exchange and a sort, and {@link
+ * HllSketchMergeAggregator} merges key-less ones.
  *
  * <p>ObjectHashAggregate, which a register aggregate over the input rows
  * would be planned as, holds at most
@@ -50,8 +50,9 @@ import scala.reflect.ClassTag$;
  * and returns them through {@code internalCreateDataFrame}, so no row is
  * converted to an external {@code Row}: a key is its UnsafeRow bytes, which
  * hash and compare without decoding strings or dates.  Keys Spark groups
- * as equal but whose bytes differ (-0.0 and 0.0) land in separate partials,
- * which the merge joins.  Both calls are Spark internals, so the jar is
+ * as equal but whose bytes differ (a collation's 'a' and 'A'; -0.0 and 0.0
+ * unless normalized first) land in separate partials, which the merge
+ * joins.  Both calls are Spark internals, so the jar is
  * built against the Spark it runs on (java/build.sh).  {@code toRdd()}
  * runs an adaptive plan's shuffle stages, so {@link InputRows} defers it to
  * the first action: building the step runs nothing.
@@ -162,7 +163,7 @@ public final class HllSketchPartials implements FlatMapFunction<Iterator<Interna
    * runs, so {@code toRdd()} (and any adaptive shuffle stage of the input)
    * runs there; tasks read the planned RDD.
    */
-  private static final class InputRows extends RDD<InternalRow> {
+  static final class InputRows extends RDD<InternalRow> {
     private transient Dataset<Row> in;
     private RDD<InternalRow> rows;
 

@@ -298,12 +298,29 @@ def test_jvm_hlll_base_above_zero_exceptions_merge_into_zero(spark, algo, m_bits
 # sketch_by's partial build (HllSketchPartials + HllSketchMergeAggregator)
 # ---------------------------------------------------------------------------
 
+def _key_bits(v):
+    """A key value with floats as their bit patterns, so 0.0 and -0.0, and
+    NaNs of different payloads, compare apart; rows (struct keys) field by
+    field."""
+    if isinstance(v, float):
+        return struct.pack(">d", v).hex()
+    if isinstance(v, bytearray):
+        return bytes(v)
+    if isinstance(v, tuple):
+        return tuple(_key_bits(x) for x in v)
+    return v
+
+
 def _sketches(df, keys):
-    return {
-        tuple(bytes(r[k]) if isinstance(r[k], bytearray) else r[k] for k in keys):
-        bytes(r["sketch"])
-        for r in df.collect()
-    }
+    """{key bits: sketch bytes}; a key output twice fails."""
+    rows = df.collect()
+    out = {tuple(_key_bits(r[k]) for k in keys): bytes(r["sketch"]) for r in rows}
+    assert len(out) == len(rows), "a key was output twice"
+    return out
+
+
+def _group_by_keys(df, keys):
+    return {tuple(_key_bits(r[k]) for k in keys) for r in df.groupBy(*keys).count().collect()}
 
 
 @pytest.fixture(scope="module")
@@ -325,14 +342,19 @@ def keyed(spark):
 
 @pytest.mark.parametrize("keys", [["s"], []])
 def test_partials_plan_has_no_python_and_no_row_aggregate(spark, keyed, keys):
-    """The build is the partial step (the plan's one RDD scan: key-less
-    input's empty seed sketch is a literal, not a Python RDD) and the merge
-    aggregate over its sketches; no aggregate reads the hashes."""
+    """No Python and no aggregate over the hashes.  Keyed, the plan is the
+    stream merge's one RDD scan, with no ObjectHashAggregate (its input,
+    the partials exchanged and sorted by key, is planned at the first
+    action).  Key-less, it is the partial step's scan (the empty seed
+    sketch is a literal, not a Python RDD) and the merge aggregate."""
     plan = _plan(agg.sketch_by(keyed, "v", keys, p=12, algo="hlll", impl="jvm"))
     assert "Python" not in plan
     assert plan.count("ExistingRDD") == 1, plan
     aggs = [line for line in plan.splitlines() if "ObjectHashAggregate" in line]
-    assert aggs and all("hllspark_merge_hlll_3" in line for line in aggs), plan
+    if keys:
+        assert not aggs, plan
+    else:
+        assert aggs and all("hllspark_merge_hlll_3" in line for line in aggs), plan
     assert agg._HASH_COL not in plan
 
 
@@ -417,6 +439,99 @@ def test_partials_build_runs_nothing_until_an_action(spark, keyed):
     assert got == _sketches(
         agg.sketch_by(shuffled, "v", ["s"], p=10, algo="hlll", impl="sql"), ["s"]
     )
+
+
+@pytest.mark.parametrize("impl", ["jvm", "pandas"])
+def test_salted_merge_byte_identical(spark, keyed, impl):
+    """salt_buckets runs the keyed merge twice, by (keys, salt), then by
+    keys; the sketches equal the unsalted build's and impl='sql''s."""
+    keys = ["s", "n"]
+
+    def build(impl, salt_buckets=0):
+        return _sketches(agg.sketch_by(keyed, "v", keys, p=10, algo="hlll", impl=impl,
+                                       salt_buckets=salt_buckets), keys)
+
+    salted = build(impl, salt_buckets=3)
+    assert salted == build(impl)
+    assert salted == build("sql")
+
+
+_NAN2 = struct.unpack(">d", bytes.fromhex("7ff8000000000001"))[0]
+
+
+@pytest.fixture(scope="module")
+def float_keyed(spark):
+    """A double key over 0.0, -0.0, NaN under two bit patterns, NULL and
+    2.5, and a struct key holding it, spread round-robin over 5
+    partitions."""
+    values = [0.0, -0.0, float("nan"), _NAN2, None, 2.5]
+    rows = [(values[i % len(values)], i) for i in range(1200)]
+    df = spark.createDataFrame(rows, "d double, v long").repartition(5)
+    return df.withColumn("s", F.struct(F.col("d").alias("x"), (F.col("v") % 2).alias("y")))
+
+
+@pytest.mark.parametrize("keys", [["d"], ["s"], ["s", "d"]])
+def test_float_keys_merge_like_group_by(spark, float_keyed, keys):
+    """The stream merge groups by a hash exchange and a sort, which do not
+    normalize floats as groupBy does; sketch_by normalizes its keys first,
+    so its key set (bit for bit: 0.0, one NaN) is groupBy's and the
+    sketches are impl='sql''s."""
+    got = _sketches(agg.sketch_by(float_keyed, "v", keys, p=10, algo="hlll", impl="jvm"), keys)
+    assert set(got) == _group_by_keys(float_keyed, keys)
+    assert got == _sketches(agg.sketch_by(float_keyed, "v", keys, p=10, algo="hlll", impl="sql"), keys)
+
+
+def test_float_keys_output_normalized(spark):
+    """Only -0.0 and a non-canonical NaN: groupBy outputs 0.0 and the
+    canonical NaN, and so does sketch_by, whichever rows reach a reducer
+    first."""
+    rows = [(-0.0 if i % 2 else _NAN2, i) for i in range(200)]
+    df = spark.createDataFrame(rows, "d double, v long").repartition(4)
+    want = {(struct.pack(">d", 0.0).hex(),), (struct.pack(">d", float("nan")).hex(),)}
+    assert _group_by_keys(df, ["d"]) == want
+    for impl in ("jvm", "pandas"):
+        assert set(_sketches(agg.sketch_by(df, "v", ["d"], p=8, impl=impl), ["d"])) == want
+
+
+@pytest.mark.parametrize("impl,jar", [("sql", True), ("sql", False), ("pandas", True),
+                                      ("pandas", False), ("jvm", True)])
+def test_nan_key_is_its_own_group(spark, monkeypatch, impl, jar):
+    """On k double over NaN, NULL and 2.0, every plan returns groupBy's
+    three keys and the sketches of those three groups.  Keys that cross
+    pandas lose NaN to NULL, so no plan sends them through it as floats."""
+    rows = [(k, i) for i, k in enumerate([float("nan"), None, 2.0] * 40)]
+    df = spark.createDataFrame(rows, "k double, v long").repartition(4)
+    if not jar:  # as on a session without the jar
+        monkeypatch.setattr(jvmagg, "is_available", lambda _spark: False)
+    got = _sketches(agg.sketch_by(df, "v", ["k"], p=8, impl=impl), ["k"])
+    assert set(got) == _group_by_keys(df, ["k"])
+    # the same groups under an int code, which no plan can confuse
+    code = F.when(F.isnan("k"), 0).when(F.col("k").isNull(), 1).otherwise(2)
+    by_code = _sketches(agg.sketch_by(df.withColumn("c", code), "v", ["c"], p=8, impl="sql"), ["c"])
+    nan, two = (struct.pack(">d", x).hex() for x in (float("nan"), 2.0))
+    assert got == {(nan,): by_code[(0,)], (None,): by_code[(1,)], (two,): by_code[(2,)]}
+
+
+def test_merge_keys_group_like_group_by(spark):
+    """Keys the sort calls equal but whose bytes differ (a case-insensitive
+    collation) fold into one group; map keys, which groupBy takes and no
+    sort does, keep the aggregate merge."""
+    rows = [("a", {"a": 1, "b": i % 3}, i) for i in range(60)]
+    rows += [("A", {"b": i % 3, "a": 1}, i) for i in range(60, 120)]
+    df = spark.createDataFrame(rows, "s string, m map<string, int>, v long").repartition(4)
+    lcase = df.withColumn("s", F.col("s").cast("string collate UTF8_LCASE"))
+    got = agg.sketch_by(lcase, "v", ["s"], p=8, impl="jvm").collect()
+    assert len(got) == 1
+    assert bytes(got[0]["sketch"]) == bytes(agg.sketch_by(df, "v", p=8, impl="jvm").first()["sketch"])
+
+    def by_map(impl):
+        return {
+            tuple(sorted(r["m"].items())): bytes(r["sketch"])
+            for r in agg.sketch_by(df, "v", ["m"], p=8, impl=impl).collect()
+        }
+
+    got = by_map("jvm")
+    assert len(got) == 3 and got == by_map("sql")
 
 
 @pytest.mark.parametrize("impl", ["jvm", "pandas"])
