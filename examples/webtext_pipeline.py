@@ -79,16 +79,18 @@ def main() -> int:
     pii = curation.pii_features(kept)
     n_pii = pii.agg(F.sum("pii_total")).collect()[0][0]
     assert n_pii == 0, f"unexpected PII in synthetic corpus: {n_pii}"
+    # kept, deduped, train and balanced each feed many of the actions
+    # below; cached, each is computed once instead of once per action
     kept = pii.withColumn("text", F.col("redacted")).drop(
         "redacted", "n_emails", "n_phones", "n_ipv4", "pii_total"
-    )
+    ).cache()
 
     # 3. dedup: exact first (collapses identical docs cheaply), then
     # near-dup clusters over a bounded slice — MinHash+LSH pairs (bucket-
     # capped self-join) -> connected components -> keep one representative
     deduped = dedup.deduplicate_exact(
         kept.withColumn("doc_id", F.xxhash64("url")), "text", "doc_id"
-    )
+    ).cache()
     near_slice = deduped.where(F.abs(F.col("doc_id")) % 50 == 0)
     near_deduped_slice = dedup.deduplicate_near(near_slice, threshold=0.8)
     n_near_removed = near_slice.count() - near_deduped_slice.count()
@@ -124,6 +126,7 @@ def main() -> int:
     # 4b. curation ops (round 3): deterministic train/val/test split,
     # eval-decontamination of the train shard, BM25 spot-ranking
     train, val, test_split = sampling.split(deduped, "url", [0.9, 0.05, 0.05])
+    train = train.cache()
     n_train, n_val, n_test = train.count(), val.count(), test_split.count()
     assert n_train + n_val + n_test == deduped.count()
     contaminated = (
@@ -177,7 +180,7 @@ def main() -> int:
     ).drop("host")
     balanced = sampling.mixture_sample(
         capped, "lang", "url", {"en": 0.5, "de": 0.3, "fr": 0.2}, seed=11
-    )
+    ).cache()
     lm = curation.lm_perplexity_scores(
         balanced.withColumn("did", F.xxhash64("url")), id_col="did"
     )

@@ -10,12 +10,13 @@ impl='jvm' — dense byte[m] register buffers in the JVM (java/src/hllspark
 via hllspark.jvmagg): per input row just hash + two shifts + clz + array
 max — the same imperative-buffer strategy as Spark's built-in
 approx_count_distinct, and measured at ~1x its throughput (vs ~3x slower
-for impl='sql').  approx_distinct, rolling_distinct and 'hllzstd' builds
-run it as an ObjectHashAggregate (HllRegAggregator /
-HllEstimateAggregator).  sketch_by runs it map-side instead, because that
-aggregate holds only spark.sql.objectHashAggregate.sortBased.
-fallbackThreshold (128) groups per task and then sorts every remaining
-row of the task: HllSketchPartials (mapPartitions) keeps a register map
+for impl='sql').  approx_distinct (and its grouping-sets and multi-column
+forms) runs it as an ObjectHashAggregate finishing to the estimate
+(HllEstimateAggregator).  sketch_by, and rolling_distinct through it, run
+it map-side instead, because that aggregate holds only
+spark.sql.objectHashAggregate.sortBased.fallbackThreshold (128) groups per
+task and then sorts every remaining row of the task: HllSketchPartials
+(mapPartitions) keeps a register map
 per task over Spark's internal rows (UnsafeRow keys), charging each group
 its register, key and entry bytes against that threshold x 2^18 B, and
 emits one hll partial per (group, task) and flush.  Keyed partials are
@@ -25,7 +26,9 @@ buffer, encoded once), so neither step is an ObjectHashAggregate and
 neither has a fallback cliff; the keys are float-normalized before the
 partial step, as groupBy normalizes them.  Key-less partials (one group)
 merge with HllSketchMergeAggregator.  Same plan shape as impl='pandas'
-below, with no Python.
+below, with no Python for 'hll' and 'hlll'; an 'hllzstd' target merges the
+hll partials with the pandas UDF (only pyarrow's zstd reproduces its
+frames).
 
 impl='sql' — everything hot stays in the JVM / whole-stage codegen:
 
@@ -51,8 +54,9 @@ impl='sql' — everything hot stays in the JVM / whole-stage codegen:
 impl='pandas' — per-partition vectorized build via mapInPandas
 (np.maximum.at scatter), one sketch row per (partition, key), then the
 jvm plan's merge (the stream merge on a jar session, else a grouped-agg
-merge).  Float keys cross pandas as strings: a pandas float column holds
-NaN and NULL alike.  Required for hash_mode='farmhash' (reference parity —
+merge).  Floats in keys, at any depth, cross pandas as strings: a pandas
+float holds NaN and NULL alike.  Struct, array and map keys are grouped
+on as nested tuples.  Required for hash_mode='farmhash' (reference parity —
 the hash itself runs in numpy).  At high key cardinality it holds #keys x
 2^p register bytes per task; the jvm plan bounds that memory instead and
 flushes extra partials, so it needs no rule of thumb on #keys.
@@ -65,14 +69,15 @@ Sketch tables (encode, merge, estimate): with the jar on the session, the
 serialized-sketch operators run in the JVM too, through the HLSK codec in
 java/src/hllspark/HllSketchCodec.java (byte-identical to hllspark.sketch).
 sketch_by's keyed merges (both partial plans) use the stream merge;
-its key-less merge, merge_sketches and estimate_grouping_sets
-(sketch_rollup / sketch_cube) use HllSketchMergeAggregator, which decodes
-any format into an m-byte buffer and aggregates partially, since their
-inputs collapse map-side; with_estimate and every estimate of sketch bytes
-is the HllSketchEstimate function (_merge_column / _estimate_column
-choose).  The pandas UDFs over the numpy codec still run on sessions
-without the jar, for 'hllzstd' encodes (only pyarrow's zstd reproduces its
-frames byte for byte), and in farmhash builds (whose hashing is numpy);
+its key-less merge, merge_sketches, rolling_distinct's window merge and
+estimate_grouping_sets (sketch_rollup / sketch_cube) use
+HllSketchMergeAggregator, which decodes any format into an m-byte buffer
+and aggregates partially, since their inputs collapse map-side;
+with_estimate and every estimate of sketch bytes is the HllSketchEstimate
+function (_merge_column / _estimate_column choose).  The pandas UDFs over
+the numpy codec still run on sessions without the jar, for 'hllzstd'
+encodes (only pyarrow's zstd reproduces its frames byte for byte), and in
+farmhash builds (whose hashing is numpy);
 the numpy codec is also the parity reference the JVM one is tested
 against.  Measured on sketch_rollup (4 vCPUs, interleaved pairs):
 vs_builtin 2.24 -> 1.12 with the JVM codec (PLANS.md §55), then below 1.0
@@ -118,6 +123,8 @@ from pyspark.sql.types import (
     LongType,
     MapType,
     ShortType,
+    StringType,
+    StructField,
     StructType,
 )
 
@@ -191,9 +198,22 @@ def _grouped_scatter_codes(
     return regs
 
 
+def _hashable(v):
+    """A nested key value (a struct's dict, an array's ndarray, a map's
+    pair list) as nested tuples, which pandas can group on and a dict can
+    hold."""
+    if isinstance(v, dict):
+        return tuple((k, _hashable(x)) for k, x in v.items())
+    if isinstance(v, (list, tuple, np.ndarray)):
+        return tuple(_hashable(x) for x in v)
+    return v
+
+
 def _make_build_partials(keys: Sequence[str], p: int, algo: str, m_bits: int,
                          hash_mode: str, value_col: str,
-                         int_dtype: bool = False):
+                         int_dtype: bool = False, nested: Sequence[str] = ()):
+    """``nested``: the keys of a struct, array or map type, grouped on
+    through _hashable; the key rows go out as they came."""
     parity = hash_mode == "farmhash"
 
     def build_partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -214,12 +234,15 @@ def _make_build_partials(keys: Sequence[str], p: int, algo: str, m_bits: int,
             else:
                 hashes = pdf[_HASH_COL].to_numpy().astype(np.int64).view(np.uint64)
             if keys:
-                codes = pdf.groupby(list(keys), dropna=False, sort=False).ngroup().to_numpy()
+                key_df = pdf[list(keys)]
+                view = (key_df.assign(**{k: key_df[k].map(_hashable) for k in nested})
+                        if nested else key_df)
+                codes = view.groupby(list(keys), dropna=False, sort=False).ngroup().to_numpy()
                 uniq_codes, first_idx = np.unique(codes, return_index=True)
                 regs = _grouped_scatter_codes(codes, len(uniq_codes), hashes, p, parity)
-                key_df = pdf[list(keys)].iloc[first_idx]
+                key_df, view = key_df.iloc[first_idx], view.iloc[first_idx]
                 for row_i, code in enumerate(uniq_codes):
-                    kt = tuple(key_df.iloc[row_i])
+                    kt = tuple(view.iloc[row_i])
                     if kt in acc:
                         np.maximum(acc[kt], regs[row_i], out=acc[kt])
                     else:
@@ -270,41 +293,31 @@ def merge_udaf(algo: str = "hll", m_bits: int = 3):
     return F.pandas_udf(_merge, BinaryType())
 
 
-def _raw_regs(b) -> np.ndarray:
-    """Raw dense register bytes (JVM aggregate output) -> uint8 registers."""
-    return np.frombuffer(bytes(b), dtype=np.uint8)
-
-
-def _estimate_series(s: pd.Series, decode) -> pd.Series:
-    """Batched estimates; a NULL sketch estimates to NULL (NaN here, which
-    the Arrow conversion turns into a null)."""
+@F.pandas_udf(DoubleType())
+def estimate_udf(s: pd.Series) -> pd.Series:
+    """Scalar pandas UDF: serialized sketch -> distinct-count estimate,
+    batched; a NULL sketch estimates to NULL (NaN here, which the Arrow
+    conversion turns into a null)."""
     present = s.notna().to_numpy()
     out = np.full(len(s), np.nan)
     if present.any():
-        out[present] = _hll.estimate(np.stack([decode(b) for b in s[present]]))
+        out[present] = _hll.estimate(np.stack([_sketch.decode(b) for b in s[present]]))
     return pd.Series(out)
 
 
-@F.pandas_udf(DoubleType())
-def estimate_udf(s: pd.Series) -> pd.Series:
-    """Scalar pandas UDF: serialized sketch -> distinct-count estimate."""
-    return _estimate_series(s, _sketch.decode)
-
-
-@F.pandas_udf(DoubleType())
-def estimate_raw_udf(s: pd.Series) -> pd.Series:
-    """Scalar pandas UDF: raw dense register bytes -> distinct estimate
-    (same numpy estimator as estimate_udf, so jvm/sql/pandas paths agree)."""
-    return _estimate_series(s, _raw_regs)
+def _jvm_merges(df: DataFrame, algo: str) -> bool:
+    """True when the jar merges into ``algo`` on ``df``'s session: it is on
+    the session and ``algo`` is 'hll' or 'hlll' (an 'hllzstd' target's
+    zstd frames only pyarrow reproduces)."""
+    return algo in ("hll", "hlll") and jvmagg.is_available(df.sparkSession)
 
 
 def _merge_column(df: DataFrame, col: str, algo: str, m_bits: int):
     """Aggregate expression merging the serialized sketches of ``col`` into
     one ``algo`` sketch per group: the JVM HllSketchMergeAggregator (partial
-    aggregation, no Python) when the jar is on ``df``'s session and
-    ``algo`` is 'hll' or 'hlll', else the pandas GROUPED_AGG UDF (no jar,
-    or an 'hllzstd' target, whose zstd frames only pyarrow reproduces)."""
-    if algo in ("hll", "hlll") and jvmagg.is_available(df.sparkSession):
+    aggregation, no Python) where _jvm_merges, else the pandas GROUPED_AGG
+    UDF."""
+    if _jvm_merges(df, algo):
         return jvmagg.merge_agg_column(df.sparkSession, col, algo, m_bits)
     return merge_udaf(algo, m_bits)(F.col(col))
 
@@ -434,28 +447,14 @@ def _approx_distinct_sql(df, value_col, keys, p, hash_mode, estimate_col):
     return maxed.groupBy(*keys).agg(est)
 
 
-def _encode_raw_udf(algo: str, m_bits: int):
-    """Scalar pandas UDF: raw dense register bytes (JVM aggregate output)
-    -> the engine's serialized sketch format.  Runs over one row per group;
-    the jvm plan needs it only for 'hllzstd', whose frames only pyarrow's
-    zstd reproduces (hll / hlll sketches are encoded in the jar)."""
-
-    @F.pandas_udf(BinaryType())
-    def _enc(s: pd.Series) -> pd.Series:
-        return pd.Series([_sketch.encode(_raw_regs(b), algo, m_bits) for b in s])
-
-    return _enc
-
-
-def _raw_registers_jvm(df, value_col, keys, p, hash_mode, key_encode=None,
-                       agg_column=jvmagg.regs_agg_column, alias="__regs"):
+def _approx_distinct_jvm(df, value_col, keys, p, hash_mode, key_encode,
+                         estimate_col):
     """scan -> JVM hash projection -> ObjectHashAggregate with a dense
-    byte[m] register buffer (hllspark.jvmagg) -> one row per group carrying
-    ``agg_column`` as ``alias``: raw registers (regs_agg_column, the
-    default) or the finished estimate (est_agg_column).  Partial
-    aggregation ships one m-byte buffer per (group, map task): the same
-    shuffle shape as the reference's treeAggregate-style build and Spark's
-    own HLL++ (no per-row (keys, j) map probe).
+    byte[m] register buffer finishing to the estimate (hllspark.jvmagg
+    est_agg_column) -> one row per group.  Partial aggregation ships one
+    m-byte buffer per (group, map task): the same shuffle shape as the
+    reference's treeAggregate-style build and Spark's own HLL++ (no
+    per-row (keys, j) map probe).
 
     key_encode='hash64': group on xxhash64 of each key instead of the key
     itself (the key value is carried to the output via FIRST over the
@@ -468,17 +467,17 @@ def _raw_registers_jvm(df, value_col, keys, p, hash_mode, key_encode=None,
     REJECTED: the per-row join probe costs more than the agg probe it
     replaces (3.0s vs 0.8s baseline, PLANS.md §8)."""
     filtered, v = _hashed(df, value_col, hash_mode)
-    regs = agg_column(df.sparkSession, p, _HASH_COL).alias(alias)
+    est = jvmagg.est_agg_column(df.sparkSession, p, _HASH_COL).alias(estimate_col)
     if keys and key_encode == "hash64":
         gks = [f"__gk{i}" for i in range(len(keys))]
         hashed = [F.xxhash64(F.col(k)).alias(g) for k, g in zip(keys, gks)]
         projected = filtered.select(*hashed, *keys, v.alias(_HASH_COL))
         firsts = [F.first(k).alias(k) for k in keys]
-        return projected.groupBy(*gks).agg(*firsts, regs).drop(*gks)
+        return projected.groupBy(*gks).agg(*firsts, est).drop(*gks)
     projected = filtered.select(*keys, v.alias(_HASH_COL))
     if keys:
-        return projected.groupBy(*keys).agg(regs)
-    return projected.agg(regs)  # empty input -> zero() buffer == empty sketch
+        return projected.groupBy(*keys).agg(est)
+    return projected.agg(est)  # empty input -> zero() buffer -> 0.0
 
 
 def _assemble_sketches(df, maxed, keys, p, algo, m_bits):
@@ -534,6 +533,25 @@ def _sortable(dt) -> bool:
     return True
 
 
+def _floats_as_text(dt):
+    """``dt`` with every float and double in it, at any depth, a string:
+    pandas holds NaN and NULL alike in a float (and writes NaN back as
+    NULL), so keys cross it with their floats in exact string form."""
+    if isinstance(dt, (FloatType, DoubleType)):
+        return StringType()
+    if isinstance(dt, StructType):
+        return StructType([
+            StructField(f.name, _floats_as_text(f.dataType), f.nullable, f.metadata)
+            for f in dt.fields
+        ])
+    if isinstance(dt, ArrayType):
+        return ArrayType(_floats_as_text(dt.elementType), dt.containsNull)
+    if isinstance(dt, MapType):
+        return MapType(_floats_as_text(dt.keyType), _floats_as_text(dt.valueType),
+                       dt.valueContainsNull)
+    return dt
+
+
 def _sketch_by_partials(df, value_col, keys, p, algo, m_bits, hash_mode, impl,
                         salt_buckets):
     """Per-task partial sketches, then one merge per group.  The partial
@@ -547,10 +565,8 @@ def _sketch_by_partials(df, value_col, keys, p, algo, m_bits, hash_mode, impl,
     partial step as groupBy would; key-less partials (one group), and
     those the jar cannot merge (no jar, an 'hllzstd' target, map keys),
     are merged by an aggregate (_merge_column)."""
-    stream = bool(keys) and (
-        algo in ("hll", "hlll")
-        and jvmagg.is_available(df.sparkSession)
-        and all(_sortable(df.schema[k].dataType) for k in keys)
+    stream = bool(keys) and _jvm_merges(df, algo) and all(
+        _sortable(df.schema[k].dataType) for k in keys
     )
     if hash_mode == "farmhash":  # raw values go to Python
         projected = df.select(*keys, value_col)
@@ -563,14 +579,12 @@ def _sketch_by_partials(df, value_col, keys, p, algo, m_bits, hash_mode, impl,
     if impl == "jvm":
         partials = jvmagg.sketch_partials(projected, p, _SKETCH_COL)
     else:
-        # pandas holds NaN and NULL alike in a float column (and writes NaN
-        # back as NULL), so float keys cross it as their exact string form
         floats = {
             k: df.schema[k].dataType for k in keys
-            if isinstance(df.schema[k].dataType, (FloatType, DoubleType))
+            if _floats_as_text(df.schema[k].dataType) != df.schema[k].dataType
         }
         as_text = projected.select(
-            *[F.col(c).cast("string").alias(c) if c in floats else c
+            *[F.col(c).cast(_floats_as_text(floats[c])).alias(c) if c in floats else c
               for c in projected.columns]
         )
         partials = as_text.mapInPandas(
@@ -580,17 +594,23 @@ def _sketch_by_partials(df, value_col, keys, p, algo, m_bits, hash_mode, impl,
                     df.schema[value_col].dataType,
                     (ByteType, ShortType, IntegerType, LongType),
                 ),
+                nested=[k for k in keys if isinstance(
+                    df.schema[k].dataType, (StructType, ArrayType, MapType))],
             ),
             schema=_sketch_schema(as_text, keys),
         )
         partials = partials.select(
-            *[F.col(c).cast(floats[c]).alias(c) if c in floats else c
+            *[F.col(c).cast(floats[c].simpleString()).alias(c) if c in floats else c
               for c in partials.columns]
         )
-    if not keys:  # both merges give NULL over no partials: empty input
-        empty = bytearray(_sketch.encode(_hll.empty(p), algo, m_bits))
-        merged = _merge_column(df, _SKETCH_COL, algo, m_bits)
-        return partials.agg(F.coalesce(merged, F.lit(empty)).alias(_SKETCH_COL))
+    if not keys:  # no input: one empty sketch
+        empty = F.lit(bytearray(_sketch.encode(_hll.empty(p), algo, m_bits)))
+        merged = partials.agg(_merge_column(df, _SKETCH_COL, algo, m_bits).alias("__m"))
+        if not _jvm_merges(df, algo):
+            # the jar's key-less aggregate gives a NULL row over no
+            # partials, a pandas one no row: left join that to one row
+            merged = df.sparkSession.range(1).join(merged, how="left")
+        return merged.select(F.coalesce("__m", empty).alias(_SKETCH_COL))
 
     def merge(parts):  # every column but the last, the sketch, is a key
         if stream:
@@ -617,29 +637,19 @@ def sketch_by(
     hash_mode: str = "xxhash64",
     impl: str | None = None,
     salt_buckets: int = 0,
-    key_encode: str | None = None,
 ) -> DataFrame:
     """Build one sketch of distinct ``value_col`` per group of ``keys``.
 
     Returns DataFrame[keys..., sketch binary].  Nulls in value_col are
     ignored (COUNT DISTINCT semantics); null group keys form a group.
-    See module docstring for the three physical plans.
+    See module docstring for the three physical plans: every algo builds
+    through the same plan of its impl ('sql' assembles; 'jvm' and 'pandas'
+    build per-task partials, then merge them per group).
     ``salt_buckets`` applies to the partial plans (jvm and pandas).
-
-    key_encode='hash64' (jvm impl only) cheapens a grouped aggregate's
-    string-key probe (_raw_registers_jvm), so it applies where sketch_by
-    builds with one: 'hllzstd' on the jvm impl (grouped register
-    aggregate, then a pandas encode).  The jvm partial build keys its
-    register map on the key row's bytes and has no such probe, so there
-    the option is validated and changes nothing.
     """
     keys = list(keys or [])
     impl = _resolve_impl(df, hash_mode, impl)
-    _validate(p, algo, hash_mode, impl, key_encode)
-    if impl == "jvm" and algo == "hllzstd":
-        built = _raw_registers_jvm(df, value_col, keys, p, hash_mode, key_encode)
-        enc = _encode_raw_udf(algo, m_bits)
-        return built.select(*keys, enc(F.col("__regs")).alias(_SKETCH_COL))
+    _validate(p, algo, hash_mode, impl)
     if impl == "sql":
         maxed = _maxed_registers_sql(df, value_col, keys, p, hash_mode)
         return _assemble_sketches(df, maxed, keys, p, algo, m_bits)
@@ -936,14 +946,13 @@ def approx_distinct(
     JVM — the plan shape of approx_count_distinct; with impl='sql' hashing,
     register max and the Flajolet estimator run as native Spark SQL.
     Neither has a Python stage.  key_encode='hash64' (jvm impl only): see
-    _raw_registers_jvm."""
+    _approx_distinct_jvm."""
     keys = list(keys or [])
     impl = _resolve_impl(df, hash_mode, impl)
     _validate(p, algo, hash_mode, impl, key_encode)
     if impl == "jvm":
-        return _raw_registers_jvm(
-            df, value_col, keys, p, hash_mode, key_encode,
-            jvmagg.est_agg_column, estimate_col,
+        return _approx_distinct_jvm(
+            df, value_col, keys, p, hash_mode, key_encode, estimate_col
         )
     if impl == "sql":
         return _approx_distinct_sql(df, value_col, keys, p, hash_mode, estimate_col)
@@ -1053,18 +1062,18 @@ def rolling_distinct(
     ``BETWEEN end - (window-1) AND end`` semantics).  ``bucket`` is
     'day' or 'hour'; returns DataFrame[keys..., window_end, estimate].
 
-    Plan (merge-reuse, not re-scan): one sketch build per (keys, bucket)
-    grain — the identical bounded build as sketch_by — then each bucket's
-    registers are exploded to the <= ``window`` window-ends they
-    contribute to and re-merged per end (reference merge semantics:
-    HyperLogLog.hpp:124-131 — a window union is a register max, so the
-    base table is scanned once no matter how many windows overlap).  The
-    re-merge shuffle carries at most #groups x #buckets x window m-byte
-    buffers with map-side partial merging; ends that exist in the data
-    are taken from the built grain itself (broadcast semi-join), so no
-    second base scan.  impl='jvm' keeps the whole pipeline zero-Python
-    (raw byte[m] buffers end-to-end); other impls merge and estimate
-    serialized sketches (_merge_column / _estimate_column)."""
+    Plan (merge-reuse, not re-scan): one sketch_by build per (keys,
+    bucket) grain, then each bucket's sketch is exploded to the <=
+    ``window`` window-ends it contributes to and re-merged per end
+    (reference merge semantics: HyperLogLog.hpp:124-131 — a window union
+    is a register max, so the base table is scanned once no matter how
+    many windows overlap).  The re-merge shuffle carries at most #groups x
+    #buckets x window sketches with map-side partial merging; ends that
+    exist in the data are taken from the built grain itself (broadcast
+    semi-join), so no second base scan.  The re-merge and the estimate
+    are _merge_column / _estimate_column: on a jar session the whole
+    pipeline (partials, stream merge, merge aggregate, estimate) has no
+    Python stage."""
     keys = list(keys or [])
     if window < 1:
         raise ValueError("window must be >= 1")
@@ -1081,18 +1090,10 @@ def rolling_distinct(
         )
     else:
         raise ValueError(f"unknown bucket {bucket!r} (use 'day' or 'hour')")
-    impl = _resolve_impl(df, hash_mode, impl)
-    _validate(p, "hll", hash_mode, impl)
-    df2 = df.withColumn("__bucket", bexpr)
-    if impl == "jvm":
-        built = _raw_registers_jvm(
-            df2, value_col, [*keys, "__bucket"], p, hash_mode
-        )
-    else:
-        built = sketch_by(
-            df2, value_col, [*keys, "__bucket"], p=p,
-            hash_mode=hash_mode, impl=impl,
-        ).withColumnRenamed(_SKETCH_COL, "__regs")
+    built = sketch_by(
+        df.withColumn("__bucket", bexpr), value_col, [*keys, "__bucket"],
+        p=p, hash_mode=hash_mode, impl=impl,
+    ).withColumnRenamed(_SKETCH_COL, "__sketch")
     # The window-end list is derived from the built grain itself, which
     # Spark executes as a separate job to plan the broadcast; persist the
     # (tiny: #groups x #buckets sketch rows) built table so the base scan
@@ -1102,17 +1103,9 @@ def rolling_distinct(
     ends = built.select(F.col("__bucket").alias("window_end")).distinct()
     contrib = built.withColumn("window_end", F.explode(seq)).drop("__bucket")
     covered = contrib.join(F.broadcast(ends), "window_end", "leftsemi")
-    grouped = covered.groupBy(*keys, "window_end")
-    if impl == "jvm":
-        out = grouped.agg(
-            jvmagg.merge_est_agg_column(df.sparkSession, p, "__regs").alias(
-                estimate_col
-            )
-        )
-    else:
-        out = grouped.agg(
-            _merge_column(df, "__regs", "hll", 3).alias("__regs")
-        ).withColumn(estimate_col, _estimate_column(df, "__regs")).drop("__regs")
+    out = covered.groupBy(*keys, "window_end").agg(
+        _merge_column(df, "__sketch", "hll", 3).alias("__sketch")
+    ).withColumn(estimate_col, _estimate_column(df, "__sketch")).drop("__sketch")
     return out.orderBy(*keys, "window_end")
 
 

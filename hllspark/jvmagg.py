@@ -11,10 +11,15 @@ JVM build runs at ~0.95-1.1x Spark's built-in HLL++ (vs 3.2x slower for the
 SQL formulation) and produces byte-identical registers to impl='sql' /
 impl='pandas' (same jr_split convention; pytest-gated).
 
+approx_distinct runs that aggregate as HllEstimateAggregator (the same
+buffer, finishing to the estimate); HllRegAggregator itself, with raw
+register bytes out, is kept as the register build perfbench times.
+
 That aggregate holds at most spark.sql.objectHashAggregate.sortBased.
 fallbackThreshold (128) buffers per task; past that it sorts every
 remaining input row of the task.  Many small groups per task (sketch_by
-at a fine grain) hit that sort, so sketch_by builds map-side instead:
+at a fine grain, rolling_distinct's (keys, bucket) build) hit that sort,
+so every sketch build goes map-side instead:
 HllSketchPartials keeps a per-task hash map from key to register
 buffer, bounded by the same threshold x 2^18 B (the most dense register
 memory ObjectHashAggregate holds per task at any p; each group is
@@ -29,10 +34,11 @@ The jar also carries the HLSK sketch codec (HllSketchCodec, byte-identical
 to hllspark.sketch for hll and hlll), so sketch tables need no Python
 stage: HllSketchMergeAggregator merges sketches of any format with
 partial aggregation (sketch_by's key-less merge, merge_sketches,
-sketch_rollup / sketch_cube, whose inputs collapse map-side) and the
-HllSketchEstimate function estimates them (with_estimate).  The pandas
-UDFs of hllspark.agg remain for sessions without the jar, 'hllzstd'
-encodes and farmhash builds.
+rolling_distinct's window merge, sketch_rollup / sketch_cube, whose
+inputs collapse map-side) and the
+HllSketchEstimate function estimates them (with_estimate,
+rolling_distinct).  The pandas UDFs of hllspark.agg remain for sessions
+without the jar, 'hllzstd' encodes and farmhash builds.
 
 Availability: the pre-built jar ships at hllspark/jars/hllspark-jvm.jar
 (source + build script under java/); it must be on the DRIVER classpath at
@@ -105,15 +111,14 @@ def is_available(spark: SparkSession) -> bool:
 
 
 # flavor -> (aggregator class, input encoder): 'regs' bigint hash in, raw
-# register bytes out (hllzstd sketch_by, rolling_distinct's build); 'est' bigint hash in, double estimate out (approx_distinct);
-# 'merge_est' raw register bytes in, register-wise max, double estimate
-# out (rolling_distinct); 'merge' serialized sketches in, register-wise
-# max, serialized hll/hlll sketch out (sketch_by's key-less merge,
-# merge_sketches, rollup / cube; sketch_by's keyed merge is stream_merge).
+# register bytes out (perfbench's register build); 'est' bigint hash in,
+# double estimate out (approx_distinct); 'merge' serialized sketches in,
+# register-wise max, serialized hll/hlll sketch out (sketch_by's key-less
+# merge, merge_sketches, rolling_distinct's window merge, rollup / cube;
+# sketch_by's keyed merge is stream_merge).
 _AGGREGATORS = {
     "regs": ("HllRegAggregator", "LONG"),
     "est": ("HllEstimateAggregator", "LONG"),
-    "merge_est": ("HllMergeEstimateAggregator", "BINARY"),
     "merge": ("HllSketchMergeAggregator", "BINARY"),
 }
 _ESTIMATE_FN = "hllspark_sketch_estimate"
@@ -143,10 +148,6 @@ def _register(spark: SparkSession, flavor: str, *args) -> str:
     return name
 
 
-def register(spark: SparkSession, p: int) -> str:
-    return _register(spark, "regs", p)
-
-
 def regs_agg_column(spark: SparkSession, p: int, hash_col: str) -> Column:
     """Aggregate expression building the raw dense byte[2^p] register array
     from a bigint hash column."""
@@ -157,14 +158,6 @@ def est_agg_column(spark: SparkSession, p: int, hash_col: str) -> Column:
     """Aggregate expression producing the distinct-count estimate (double)
     from a bigint hash column — no Python stage anywhere in the plan."""
     return F.expr(f"{_register(spark, 'est', p)}(`{hash_col}`)")
-
-
-def merge_est_agg_column(spark: SparkSession, p: int, regs_col: str) -> Column:
-    """Aggregate expression merging raw dense byte[2^p] register arrays
-    (register-wise max) and producing the distinct-count estimate (double).
-    The re-aggregation plan: fine registers -> coarser grains with no
-    Python stage (reference merge HyperLogLog.hpp:124-131)."""
-    return F.expr(f"{_register(spark, 'merge_est', p)}(`{regs_col}`)")
 
 
 def sketch_partials(df: DataFrame, p: int, sketch_col: str) -> DataFrame:

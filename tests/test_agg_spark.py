@@ -397,62 +397,14 @@ def test_approx_distinct_grouping_sets_gid_mapping(spark, events):
     assert len(by_gid[2]) == 1 and by_gid[2][0]["event_type"] is None
 
 
-def test_jvm_merge_estimate_aggregator_parity(spark):
-    """HllMergeEstimateAggregator (raw-register merge + estimate in the JVM)
-    == numpy register max + python estimator, and is partition-invariant —
-    the reference's merge-reordering guarantee (HyperLogLog.hpp:124-131)
-    lifted to the JVM re-aggregation path."""
-    from hllspark import jvmagg
-
-    if not jvmagg.is_available(spark):
-        pytest.skip("jvm jar not on classpath")
-    p = 8
-    rng = np.random.default_rng(7)
-    parts = [rng.integers(0, 30, size=1 << p).astype(np.uint8) for _ in range(6)]
-    df = spark.createDataFrame(
-        [(int(i % 2), bytearray(x.tobytes())) for i, x in enumerate(parts)],
-        "k int, regs binary",
-    )
-    est = jvmagg.merge_est_agg_column(spark, p, "regs").alias("est")
-    got = {r["k"]: r["est"] for r in df.groupBy("k").agg(est).collect()}
-    for k in (0, 1):
-        merged = np.maximum.reduce([x for i, x in enumerate(parts) if i % 2 == k])
-        want = float(hll.estimate(merged[None, :])[0])
-        assert got[k] == pytest.approx(want, rel=1e-12)
-    # partition invariance: same result at 1 and 6 partitions
-    got1 = {
-        r["k"]: r["est"]
-        for r in df.repartition(1).groupBy("k").agg(est).collect()
-    }
-    got6 = {
-        r["k"]: r["est"]
-        for r in df.repartition(6).groupBy("k").agg(est).collect()
-    }
-    assert got1 == got6 == got
-
-
 def test_key_encode_hash64_matches_plain_grouping(spark, events):
-    """key_encode='hash64' (probe on xxhash64(key) longs, key carried via
-    FIRST) must return byte-identical sketches and identical estimates to
-    plain string grouping on a collision-free key set."""
+    """approx_distinct's key_encode='hash64' (probe on xxhash64(key) longs,
+    key carried via FIRST) must return identical estimates to plain string
+    grouping on a collision-free key set."""
     from hllspark import jvmagg
 
     if not jvmagg.is_available(spark):
         pytest.skip("jvm jar not on classpath")
-    plain = {
-        r["event_type"]: bytes(r["sketch"])
-        for r in agg.sketch_by(
-            events, "user_id", ["event_type"], p=10, impl="jvm"
-        ).collect()
-    }
-    encoded = {
-        r["event_type"]: bytes(r["sketch"])
-        for r in agg.sketch_by(
-            events, "user_id", ["event_type"], p=10, impl="jvm",
-            key_encode="hash64",
-        ).collect()
-    }
-    assert plain == encoded
     est_plain = {
         r["event_type"]: r["distinct_estimate"]
         for r in agg.approx_distinct(
@@ -471,13 +423,17 @@ def test_key_encode_hash64_matches_plain_grouping(spark, events):
 
 def test_key_encode_requires_jvm_and_valid_name(spark, events):
     with pytest.raises(ValueError, match="requires impl='jvm'"):
-        agg.sketch_by(
+        agg.approx_distinct(
             events, "user_id", ["event_type"], impl="sql", key_encode="hash64"
         )
     with pytest.raises(ValueError, match="unknown key_encode"):
         agg.approx_distinct(
             events, "user_id", ["event_type"], key_encode="dict"
         )
+    # sketch_by's partial build keys its register map on the key row's
+    # bytes, with no aggregate probe for the option to cheapen
+    with pytest.raises(TypeError):
+        agg.sketch_by(events, "user_id", ["event_type"], key_encode="hash64")
 
 
 def test_approx_distinct_multi_explicit_pandas_raises(spark, events):
@@ -535,16 +491,27 @@ def test_rolling_distinct_matches_exact_window(spark, events):
 
 
 def test_rolling_distinct_impls_agree(spark, events):
-    """jvm (raw-register, zero-Python) and sql (serialized sketch + pandas
-    merge) rolling paths produce identical estimates — same registers,
-    same estimator."""
-    a = agg.rolling_distinct(events, "user_id", "ts", 3, p=10, impl="jvm")
-    b = agg.rolling_distinct(events, "user_id", "ts", 3, p=10, impl="sql")
-    ra = {r["window_end"]: r["distinct_estimate"] for r in a.collect()}
-    rb = {r["window_end"]: r["distinct_estimate"] for r in b.collect()}
-    assert set(ra) == set(rb)
-    for k in ra:
-        assert ra[k] == pytest.approx(rb[k], rel=1e-12)
+    """The jvm, sql and pandas rolling paths build the same sketches and
+    share one window merge and estimate, so their estimates are equal; and
+    the result is partition-invariant (the reference's merge-reordering
+    guarantee, HyperLogLog.hpp:124-131): input at 1 and at 6 partitions
+    gives the same estimates."""
+
+    def rolled(impl, parts=None):
+        ev = events if parts is None else events.repartition(parts)
+        out = agg.rolling_distinct(
+            ev, "user_id", "ts", 3, keys=["event_type"], p=10, impl=impl
+        )
+        return {
+            (r["event_type"], r["window_end"]): r["distinct_estimate"]
+            for r in out.collect()
+        }
+
+    want = rolled("jvm")
+    assert want
+    assert rolled("sql") == want
+    assert rolled("pandas") == want
+    assert rolled("jvm", 1) == rolled("jvm", 6) == want
 
 
 def test_rolling_distinct_grouped_hour_bucket(spark, events):

@@ -111,29 +111,25 @@ def test_jvm_null_values_ignored(spark):
     assert round(est) == 2  # linear-counting regime: exact
 
 
-def test_raw_registers_api_with_estimate_udf(spark, events):
-    """The raw-register building blocks compose: regs_agg_column produces
-    dense register bytes whose estimate_raw_udf estimate equals the
-    all-in-JVM approx_distinct output bit for bit."""
+def test_regs_agg_column_matches_sql_registers(spark, events):
+    """regs_agg_column (the raw register build perfbench times) produces
+    the dense register bytes that impl='sql''s sketches decode to."""
     projected = events.where(F.col("user_id").isNotNull()).select(
         "event_type", F.xxhash64("user_id").alias("__h")
     )
-    regs = projected.groupBy("event_type").agg(
-        jvmagg.regs_agg_column(spark, 12, "__h").alias("__regs")
-    )
-    via_raw = {
-        r["event_type"]: r["est"]
-        for r in regs.select(
-            "event_type", agg.estimate_raw_udf(F.col("__regs")).alias("est")
+    regs = {
+        r["event_type"]: bytes(r["__regs"])
+        for r in projected.groupBy("event_type").agg(
+            jvmagg.regs_agg_column(spark, 12, "__h").alias("__regs")
         ).collect()
     }
-    via_jvm = {
-        r["event_type"]: r["distinct_estimate"]
-        for r in agg.approx_distinct(
-            events, "user_id", ["event_type"], p=12, impl="jvm"
+    want = {
+        r["event_type"]: sketch.decode(bytes(r["sketch"])).tobytes()
+        for r in agg.sketch_by(
+            events, "user_id", ["event_type"], p=12, impl="sql"
         ).collect()
     }
-    assert via_raw == via_jvm
+    assert regs == want
 
 
 # ---------------------------------------------------------------------------
@@ -512,6 +508,24 @@ def test_nan_key_is_its_own_group(spark, monkeypatch, impl, jar):
     assert got == {(nan,): by_code[(0,)], (None,): by_code[(1,)], (two,): by_code[(2,)]}
 
 
+@pytest.mark.parametrize("jar", [True, False])
+def test_pandas_struct_key_matches_sql(spark, monkeypatch, jar):
+    """A struct key reaches pandas as dicts, which pandas cannot group on;
+    impl='pandas' groups on a hashable view of the key values and returns
+    the key rows as they came, so its sketches are impl='sql''s, NULL
+    structs, NULL fields and a NaN field (which pandas would hold as
+    NULL) included."""
+    xs = (0.0, float("nan"), 2.0)
+    rows = [(None if i % 7 == 0 else (xs[i % 3], None if i % 5 == 0 else i % 2), i)
+            for i in range(300)]
+    df = spark.createDataFrame(rows, "s struct<x double, y int>, v long").repartition(3)
+    if not jar:  # as on a session without the jar
+        monkeypatch.setattr(jvmagg, "is_available", lambda _spark: False)
+    got = _sketches(agg.sketch_by(df, "v", ["s"], p=8, impl="pandas"), ["s"])
+    assert set(got) == _group_by_keys(df, ["s"]) and len(got) == 10
+    assert got == _sketches(agg.sketch_by(df, "v", ["s"], p=8, impl="sql"), ["s"])
+
+
 def test_merge_keys_group_like_group_by(spark):
     """Keys the sort calls equal but whose bytes differ (a case-insensitive
     collation) fold into one group; map keys, which groupBy takes and no
@@ -535,7 +549,7 @@ def test_merge_keys_group_like_group_by(spark):
 
 
 @pytest.mark.parametrize("impl", ["jvm", "pandas"])
-@pytest.mark.parametrize("algo,m_bits", [("hll", 3), ("hlll", 0), ("hlll", 3)])
+@pytest.mark.parametrize("algo,m_bits", [("hll", 3), ("hlll", 0), ("hlll", 3), ("hllzstd", 3)])
 def test_partials_keyless_empty_input_is_empty_sketch(spark, algo, m_bits, impl):
     df = spark.createDataFrame([], "v long")
     rows = agg.sketch_by(df, "v", p=10, algo=algo, m_bits=m_bits, impl=impl).collect()
@@ -591,6 +605,16 @@ def test_merge_of_different_p_raises(spark, codec_path):
         agg.merge_sketches(df.repartition(1), ["k"]).collect()
     with pytest.raises(Exception):
         agg.merge_sketches(df.repartition(2)).collect()
+
+
+@pytest.mark.parametrize("algo", ["hll", "hlll", "hllzstd"])
+def test_keyless_empty_build_is_empty_sketch(spark, codec_path, algo):
+    """sketch_by over no rows and no keys is one empty sketch on every
+    plan, whichever merge (the jar's or the pandas one) runs."""
+    df = spark.createDataFrame([], "v long")
+    for impl in ("pandas", "sql"):
+        rows = agg.sketch_by(df, "v", p=10, algo=algo, impl=impl).collect()
+        assert [bytes(r["sketch"]) for r in rows] == [sketch.encode(hll.empty(10), algo)], impl
 
 
 def test_empty_no_key_merge(spark, codec_path):
