@@ -2559,9 +2559,9 @@ def _q_cap_per_group_docs(spark: SparkSession, sf: str) -> DataFrame:
 def _q_pack_chunks(spark: SparkSession, sf: str) -> DataFrame:
     """Sequence packing (hllspark/curation.py pack_sequences): GPT-style
     concat-and-chunk assignment over the whole corpus in doc_id order,
-    seq_len=256 — two-phase distributed cumsum (range partitions + a
-    bounded one-row-per-partition prefix collect), never a single-
-    partition global window."""
+    seq_len=256 — in-plan distributed cumsum (range partitions + broadcast
+    per-partition offsets, no driver collect), never a single-partition
+    global window."""
     from hllspark import curation
 
     docs = _t(spark, sf, "documents")
@@ -2794,10 +2794,10 @@ def _q_tfidf_vector_stats(spark: SparkSession, sf: str) -> DataFrame:
 def _q_politeness_waves_urls(spark: SparkSession, sf: str) -> DataFrame:
     """Per-host politeness scheduling (round 5, hllspark/crawl.py
     politeness_waves): deterministic per-doc URLs over four hosts,
-    per_wave=3; heavy_threshold=50 forces every host through the
-    skew-safe range-partitioned rank path (a mega-host must span tasks,
-    not own one), while the oracle states the SEMANTICS as the plain
-    one-window SQL — the same engine-runs-the-distributed-plan /
+    per_wave=3; every host takes the skew-safe range-partitioned rank
+    (8 partitions, so each host spans tasks instead of owning one),
+    while the oracle states the SEMANTICS as the plain one-window SQL —
+    the same engine-runs-the-distributed-plan /
     oracle-states-the-meaning contract as cap_per_group_docs.  The md5
     wave order replicates bit-identically (sampling._md5_hex8)."""
     from hllspark import crawl
@@ -2812,9 +2812,7 @@ def _q_politeness_waves_urls(spark: SparkSession, sf: str) -> DataFrame:
             F.col("doc_id").cast("string"),
         ).alias("url"),
     )
-    out = crawl.politeness_waves(
-        urls, per_wave=3, heavy_threshold=50, num_partitions=8
-    )
+    out = crawl.politeness_waves(urls, per_wave=3, num_partitions=8)
     return out.select("doc_id", "host", "wave").orderBy("doc_id")
 
 

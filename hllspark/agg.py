@@ -605,12 +605,8 @@ def _sketch_by_partials(df, value_col, keys, p, algo, m_bits, hash_mode, impl,
         )
     if not keys:  # no input: one empty sketch
         empty = F.lit(bytearray(_sketch.encode(_hll.empty(p), algo, m_bits)))
-        merged = partials.agg(_merge_column(df, _SKETCH_COL, algo, m_bits).alias("__m"))
-        if not _jvm_merges(df, algo):
-            # the jar's key-less aggregate gives a NULL row over no
-            # partials, a pandas one no row: left join that to one row
-            merged = df.sparkSession.range(1).join(merged, how="left")
-        return merged.select(F.coalesce("__m", empty).alias(_SKETCH_COL))
+        merged = merge_sketches(partials, [], _SKETCH_COL, algo, m_bits)
+        return merged.select(F.coalesce(_SKETCH_COL, empty).alias(_SKETCH_COL))
 
     def merge(parts):  # every column but the last, the sketch, is a key
         if stream:
@@ -670,14 +666,18 @@ def merge_sketches(
 
     Input sketches may be of any format and are re-encoded as ``algo``.
     NULL sketches are skipped; a group with none merges to NULL; sketches
-    of different p raise.  One difference between the two plans (see
-    _merge_column): with no ``keys`` and no input rows, the JVM aggregate
-    returns one row with a NULL sketch, the pandas UDF returns no row."""
+    of different p raise.  With no ``keys`` the result is always one row,
+    a NULL sketch over no input, on either plan of _merge_column."""
     keys = list(keys or [])
     merged = _merge_column(df, sketch_col, algo, m_bits).alias(sketch_col)
-    if not keys:
+    if keys:
+        return df.groupBy(*keys).agg(merged)
+    if _jvm_merges(df, algo):
         return df.agg(merged)
-    return df.groupBy(*keys).agg(merged)
+    # the pandas GROUPED_AGG yields no row over no input where the jar's
+    # aggregate yields a NULL one: left join the merge to one row
+    one = df.sparkSession.range(1).toDF("__one")
+    return one.join(df.agg(merged), how="left").drop("__one")
 
 
 def sketch_from_jr(

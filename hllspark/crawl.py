@@ -271,7 +271,6 @@ def politeness_waves(
     url_col: str = "url",
     per_wave: int = 1,
     seed: int = 0,
-    heavy_threshold: int = 1_000_000,
     num_partitions: int | None = None,
     host_col: str | None = None,
 ) -> DataFrame:
@@ -294,24 +293,16 @@ def politeness_waves(
     Scale design: wave = floor((rank-1) / per_wave) needs the EXACT
     dense per-host rank, and the naive row_number() over (partition by
     host) puts a 100M-page mega-host in ONE task (the skew hazard
-    measured in PLANS §9).  The plan splits by measured size first —
-    one map-side-combined per-host count, then a bounded collect of
-    ONLY the hosts above ``heavy_threshold`` (<= corpus/threshold rows
-    by construction):
-
-    - light hosts (almost all of them) take the plain window — the
-      host-keyed exchange spreads them across tasks;
-    - heavy hosts take the ccnet_buckets rank shape: range-repartition
-      on (host, order, url) so a mega-host SPANS partitions,
-      per-partition row_number, a bounded (partition, heavy-host)
-      count collect, broadcast offsets, rank = local rank + offset.
+    measured in PLANS §9).  Every host instead takes the rank from
+    ``curation._range_scan``: range-repartition on (host, order, url) so
+    a mega-host SPANS partitions, a per-partition running count, and
+    broadcast per-partition offsets — no driver collect, and no
+    threshold to tune.  A NULL host (malformed URL) is one host.
 
     With per_wave=1 and a frontier of seen-filtered, robots-allowed
     URLs (``BloomSeenSet.ingest`` -> ``robots_filter`` -> this), the
     output is a complete polite fetch plan."""
-    from pyspark.sql import Window
-
-    from .curation import url_host
+    from .curation import _range_scan, url_host
     from .sampling import _md5_hex8
 
     if per_wave < 1:
@@ -331,73 +322,11 @@ def politeness_waves(
             else df.withColumn("host", url_host(F.col(url_col)))
         )
     ).withColumn("__o", _md5_hex8([F.col(url_col)], seed))
-    heavy_rows = (
-        base.groupBy("host")
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .where(F.col("__n") > heavy_threshold)
-        .select("host")
-        .collect()
-    )
-    heavy = [r["host"] for r in heavy_rows]
-    # the split is a BROADCAST anti/semi join on the heavy-host list,
-    # never an isin literal: at frontier scale the list is bounded by
-    # corpus/threshold, which can still be ~10^6 hosts — an expression
-    # that large breaks codegen, a broadcast hash join does not.  Null
-    # hosts (malformed URLs) fall through the anti join onto the light
-    # path, where the window handles them as one ordinary group.
-    heavy_df = (
-        F.broadcast(
-            base.sparkSession.createDataFrame(
-                [(h,) for h in heavy], "host string"
-            )
-        )
-        if heavy
-        else None
-    )
-    light = base if heavy_df is None else base.join(heavy_df, "host", "left_anti")
-    w = Window.partitionBy("host").orderBy("__o", url_col)
-    ranked = light.withColumn("__rn", F.row_number().over(w).cast("long"))
-
-    if heavy:
-        hv = base.join(heavy_df, "host", "left_semi")
-        hv = (
-            hv.repartitionByRange(num_partitions, "host", "__o", url_col)
-            if num_partitions
-            else hv.repartitionByRange("host", "__o", url_col)
-        )
-        pw = Window.partitionBy("__pid", "host").orderBy("__o", url_col)
-        local = (
-            hv.withColumn("__pid", F.spark_partition_id())
-            .withColumn("__lrn", F.row_number().over(pw).cast("long"))
-            .localCheckpoint(eager=True)  # pin partition ids: the counts
-            # collect and the offset join below must see the SAME pids
-        )
-        counts = local.groupBy("__pid", "host").count().collect()
-        by_host: dict[str, list[tuple[int, int]]] = {}
-        for row in sorted(counts, key=lambda r: (r["host"], r["__pid"])):
-            by_host.setdefault(row["host"], []).append(
-                (row["__pid"], row["count"])
-            )
-        rows = []
-        for host, lst in by_host.items():
-            off = 0
-            for pid, c in lst:
-                rows.append((pid, host, off))
-                off += c
-        off_df = df.sparkSession.createDataFrame(
-            rows, "__pid int, host string, __off long"
-        )
-        heavy_ranked = (
-            local.join(F.broadcast(off_df), ["__pid", "host"])
-            .withColumn("__rn", F.col("__lrn") + F.col("__off"))
-            .drop("__pid", "__lrn", "__off")
-        )
-        ranked = ranked.unionByName(heavy_ranked)
-
+    ranked = _range_scan(base, ["host"], ["__o", url_col], F.lit(1), num_partitions)
     return ranked.withColumn(
         "wave",
-        F.floor((F.col("__rn") - F.lit(1)) / F.lit(int(per_wave))).cast("long"),
-    ).drop("__o", "__rn")
+        F.floor((F.col("__cum") - F.lit(1)) / F.lit(int(per_wave))).cast("long"),
+    ).drop("__o", "__cum")
 
 
 def pagerank(

@@ -19,8 +19,8 @@ GPT-style concat-and-chunk batch packing) re-expressed as Spark plans:
   removal join is a left-anti against only the *over-threshold* lines
   (the heavy hitters, a tiny broadcast-eligible set); ``pack_sequences``
   computes the global ordered cumulative token sum with a range shuffle
-  + per-partition window + a one-row-per-partition prefix collect,
-  never a single-partition global window.
+  + per-partition window + broadcast per-partition offsets
+  (``_range_scan``), never a single-partition global window.
 
 All regex patterns are restricted to the Java-regex ∩ RE2 common subset
 so the DuckDB contract oracles run the byte-identical pattern.
@@ -29,6 +29,7 @@ so the DuckDB contract oracles run the byte-identical pattern.
 from __future__ import annotations
 
 import re as _re
+from typing import Sequence
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
@@ -691,56 +692,68 @@ def registered_domain(host: Column) -> Column:
 # ---------------------------------------------------------------------------
 
 
-def global_cumsum(
+def _range_scan(
     df: DataFrame,
-    order_col: str,
-    n_col: str,
+    group_cols: Sequence[str],
+    order_cols: Sequence[str],
+    weight: Column,
     num_partitions: int | None = None,
 ) -> DataFrame:
-    """df + ``__cum`` (the GLOBAL running sum of ``n_col`` in ``order_col``
-    order, inclusive of the current row) and ``__pid``, without ever
-    collapsing to one partition: range-repartition on the order column,
-    per-partition window cumsum, a ONE-row-per-partition driver collect
-    of the partition totals, and a broadcast (pid, offset) join folding
-    the prefix offsets back in.  The cumsum grain is
-    ``localCheckpoint(eager=True)``-materialized so the range shuffle +
-    sort run exactly once across the totals job and the returned plan,
-    and the blocks free when the result is GC'd.  Null/negative-null
-    ``n_col`` counts 0.  Callers drop ``__pid``/``__cum``/``__off``."""
+    """``df`` + ``__cum``: the running sum of ``weight`` (inclusive of the
+    row) within each group of ``group_cols``, in ``order_cols`` order;
+    weight 1 gives the row number.  No group goes to one task and no row
+    to the driver: range-repartition on (group, order) so a large group
+    spans partitions, take the running sum per (partition, group), and
+    ``localCheckpoint(eager=True)`` it, which pins the partition ids the
+    two reads below share (its blocks free with the result; a
+    ``persist`` would pin them for the session).  A row's offset is its
+    group's total weight in earlier partitions: an exclusive window sum
+    over per-(partition, group) totals.  Range partitioning keeps a group
+    contiguous, so only a partition's first group carries an offset, and
+    the offsets (at most one row per partition) are broadcast-joined
+    back on the partition and null-safely on the group, so NULL keys
+    form one group."""
     from pyspark.sql import Window
 
-    n = F.coalesce(F.col(n_col).cast("long"), F.lit(0))
+    keys = [*group_cols, *order_cols]
     parts = (
-        df.repartitionByRange(num_partitions, order_col)
+        df.repartitionByRange(num_partitions, *keys)
         if num_partitions
-        else df.repartitionByRange(order_col)
+        else df.repartitionByRange(*keys)
     )
     w = (
-        Window.partitionBy("__pid")
-        .orderBy(order_col)
+        Window.partitionBy("__pid", *group_cols)
+        .orderBy(*order_cols)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     local = (
         parts.withColumn("__pid", F.spark_partition_id())
-        .withColumn("__cum", F.sum(n).over(w))
+        .withColumn("__cum", F.sum(weight).over(w))
         .localCheckpoint(eager=True)
     )
-    # one row per partition — bounded driver collect, independent of |df|
-    totals = {
-        r["__pid"]: r["t"]
-        for r in local.groupBy("__pid").agg(F.max("__cum").alias("t")).collect()
-    }
-    rows, acc = [], 0
-    for pid in sorted(totals):
-        rows.append((pid, acc))
-        acc += totals[pid]
-    off_df = df.sparkSession.createDataFrame(
-        rows, "__pid int, __off long"
-    ) if rows else df.sparkSession.createDataFrame([], "__pid int, __off long")
-    local = local.join(F.broadcast(off_df), "__pid", "left")
-    return local.withColumn(
-        "__cum",
-        F.col("__cum") + F.coalesce(F.col("__off"), F.lit(0).cast("long")),
+    g = [f"__g{i}" for i in range(len(group_cols))]
+    earlier = (
+        Window.partitionBy(*g)
+        .orderBy("__opid")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    offsets = (
+        local.groupBy(
+            F.col("__pid").alias("__opid"),
+            *[F.col(c).alias(a) for c, a in zip(group_cols, g)],
+        )
+        .agg(F.sum(weight).alias("__t"))
+        .withColumn("__off", F.sum("__t").over(earlier))
+        .where(F.col("__off").isNotNull())
+        .drop("__t")
+    )
+    on = F.col("__pid") == F.col("__opid")
+    for c, a in zip(group_cols, g):
+        on = on & F.col(c).eqNullSafe(F.col(a))
+    return (
+        local.join(F.broadcast(offsets), on, "left")
+        .withColumn("__cum", F.col("__cum") + F.coalesce("__off", F.lit(0)))
+        .drop("__pid", "__opid", *g, "__off")
     )
 
 
@@ -757,16 +770,15 @@ def select_within_budget(
     fits ENTIRELY.  The standard "build the best N-token corpus" curation
     step: order by quality descending, select until the budget is full.
 
-    Same two-phase distributed cumsum as :func:`pack_sequences` (range
-    shuffle + per-partition window + one-row-per-partition prefix
-    collect) — never a single-partition global window — followed by a
-    pushable ``__cum <= budget`` filter.  Original schema preserved."""
+    The cumulative count is :func:`_range_scan`'s (never a
+    single-partition global window), followed by a pushable
+    ``__cum <= budget`` filter.  A NULL count counts 0, any other integer
+    counts as itself.  Original schema preserved."""
     if budget < 0:
         raise ValueError("budget must be >= 0")
-    out = global_cumsum(df, order_col, n_tokens_col, num_partitions)
-    return out.where(F.col("__cum") <= F.lit(int(budget))).drop(
-        "__pid", "__cum", "__off"
-    )
+    n = F.coalesce(F.col(n_tokens_col).cast("long"), F.lit(0))
+    out = _range_scan(df, [], [order_col], n, num_partitions)
+    return out.where(F.col("__cum") <= F.lit(int(budget))).drop("__cum")
 
 
 def pack_sequences(
@@ -784,25 +796,18 @@ def pack_sequences(
     - ``chunk_offset``— token offset of the document within that chunk,
     - ``n_chunks_spanned`` — how many chunks the document touches.
 
-    The global ordered cumulative sum is the scale hazard here: a naive
-    ``Window.orderBy(order_col)`` collapses to ONE partition.  This uses
-    the classic two-phase formulation instead — range-repartition on the
-    order column, per-partition window cumsum, then a driver collect of
-    ONE row per partition (bounded by the partition count, never by the
-    data) whose running totals re-enter the plan as a broadcast-joined
-    (pid, offset) DataFrame — NOT a ``create_map`` literal, which would
-    put one expression-tree entry per partition in the plan and become a
-    driver/plan-size burden at 100k partitions.  The cumsum grain is
-    ``localCheckpoint(eager=True)``-materialized so the range shuffle +
-    sort run exactly once across the totals job and the returned plan,
-    and the blocks are released when the result goes out of scope (an
-    explicit ``persist`` here would pin MEMORY_AND_DISK blocks for the
-    session lifetime with no handle to unpersist).
+    A NULL count counts 0, any other integer counts as itself.  The
+    global ordered cumulative sum is the scale hazard here: a naive
+    ``Window.orderBy(order_col)`` collapses to ONE partition.
+    :func:`_range_scan` computes it in the plan instead (range shuffle,
+    per-partition window, broadcast per-partition offsets), with no
+    driver collect and no ``create_map`` literal, which would put one
+    expression-tree entry per partition in the plan.
     """
     if seq_len < 1:
         raise ValueError("seq_len must be >= 1")
     n = F.coalesce(F.col(n_tokens_col).cast("long"), F.lit(0))
-    local = global_cumsum(df, order_col, n_tokens_col, num_partitions)
+    local = _range_scan(df, [], [order_col], n, num_partitions)
     end = F.col("__cum")
     start = end - n
     return (
@@ -814,7 +819,7 @@ def pack_sequences(
             .otherwise(F.lit(0))
             .cast("long"),
         )
-        .drop("__pid", "__cum", "__off")
+        .drop("__cum")
     )
 
 
@@ -1113,17 +1118,12 @@ def ccnet_buckets(
     Scale design — deliberately NOT ``ntile() over (partition by lang)``:
     that window puts an entire language in ONE task, and `en` at crawl
     scale is most of the corpus (the same skew hazard PLANS §9 measures
-    for hot keys).  Instead the exact rank is computed the
-    :func:`global_cumsum` way: range-repartition on
-    (lang, score, id) — so every partition holds a contiguous slice and
-    languages SPAN partitions instead of owning one — per-partition
-    ``row_number``, a bounded driver collect of (partition, lang) counts
-    (<= partitions + languages rows: langs are contiguous under the
-    range partitioning), and a broadcast offset join.  The bucket then
-    falls out of the closed-form NTILE formula from (rank, n_lang) with
-    zero further shuffles."""
-    from pyspark.sql import Window
-
+    for hot keys).  Instead the exact rank within a language is
+    :func:`_range_scan`'s running count over (lang, score, id), so
+    languages SPAN partitions instead of owning one, and a language's
+    size is a broadcast per-language count; the bucket then falls out of
+    the closed-form NTILE formula from (rank, n_lang).  A NULL language
+    is one language."""
     if n_buckets < 1:
         raise ValueError("n_buckets must be >= 1")
     scores = lm_perplexity_scores(
@@ -1132,36 +1132,17 @@ def ccnet_buckets(
     scored = scores.join(
         df.select(F.col(id_col), F.col(lang_col)), id_col
     ).withColumn("__ce", F.round(F.col("cross_entropy"), 4))
-    parts = (
-        scored.repartitionByRange(num_partitions, lang_col, "__ce", id_col)
-        if num_partitions
-        else scored.repartitionByRange(lang_col, "__ce", id_col)
+    ranked = _range_scan(
+        scored, [lang_col], ["__ce", id_col], F.lit(1), num_partitions
     )
-    w = Window.partitionBy("__pid", lang_col).orderBy("__ce", id_col)
-    local = (
-        parts.withColumn("__pid", F.spark_partition_id())
-        .withColumn("__rn", F.row_number().over(w))
-        .localCheckpoint(eager=True)
+    sizes = ranked.groupBy(F.col(lang_col).alias("__lang")).agg(
+        F.count(F.lit(1)).alias("__n")
     )
-    counts = local.groupBy("__pid", lang_col).count().collect()
-    by_lang: dict[str, list[tuple[int, int]]] = {}
-    for row in sorted(counts, key=lambda r: (r[lang_col], r["__pid"])):
-        by_lang.setdefault(row[lang_col], []).append(
-            (row["__pid"], row["count"])
-        )
-    rows = []
-    for lang, lst in by_lang.items():
-        total = sum(c for _, c in lst)
-        off = 0
-        for pid, c in lst:
-            rows.append((pid, lang, off, total))
-            off += c
-    spark = df.sparkSession
-    off_schema = f"__pid int, {lang_col} string, __off long, __n long"
-    off_df = spark.createDataFrame(rows, off_schema)
-    ranked = local.join(F.broadcast(off_df), ["__pid", lang_col], "left")
-    k = (F.col("__rn") + F.coalesce(F.col("__off"), F.lit(0))).cast("long")
-    n = F.coalesce(F.col("__n"), F.lit(1)).cast("long")
+    ranked = ranked.join(
+        F.broadcast(sizes), F.col(lang_col).eqNullSafe(F.col("__lang")), "left"
+    )
+    k = F.col("__cum")
+    n = F.col("__n")
     nb = F.lit(int(n_buckets)).cast("long")
     q = (n - n % nb) / nb  # floor(n / nb) in exact integer arithmetic
     q = q.cast("long")

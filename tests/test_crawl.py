@@ -250,27 +250,35 @@ def test_politeness_waves_bounds_and_determinism(spark):
     }
 
 
-def test_politeness_waves_heavy_path_equals_plain(spark):
-    """Forcing hosts through the range-partitioned heavy-host path
-    (threshold=5) yields EXACTLY the plain-window assignment — the
-    skew-safe rank is the same rank."""
-    from hllspark.crawl import politeness_waves
+def test_politeness_waves_partition_invariant(spark):
+    """The range-partitioned rank equals the single-window assignment
+    (row_number over the host) at 1, 4 and 16 partitions, with a host
+    that fills at least three whole partitions and a NULL url (a NULL
+    host, one group); empty input gives no rows."""
+    from pyspark.sql import Window
 
-    rows = [(f"https://big.example.com/p/{i}",) for i in range(40)] + [
-        (f"https://small.example.org/q/{i}",) for i in range(3)
-    ]
+    from hllspark.crawl import politeness_waves
+    from hllspark.curation import url_host
+    from hllspark.sampling import _md5_hex8
+
+    rows = [(f"https://big.example.com/p/{i}",) for i in range(300)]
+    rows += [(f"https://h{i % 7}.example.org/q/{i}",) for i in range(60)]
+    rows += [(None,), ("not a url",)]
     df = spark.createDataFrame(rows, "url string")
-    plain = {
-        (r["url"], r["wave"])
-        for r in politeness_waves(df, per_wave=2).collect()
+    w = Window.partitionBy("host").orderBy("__o", "url")
+    want = {
+        (r["url"], r["host"], r["wave"])
+        for r in df.withColumn("host", url_host(F.col("url")))
+        .withColumn("__o", _md5_hex8([F.col("url")], 0))
+        .withColumn("wave", F.floor((F.row_number().over(w) - 1) / 3))
+        .collect()
     }
-    forced = {
-        (r["url"], r["wave"])
-        for r in politeness_waves(
-            df.repartition(5), per_wave=2, heavy_threshold=5, num_partitions=4
-        ).collect()
-    }
-    assert forced == plain
+    for parts in (1, 4, 16):
+        got = politeness_waves(df.repartition(5), per_wave=3, num_partitions=parts)
+        assert got.columns == ["url", "host", "wave"]
+        assert {(r["url"], r["host"], r["wave"]) for r in got.collect()} == want, parts
+    empty = politeness_waves(spark.createDataFrame([], "url string"), num_partitions=4)
+    assert empty.columns == ["url", "host", "wave"] and empty.count() == 0
 
 
 def test_pagerank_matches_reference_and_conserves_mass(spark):

@@ -216,6 +216,35 @@ def test_pack_sequences_partition_invariant(spark):
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
 
+def test_cumsum_ops_partition_invariant_with_negative_count(spark):
+    """A negative token count counts as itself: pack_sequences and
+    select_within_budget give the python running-sum answer at 1 and at
+    16 partitions (a partition's offset is the SUM of earlier counts,
+    not the largest running sum inside them)."""
+    import math
+
+    from hllspark.curation import pack_sequences, select_within_budget
+
+    rows = [(i, -5000 if i == 265 else (i * 7) % 13 + 1) for i in range(500)]
+    df = spark.createDataFrame(rows, "doc_id int, n int")
+    cum, want_pack, want_budget = 0, {}, []
+    for i, n in rows:
+        start, cum = cum, cum + n
+        spanned = (cum - 1) // 64 - start // 64 + 1 if n > 0 else 0
+        # chunk_offset is Spark's %, which keeps the dividend's sign
+        want_pack[i] = (start // 64, int(math.fmod(start, 64)), spanned)
+        if cum <= 1000:
+            want_budget.append(i)
+    for parts in (1, 16):
+        got = {
+            r["doc_id"]: (r["chunk_id"], r["chunk_offset"], r["n_chunks_spanned"])
+            for r in pack_sequences(df, "doc_id", "n", 64, num_partitions=parts).collect()
+        }
+        assert got == want_pack, parts
+        kept = select_within_budget(df, "doc_id", "n", 1000, num_partitions=parts)
+        assert sorted(r["doc_id"] for r in kept.collect()) == want_budget, parts
+
+
 def test_pack_sequences_zero_and_null_tokens(spark):
     from hllspark.curation import pack_sequences
 
@@ -389,8 +418,8 @@ def test_pack_sequences_no_plan_literal_at_high_partition_count(spark):
 
 def test_select_within_budget(spark):
     """Budget selection keeps the maximal doc_id-order prefix whose total
-    tokens fit; whole-doc semantics (no partial fit); partition-invariant;
-    pack_sequences still exact through the shared global_cumsum."""
+    tokens fit; whole-doc semantics (no partial fit); partition-invariant
+    through the shared _range_scan."""
     from hllspark.curation import select_within_budget
 
     rows = [(i, (i * 7) % 13 + 1) for i in range(500)]
@@ -814,14 +843,15 @@ def test_ccnet_buckets_match_ntile_window(spark):
     row_number + broadcast offsets + closed-form NTILE) must equal the
     textbook ntile() window on (lang, round(ce,4), id) exactly — the
     window is the semantics, the distributed path is the plan that
-    doesn't put a whole language in one task."""
+    doesn't put a whole language in one task.  NULL languages are one
+    group, as in the window."""
     from pyspark.sql import Window
 
     from hllspark.curation import ccnet_buckets, lm_perplexity_scores
 
     rows = []
     for i in range(120):
-        lang = ["en", "de", "fr"][i % 3]
+        lang = ["en", "de", "fr", None][i % 4]
         body = " ".join(
             ["the cat sat on the mat"] * (1 + i % 4)
             + [f"tok{(i * 7) % 23} tok{(i * 11) % 19}"]

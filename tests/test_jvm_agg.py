@@ -618,13 +618,12 @@ def test_keyless_empty_build_is_empty_sketch(spark, codec_path, algo):
 
 
 def test_empty_no_key_merge(spark, codec_path):
-    """The documented difference: a JVM aggregate without keys always
-    yields one row (NULL here), a pandas GROUPED_AGG yields none."""
-    rows = agg.merge_sketches(_sketch_rows(spark, [])).collect()
-    if codec_path == "jvm":
-        assert len(rows) == 1 and rows[0]["sketch"] is None
-    else:
-        assert rows == []
+    """A key-less merge of no rows is one NULL row on every plan: the
+    jar's aggregate, the pandas GROUPED_AGG (no jar), and an 'hllzstd'
+    target, which the pandas UDF merges on a jar session too."""
+    for algo in ("hll", "hllzstd"):
+        rows = agg.merge_sketches(_sketch_rows(spark, []), algo=algo).collect()
+        assert [r["sketch"] for r in rows] == [None], algo
 
 
 def test_jvm_bad_header_raises(spark):
