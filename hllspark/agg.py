@@ -51,15 +51,16 @@ impl='sql' — everything hot stays in the JVM / whole-stage codegen:
     the jvm plan is checked against (perfbench ``sketch_build`` and the
     pytest parity tests).
 
-impl='pandas' — per-partition vectorized build via mapInPandas
-(np.maximum.at scatter), one sketch row per (partition, key), then the
-jvm plan's merge (the stream merge on a jar session, else a grouped-agg
-merge).  Floats in keys, at any depth, cross pandas as strings: a pandas
-float holds NaN and NULL alike.  Struct, array and map keys are grouped
-on as nested tuples.  Required for hash_mode='farmhash' (reference parity —
-the hash itself runs in numpy).  At high key cardinality it holds #keys x
-2^p register bytes per task; the jvm plan bounds that memory instead and
-flushes extra partials, so it needs no rule of thumb on #keys.
+impl='pandas' — the library's one Python two-phase plan
+(sketches.generic.partials) over ``hll_kind``: one np.maximum.at
+register scatter per Arrow batch, one sketch row per (partition, key),
+under generic's key rules (NaN, NULL and struct keys group as under
+groupBy).  agg still picks the merge: the stream merge on a jar session,
+else the kind's GROUPED_AGG fold (generic.merge_udf).  Required for
+hash_mode='farmhash' (reference parity — the hash itself runs in numpy).
+At high key cardinality it holds #keys x 2^p register bytes per task; the
+jvm plan bounds that memory instead and flushes extra partials, so it
+needs no rule of thumb on #keys.
 
 All three implementations produce byte-identical sketches for the same
 (hash_mode, p): they share the j/r derivation (hashing.jr_split twins the
@@ -97,16 +98,14 @@ Skew: with impl='sql', map-side partial aggregation absorbs hot keys by
 construction.  sketch_by's partial plans (jvm and pandas) emit about one
 row per key and partition, so a hot key sends the stream merge one
 reducer about #partitions rows, folded in one pass over a single register
-buffer; ``salt_buckets`` adds an intermediate merge level for extreme
-partition counts (north_rule): the same merge by (keys, salt), then by
-keys.
+buffer.
 """
 
 from __future__ import annotations
 
 from functools import reduce
 from itertools import combinations
-from typing import Iterator, Sequence
+from typing import Sequence
 
 import numpy as np
 import pandas as pd
@@ -115,16 +114,10 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     ArrayType,
-    BinaryType,
-    ByteType,
     DoubleType,
     FloatType,
-    IntegerType,
     LongType,
     MapType,
-    ShortType,
-    StringType,
-    StructField,
     StructType,
 )
 
@@ -132,6 +125,8 @@ from . import hll as _hll
 from . import jvmagg
 from . import sketch as _sketch
 from .hashing import farmhash64, fingerprint64, jr_from_hash, jr_split
+from .sketches import generic
+from .sketches.generic import GroupedState, SketchKind
 
 _HASH_COL = "__hllspark_hash"
 _J_COL = "__hllspark_j"
@@ -145,17 +140,13 @@ _LONG_MIN = -(1 << 63)
 # hashing projections
 # ---------------------------------------------------------------------------
 
-def _hash_series_farmhash(s: pd.Series, int_dtype: bool = False) -> np.ndarray:
-    """int_dtype=True: the SPARK column type is integral — Arrow hands an
-    int column WITH nulls to pandas as float64, which would otherwise fall
-    through to the string path and hash str("1.0") instead of the
-    reference's Fingerprint(1) (Hash.hpp:27-30).  Callers that know the
-    Spark schema pass the flag; values are integral by construction there."""
-    if pd.api.types.is_integer_dtype(s.dtype):
-        return fingerprint64(s.to_numpy().astype(np.int64).view(np.uint64))
-    if int_dtype and pd.api.types.is_float_dtype(s.dtype):
-        return fingerprint64(s.to_numpy().astype(np.int64).view(np.uint64))
-    return farmhash64(s.astype("string").fillna("").to_numpy(dtype=object))
+def _farmhash(values: np.ndarray) -> np.ndarray:
+    """The reference's item hash (Hash.hpp:22-30): Fingerprint of an
+    integer, Hash64 of anything else as a string.  The values carry no
+    nulls (dropped before Arrow), so an integer column stays integral."""
+    if values.dtype.kind in "iu":
+        return fingerprint64(values.astype(np.int64).view(np.uint64))
+    return farmhash64(pa.array(pd.Series(values).astype("string"), type=pa.string()))
 
 
 def _hashed(df: DataFrame, value_col: str, hash_mode: str):
@@ -186,112 +177,52 @@ def _jr_columns_sql(v, p: int):
 
 
 # ---------------------------------------------------------------------------
-# impl='pandas': per-partition build
+# HLL as a generic sketch kind (impl='pandas', the no-jar merge, sqlfuncs)
 # ---------------------------------------------------------------------------
 
-def _grouped_scatter_codes(
-    codes: np.ndarray, k: int, hashes: np.ndarray, p: int, parity: bool
-) -> np.ndarray:
-    regs = np.zeros((k, 1 << p), dtype=np.uint8)
-    j, r = (jr_from_hash if parity else jr_split)(hashes, p)
-    np.maximum.at(regs, (codes, j), r)
-    return regs
+def hll_kind(p: int = 14, algo: str = "hll", m_bits: int = 3,
+             hash_mode: str = "xxhash64") -> SketchKind:
+    """HLL registers as a sketches.generic kind: the state is the uint8[2^p]
+    register array, merged by register max (HyperLogLog.hpp:124-131).
+    The value column holds the items themselves for hash_mode='farmhash'
+    (hashed here as the reference does, j/r by jr_from_hash) and their
+    64-bit hashes otherwise (j/r by jr_split, the sql plan's twin).
+    States encode as ``algo``; decode reads every format, so a merge only
+    needs ``algo`` and ``m_bits``."""
+    if hash_mode == "farmhash":
+        def jr(values):
+            return jr_from_hash(_farmhash(values), p)
+    else:
+        def jr(values):
+            return jr_split(values.astype(np.int64).view(np.uint64), p)
 
+    def scatter(block, slots, values):
+        j, r = jr(values)
+        np.maximum.at(block, (slots, j), r)
 
-def _hashable(v):
-    """A nested key value (a struct's dict, an array's ndarray, a map's
-    pair list) as nested tuples, which pandas can group on and a dict can
-    hold."""
-    if isinstance(v, dict):
-        return tuple((k, _hashable(x)) for k, x in v.items())
-    if isinstance(v, (list, tuple, np.ndarray)):
-        return tuple(_hashable(x) for x in v)
-    return v
+    def update(regs, values):
+        j, r = jr(np.asarray(values))
+        np.maximum.at(regs, j, r)
+        return regs
 
-
-def _make_build_partials(keys: Sequence[str], p: int, algo: str, m_bits: int,
-                         hash_mode: str, value_col: str,
-                         int_dtype: bool = False, nested: Sequence[str] = ()):
-    """``nested``: the keys of a struct, array or map type, grouped on
-    through _hashable; the key rows go out as they came."""
-    parity = hash_mode == "farmhash"
-
-    def build_partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc: dict[tuple, np.ndarray] = {}
-        key_rows: dict[tuple, pd.DataFrame] = {}
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if parity:
-                col = pdf[value_col]
-                mask = col.notna().to_numpy()
-                if not mask.all():
-                    pdf = pdf.loc[mask]
-                    col = pdf[value_col]
-                if len(pdf) == 0:
-                    continue
-                hashes = _hash_series_farmhash(col, int_dtype)
-            else:
-                hashes = pdf[_HASH_COL].to_numpy().astype(np.int64).view(np.uint64)
-            if keys:
-                key_df = pdf[list(keys)]
-                view = (key_df.assign(**{k: key_df[k].map(_hashable) for k in nested})
-                        if nested else key_df)
-                codes = view.groupby(list(keys), dropna=False, sort=False).ngroup().to_numpy()
-                uniq_codes, first_idx = np.unique(codes, return_index=True)
-                regs = _grouped_scatter_codes(codes, len(uniq_codes), hashes, p, parity)
-                key_df, view = key_df.iloc[first_idx], view.iloc[first_idx]
-                for row_i, code in enumerate(uniq_codes):
-                    kt = tuple(view.iloc[row_i])
-                    if kt in acc:
-                        np.maximum(acc[kt], regs[row_i], out=acc[kt])
-                    else:
-                        acc[kt] = regs[row_i]
-                        key_rows[kt] = key_df.iloc[row_i : row_i + 1]
-            else:
-                regs = _grouped_scatter_codes(
-                    np.zeros(len(hashes), dtype=np.int64), 1, hashes, p, parity
-                )
-                if () in acc:
-                    np.maximum(acc[()], regs[0], out=acc[()])
-                else:
-                    acc[()] = regs[0]
-        if not acc:
-            return
-        sketches = [_sketch.encode(regs, algo, m_bits) for regs in acc.values()]
-        if keys:
-            out = pd.concat([key_rows[kt] for kt in acc], ignore_index=True)
-            out[_SKETCH_COL] = sketches
-        else:
-            out = pd.DataFrame({_SKETCH_COL: sketches})
-        yield out
-
-    return build_partials
+    return SketchKind(
+        name=f"{algo}-p{p}",
+        zero=lambda: _hll.empty(p),
+        update=update,
+        merge=_hll.merge,
+        encode=lambda regs: _sketch.encode(regs, algo, m_bits),
+        decode=_sketch.decode,
+        grouped=GroupedState(
+            zero_block=lambda g: np.zeros((g, 1 << p), dtype=np.uint8),
+            update=scatter,
+            to_state=lambda row: row,
+        ),
+    )
 
 
 # ---------------------------------------------------------------------------
 # shared: merge / estimate / size UDFs
 # ---------------------------------------------------------------------------
-
-def _merge_buffers(series: pd.Series, algo: str, m_bits: int) -> bytes | None:
-    """Register-wise max of the non-null sketches, re-encoded; None (a NULL
-    sketch) when the group has none."""
-    regs = [_sketch.decode(b) for b in series if b is not None]
-    if not regs:
-        return None
-    return _sketch.encode(np.maximum.reduce(np.stack(regs)), algo, m_bits)
-
-
-def merge_udaf(algo: str = "hll", m_bits: int = 3):
-    """Pandas GROUPED_AGG UDF merging serialized sketches (register-wise max,
-    reference HyperLogLog.hpp:124-131 / HyperLogLogLog.hpp:192-283)."""
-
-    def _merge(s: pd.Series) -> bytes:
-        return _merge_buffers(s, algo, m_bits)
-
-    # (pd.Series) -> scalar type hints make Spark infer a GROUPED_AGG UDF
-    return F.pandas_udf(_merge, BinaryType())
-
 
 @F.pandas_udf(DoubleType())
 def estimate_udf(s: pd.Series) -> pd.Series:
@@ -319,7 +250,7 @@ def _merge_column(df: DataFrame, col: str, algo: str, m_bits: int):
     UDF."""
     if _jvm_merges(df, algo):
         return jvmagg.merge_agg_column(df.sparkSession, col, algo, m_bits)
-    return merge_udaf(algo, m_bits)(F.col(col))
+    return generic.merge_udf(hll_kind(algo=algo, m_bits=m_bits))(F.col(col))
 
 
 def _estimate_column(df: DataFrame, col: str):
@@ -341,8 +272,7 @@ def bit_size_udf(s: pd.Series) -> pd.Series:
 # public operators
 # ---------------------------------------------------------------------------
 
-def _validate(p: int, algo: str, hash_mode: str, impl: str,
-              key_encode: str | None = None) -> None:
+def _validate(p: int, algo: str, hash_mode: str, impl: str) -> None:
     if not 4 <= p <= 18:
         raise ValueError(f"p must be in [4, 18], got {p}")
     if algo not in ("hll", "hlll", "hllzstd"):
@@ -353,10 +283,6 @@ def _validate(p: int, algo: str, hash_mode: str, impl: str,
         raise ValueError(f"unknown impl {impl!r}")
     if impl in ("sql", "jvm") and hash_mode == "farmhash":
         raise ValueError("farmhash parity mode requires impl='pandas'")
-    if key_encode not in (None, "hash64"):
-        raise ValueError(f"unknown key_encode {key_encode!r}")
-    if key_encode and impl != "jvm":
-        raise ValueError("key_encode='hash64' requires impl='jvm'")
 
 
 def _resolve_impl(df: DataFrame, hash_mode: str, impl: str | None) -> str:
@@ -369,20 +295,6 @@ def _resolve_impl(df: DataFrame, hash_mode: str, impl: str | None) -> str:
     if hash_mode == "farmhash":
         return "pandas"
     return "jvm" if jvmagg.is_available(df.sparkSession) else "sql"
-
-
-def _key_schema(df: DataFrame, keys: Sequence[str]) -> str:
-    return ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}"
-        for f in df.schema.fields
-        if f.name in keys
-    )
-
-
-def _sketch_schema(df: DataFrame, keys: Sequence[str]) -> str:
-    """DDL of a sketch table: ``df``'s key columns, then the sketch."""
-    key_schema = _key_schema(df, keys)
-    return (key_schema + ", " if key_schema else "") + f"{_SKETCH_COL} binary"
 
 
 def _maxed_registers_sql(df, value_col, keys, p, hash_mode):
@@ -447,33 +359,15 @@ def _approx_distinct_sql(df, value_col, keys, p, hash_mode, estimate_col):
     return maxed.groupBy(*keys).agg(est)
 
 
-def _approx_distinct_jvm(df, value_col, keys, p, hash_mode, key_encode,
-                         estimate_col):
+def _approx_distinct_jvm(df, value_col, keys, p, hash_mode, estimate_col):
     """scan -> JVM hash projection -> ObjectHashAggregate with a dense
     byte[m] register buffer finishing to the estimate (hllspark.jvmagg
     est_agg_column) -> one row per group.  Partial aggregation ships one
     m-byte buffer per (group, map task): the same shuffle shape as the
     reference's treeAggregate-style build and Spark's own HLL++ (no
-    per-row (keys, j) map probe).
-
-    key_encode='hash64': group on xxhash64 of each key instead of the key
-    itself (the key value is carried to the output via FIRST over the
-    group, where it is constant) — the hash-aggregate probe compares one
-    long per key instead of hashing+comparing a string per row.  Measured
-    1.3x at 20M rows x 100k string keys (PLANS.md §8); a 64-bit collision
-    between two distinct keys would merge their groups, so this is opt-in
-    and recommended only while #groups << 2^32 (p_collide ≈ K²/2^65).
-    Dictionary-encoding via a broadcast-joined dim table was A/B'd and
-    REJECTED: the per-row join probe costs more than the agg probe it
-    replaces (3.0s vs 0.8s baseline, PLANS.md §8)."""
+    per-row (keys, j) map probe)."""
     filtered, v = _hashed(df, value_col, hash_mode)
     est = jvmagg.est_agg_column(df.sparkSession, p, _HASH_COL).alias(estimate_col)
-    if keys and key_encode == "hash64":
-        gks = [f"__gk{i}" for i in range(len(keys))]
-        hashed = [F.xxhash64(F.col(k)).alias(g) for k, g in zip(keys, gks)]
-        projected = filtered.select(*hashed, *keys, v.alias(_HASH_COL))
-        firsts = [F.first(k).alias(k) for k in keys]
-        return projected.groupBy(*gks).agg(*firsts, est).drop(*gks)
     projected = filtered.select(*keys, v.alias(_HASH_COL))
     if keys:
         return projected.groupBy(*keys).agg(est)
@@ -485,7 +379,7 @@ def _assemble_sketches(df, maxed, keys, p, algo, m_bits):
     ``df`` — at most m tiny rows per group reach Python regardless of input
     size.  Arrow, not pandas: the keys go back as they came, where pandas
     holds NaN and NULL alike and a NaN key would come back NULL."""
-    out_schema = _sketch_schema(df, keys)
+    out_schema = generic.schema_ddl(df, keys, f"{_SKETCH_COL} binary")
     group_cols = list(keys) if keys else [_GLOBAL_KEY]
     # Arrow checks nested nullability, and a DDL type is nullable all the
     # way down: the keys go in as the types they come back as
@@ -533,31 +427,11 @@ def _sortable(dt) -> bool:
     return True
 
 
-def _floats_as_text(dt):
-    """``dt`` with every float and double in it, at any depth, a string:
-    pandas holds NaN and NULL alike in a float (and writes NaN back as
-    NULL), so keys cross it with their floats in exact string form."""
-    if isinstance(dt, (FloatType, DoubleType)):
-        return StringType()
-    if isinstance(dt, StructType):
-        return StructType([
-            StructField(f.name, _floats_as_text(f.dataType), f.nullable, f.metadata)
-            for f in dt.fields
-        ])
-    if isinstance(dt, ArrayType):
-        return ArrayType(_floats_as_text(dt.elementType), dt.containsNull)
-    if isinstance(dt, MapType):
-        return MapType(_floats_as_text(dt.keyType), _floats_as_text(dt.valueType),
-                       dt.valueContainsNull)
-    return dt
-
-
-def _sketch_by_partials(df, value_col, keys, p, algo, m_bits, hash_mode, impl,
-                        salt_buckets):
+def _sketch_by_partials(df, value_col, keys, p, algo, m_bits, hash_mode, impl):
     """Per-task partial sketches, then one merge per group.  The partial
     step is the jar's HllSketchPartials for impl='jvm' (a register map per
-    task, hll partials) and a mapInPandas numpy build for impl='pandas'
-    (``algo`` partials).
+    task, hll partials) and generic.partials over hll_kind for
+    impl='pandas' (``algo`` partials).
 
     The merge is chosen here, on the partials: keyed partials on a jar
     session are exchanged by key, sorted and merged one group at a time in
@@ -569,58 +443,28 @@ def _sketch_by_partials(df, value_col, keys, p, algo, m_bits, hash_mode, impl,
         _sortable(df.schema[k].dataType) for k in keys
     )
     if hash_mode == "farmhash":  # raw values go to Python
-        projected = df.select(*keys, value_col)
+        projected, value = df.select(*keys, value_col), value_col
+        if isinstance(df.schema[value_col].dataType, (FloatType, DoubleType)):
+            projected = projected.where(~F.isnan(value_col))  # as no value
     else:
         filtered, v = _hashed(df, value_col, hash_mode)
-        projected = filtered.select(*keys, v.alias(_HASH_COL))
+        projected, value = filtered.select(*keys, v.alias(_HASH_COL)), _HASH_COL
     if stream:
         projected = jvmagg.normalize_keys(projected, len(keys))
 
     if impl == "jvm":
         partials = jvmagg.sketch_partials(projected, p, _SKETCH_COL)
     else:
-        floats = {
-            k: df.schema[k].dataType for k in keys
-            if _floats_as_text(df.schema[k].dataType) != df.schema[k].dataType
-        }
-        as_text = projected.select(
-            *[F.col(c).cast(_floats_as_text(floats[c])).alias(c) if c in floats else c
-              for c in projected.columns]
-        )
-        partials = as_text.mapInPandas(
-            _make_build_partials(
-                keys, p, algo, m_bits, hash_mode, value_col,
-                int_dtype=isinstance(
-                    df.schema[value_col].dataType,
-                    (ByteType, ShortType, IntegerType, LongType),
-                ),
-                nested=[k for k in keys if isinstance(
-                    df.schema[k].dataType, (StructType, ArrayType, MapType))],
-            ),
-            schema=_sketch_schema(as_text, keys),
-        )
-        partials = partials.select(
-            *[F.col(c).cast(floats[c].simpleString()).alias(c) if c in floats else c
-              for c in partials.columns]
-        )
+        kind = hll_kind(p, algo, m_bits, hash_mode)
+        partials = generic.partials(projected, value, kind, keys, _SKETCH_COL)
     if not keys:  # no input: one empty sketch
         empty = F.lit(bytearray(_sketch.encode(_hll.empty(p), algo, m_bits)))
         merged = merge_sketches(partials, [], _SKETCH_COL, algo, m_bits)
         return merged.select(F.coalesce(_SKETCH_COL, empty).alias(_SKETCH_COL))
-
-    def merge(parts):  # every column but the last, the sketch, is a key
-        if stream:
-            return jvmagg.stream_merge(parts, algo, m_bits)
-        merged = _merge_column(df, _SKETCH_COL, algo, m_bits).alias(_SKETCH_COL)
-        return parts.groupBy(*parts.columns[:-1]).agg(merged)
-
-    if salt_buckets and salt_buckets > 1:
-        # 3-level tree: partial -> salted merge -> final (north_rule skew
-        # handling: bounds fan-in per reducer to #partitions/buckets)
-        salt = (F.spark_partition_id() % F.lit(salt_buckets)).alias("__salt")
-        mid = merge(partials.select(*keys, salt, _SKETCH_COL))
-        return merge(mid.drop("__salt"))
-    return merge(partials)
+    if stream:
+        return jvmagg.stream_merge(partials, algo, m_bits)
+    merged = _merge_column(df, _SKETCH_COL, algo, m_bits).alias(_SKETCH_COL)
+    return partials.groupBy(*keys).agg(merged)
 
 
 def sketch_by(
@@ -632,7 +476,6 @@ def sketch_by(
     m_bits: int = 3,
     hash_mode: str = "xxhash64",
     impl: str | None = None,
-    salt_buckets: int = 0,
 ) -> DataFrame:
     """Build one sketch of distinct ``value_col`` per group of ``keys``.
 
@@ -641,7 +484,6 @@ def sketch_by(
     See module docstring for the three physical plans: every algo builds
     through the same plan of its impl ('sql' assembles; 'jvm' and 'pandas'
     build per-task partials, then merge them per group).
-    ``salt_buckets`` applies to the partial plans (jvm and pandas).
     """
     keys = list(keys or [])
     impl = _resolve_impl(df, hash_mode, impl)
@@ -649,9 +491,7 @@ def sketch_by(
     if impl == "sql":
         maxed = _maxed_registers_sql(df, value_col, keys, p, hash_mode)
         return _assemble_sketches(df, maxed, keys, p, algo, m_bits)
-    return _sketch_by_partials(
-        df, value_col, keys, p, algo, m_bits, hash_mode, impl, salt_buckets
-    )
+    return _sketch_by_partials(df, value_col, keys, p, algo, m_bits, hash_mode, impl)
 
 
 def merge_sketches(
@@ -936,8 +776,6 @@ def approx_distinct(
     hash_mode: str = "xxhash64",
     impl: str | None = None,
     estimate_col: str = "distinct_estimate",
-    key_encode: str | None = None,
-    **kw,
 ) -> DataFrame:
     """Convenience: build + estimate. DataFrame[keys..., estimate double].
 
@@ -945,20 +783,15 @@ def approx_distinct(
     whole query is one ObjectHashAggregate finishing to the estimate in the
     JVM — the plan shape of approx_count_distinct; with impl='sql' hashing,
     register max and the Flajolet estimator run as native Spark SQL.
-    Neither has a Python stage.  key_encode='hash64' (jvm impl only): see
-    _approx_distinct_jvm."""
+    Neither has a Python stage."""
     keys = list(keys or [])
     impl = _resolve_impl(df, hash_mode, impl)
-    _validate(p, algo, hash_mode, impl, key_encode)
+    _validate(p, algo, hash_mode, impl)
     if impl == "jvm":
-        return _approx_distinct_jvm(
-            df, value_col, keys, p, hash_mode, key_encode, estimate_col
-        )
+        return _approx_distinct_jvm(df, value_col, keys, p, hash_mode, estimate_col)
     if impl == "sql":
         return _approx_distinct_sql(df, value_col, keys, p, hash_mode, estimate_col)
-    sk = sketch_by(
-        df, value_col, keys, p=p, algo=algo, hash_mode=hash_mode, impl=impl, **kw
-    )
+    sk = sketch_by(df, value_col, keys, p=p, algo=algo, hash_mode=hash_mode, impl=impl)
     return sk.select(*keys, _estimate_column(df, _SKETCH_COL).alias(estimate_col))
 
 

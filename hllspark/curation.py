@@ -794,6 +794,8 @@ def pack_sequences(
 
     - ``chunk_id``    — chunk containing the document's FIRST token,
     - ``chunk_offset``— token offset of the document within that chunk,
+      ``0 <= chunk_offset < seq_len`` and
+      ``chunk_id * seq_len + chunk_offset`` is the document's start,
     - ``n_chunks_spanned`` — how many chunks the document touches.
 
     A NULL count counts 0, any other integer counts as itself.  The
@@ -812,7 +814,7 @@ def pack_sequences(
     start = end - n
     return (
         local.withColumn("chunk_id", F.floor(start / seq_len))
-        .withColumn("chunk_offset", start % seq_len)
+        .withColumn("chunk_offset", F.pmod(start, F.lit(seq_len)))
         .withColumn(
             "n_chunks_spanned",
             F.when(n > 0, F.floor((end - 1) / seq_len) - F.floor(start / seq_len) + 1)

@@ -32,9 +32,11 @@ url appearing twice would be sampled as two copies); dedupe upstream.
 
 Relation to the reference: the reference repo (mkarppa/hyperlogloglog)
 has no sampling surface at all — this is part of the LLM-data-pipeline
-extension family, same two-phase Spark plan as sketches/generic.py
-(per-partition partial build, grouped merge of serialized states; the
-shuffle carries one k-item sketch per (partition, key), never raw rows).
+extension family.  ``kind(k)`` is a sketches.generic kind over three
+value columns (id, weight, u), so ``sample_agg`` is generic.sketch_agg:
+a per-partition sorted-segment build and a grouped merge of serialized
+states, under generic's key rules; the shuffle carries one k-item sketch
+per (partition, key), never raw rows.
 """
 
 from __future__ import annotations
@@ -46,7 +48,8 @@ import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
-from pyspark.sql.types import BinaryType
+
+from .generic import SketchKind, schema_ddl, sketch_agg
 
 _MAGIC = b"PSK1"
 _SEP = "\x1f"
@@ -156,6 +159,18 @@ def decode(buf: bytes):
     return (k, tau, ids, weights, us)
 
 
+def kind(k: int) -> SketchKind:
+    """The k-item priority sample over value columns (id, weight, u)."""
+    return SketchKind(
+        name=f"priority-{k}",
+        zero=lambda: zero(k),
+        update=update,
+        merge=merge,
+        encode=encode,
+        decode=decode,
+    )
+
+
 # ---------------------------------------------------------- spark plans
 
 def uniform_col(id_col: str, seed: int):
@@ -188,12 +203,11 @@ def sample_agg(
     sketch_col: str = "sketch",
 ) -> DataFrame:
     """DataFrame[keys..., sketch binary] — one merged priority sample
-    per group.  Same two-phase plan as sketches.generic.sketch_agg: the
-    u column and the weight filter are codegen expressions, the partial
-    build is one mapInPandas keeping k+1 rows per (partition, key), and
-    the shuffle carries serialized sketches only.  Rows with null or
-    non-positive weight are excluded (they can never be drawn and would
-    poison q = w / u)."""
+    per group: generic.sketch_agg over ``kind(k)``, fed by codegen
+    expressions (the u column and the weight filter); a partial keeps k
+    items and tau per (partition, key).  Rows with null or non-positive
+    weight are excluded (they can never be drawn and would poison
+    q = w / u)."""
     if k < 1:
         raise ValueError("k must be >= 1")
     keys = list(keys or [])
@@ -210,80 +224,7 @@ def sample_agg(
             uniform_col(id_col, seed).alias("__psu"),
         )
     )
-    key_schema = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}"
-        for f in df.schema.fields
-        if f.name in keys
-    )
-    out_schema = (key_schema + ", " if key_schema else "") + f"{sketch_col} binary"
-
-    def build_partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # sorted-segment fold over the group codes, same shape as
-        # generic.build_partials (PLANS.md §23)
-        acc: dict[tuple, object] = {}
-        key_rows: dict[tuple, pd.DataFrame] = {}
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if keys:
-                codes = (
-                    pdf.groupby(keys, dropna=False, sort=False).ngroup().to_numpy()
-                )
-                order = np.argsort(codes, kind="stable")
-                sc = codes[order]
-                sid = pdf["__psid"].to_numpy()[order]
-                sw = pdf["__psw"].to_numpy()[order]
-                su = pdf["__psu"].to_numpy()[order]
-                seg = np.flatnonzero(np.r_[True, sc[1:] != sc[:-1]])
-                ends = np.r_[seg[1:], len(sc)]
-                key_df = pdf[keys].iloc[order[seg]]
-                for i, kt in enumerate(key_df.itertuples(index=False, name=None)):
-                    st = acc.get(kt)
-                    if st is None:
-                        st = zero(k)
-                        key_rows[kt] = key_df.iloc[i : i + 1]
-                    lo, hi = seg[i], ends[i]
-                    acc[kt] = update(st, sid[lo:hi], sw[lo:hi], su[lo:hi])
-            else:
-                if () not in acc:
-                    acc[()] = zero(k)
-                acc[()] = update(
-                    acc[()],
-                    pdf["__psid"].to_numpy(),
-                    pdf["__psw"].to_numpy(),
-                    pdf["__psu"].to_numpy(),
-                )
-        if not acc:
-            return
-        blobs = [encode(s) for s in acc.values()]
-        if keys:
-            out = pd.concat([key_rows[kt] for kt in acc], ignore_index=True)
-            out[sketch_col] = blobs
-        else:
-            out = pd.DataFrame({sketch_col: blobs})
-        yield out
-
-    partials = projected.mapInPandas(build_partials, schema=out_schema)
-
-    def _merge(s: pd.Series) -> bytes:
-        states = [decode(b) for b in s if b is not None]
-        out = states[0]
-        for st in states[1:]:
-            out = merge(out, st)
-        return encode(out)
-
-    merge_udf = F.pandas_udf(_merge, BinaryType())
-    if not keys:
-        spark = df.sparkSession
-        seedrow = spark.createDataFrame(
-            [(bytearray(encode(zero(k))),)], f"{sketch_col} binary"
-        )
-        return partials.unionByName(seedrow).agg(
-            merge_udf(F.col(sketch_col)).alias(sketch_col)
-        )
-    return partials.groupBy(*keys).agg(
-        merge_udf(F.col(sketch_col)).alias(sketch_col)
-    )
+    return sketch_agg(projected, ["__psid", "__psw", "__psu"], kind(k), keys, sketch_col)
 
 
 def sample_table(
@@ -297,14 +238,8 @@ def sample_table(
     estimate is plain SQL: filter (optionally after a broadcast join of
     the tiny sample back to its attributes) then SUM(est_weight)."""
     keys = list(keys or [])
-    key_schema = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}"
-        for f in sketch_df.schema.fields
-        if f.name in keys
-    )
-    out_schema = (
-        (key_schema + ", " if key_schema else "")
-        + "id string, weight double, est_weight double"
+    out_schema = schema_ddl(
+        sketch_df, keys, "id string", "weight double", "est_weight double"
     )
 
     def expand(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -17,22 +17,23 @@ query sketch columns without touching Python:
         FROM daily GROUP BY lang                 -- re-aggregation, no raw data
     ''')
 
-Execution shape: the grouped-aggregate functions are Arrow-batched
-pandas GROUPED_AGG UDFs.  Spark's partial-aggregation applies to pandas
-grouped aggs only as a final aggregate — each group's values are
-collected to ONE task before the UDF runs (unlike the DataFrame path in
-sketches/generic.py, which builds per-partition partials and shuffles
-only sketch states).  That makes the SQL surface the right tool for
-moderate group fan-in (the post-GROUP-BY re-merge of stored sketch
-columns — tiny rows — is always safe); for the initial build over
-raw 10^12-row tables, prefer agg.sketch_by / generic.sketch_agg, which
-this module's docs and README point at.  Wire format is byte-identical
+Execution shape: ``register_kind_sql`` registers any mergeable
+SketchKind (count-min, count-sketch, KLL, ...) as ``<prefix>_build_agg``
+and ``<prefix>_merge_agg``, plus the kind's scalar query functions from
+(name, fn, return_type) triples; the HLL functions are that over
+agg.hll_kind (farmhash parity hashing, as sketch_by(hash_mode=
+'farmhash')).  The merge is the DataFrame plan's own fold
+(generic.merge_udf): NULL sketches are skipped and a group with none
+merges to NULL, as in agg.merge_sketches.  Both aggregates are pandas
+GROUPED_AGG UDFs, which Spark runs only as a final aggregate — each
+group's values are collected to ONE task before the UDF runs (unlike
+generic.partials, which builds per-partition partials and shuffles only
+sketch states).  That makes the SQL surface the right tool for moderate
+group fan-in (the post-GROUP-BY re-merge of stored sketch columns — tiny
+rows — is always safe); for the initial build over raw 10^12-row tables,
+prefer agg.sketch_by / generic.sketch_agg.  Wire format is byte-identical
 between both surfaces (hllspark.sketch encode/decode), so sketches built
 by the DataFrame path re-aggregate in SQL and vice versa.
-
-``register_kind_sql`` extends the same pattern to any mergeable
-SketchKind (count-min, count-sketch, KLL, ...), with the kind's own
-scalar query functions supplied as (name, fn, return_type) triples.
 
 Planner caveat: Spark cannot place a pandas GROUPED_AGG UDF inside a
 scalar subquery (`SELECT (SELECT hll_build_agg(x) FROM ...)` fails with
@@ -51,8 +52,8 @@ from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 
 from . import hll, sketch
-from .hashing import hash_items
-from .sketches.generic import SketchKind
+from .agg import hll_kind
+from .sketches.generic import SketchKind, merge_udf
 
 __all__ = ["register_sql_functions", "register_kind_sql"]
 
@@ -61,10 +62,10 @@ def _coerce(vals: pd.Series) -> np.ndarray:
     """Arrow hands a Spark integer column WITH nulls to pandas as float64;
     after dropna(), cast back to int64 so the hash path (and therefore the
     sketch) is byte-identical to the DataFrame API's on the same values
-    (agg._hash_series_farmhash applies the same recovery when the Spark
-    schema says integral).  A UDF cannot see the Spark type, so genuine
-    non-integral doubles are rejected with CAST guidance rather than
-    silently truncated — float hashing is ambiguous across surfaces."""
+    (which drops nulls before Arrow instead).  A UDF cannot see the Spark
+    type, so genuine non-integral doubles are rejected with CAST guidance
+    rather than silently truncated — float hashing is ambiguous across
+    surfaces."""
     arr = vals.to_numpy()
     if arr.dtype.kind == "f":
         if np.all(arr == np.floor(arr)):
@@ -81,34 +82,10 @@ def register_sql_functions(spark: SparkSession, p: int = 14) -> list[str]:
     registered names).  ``p`` fixes the precision for hll_build_agg;
     merge/estimate/overlap functions take it from the sketch header, so
     they work on any stored sketch column regardless of build p."""
-
-    @pandas_udf("binary")
-    def hll_build_agg(v: pd.Series) -> bytes:
-        M = hll.empty(p)
-        vals = v.dropna()
-        if len(vals):
-            hll.update_hashes(M, hash_items(_coerce(vals)))
-        return sketch.encode(M)
-
-    @pandas_udf("binary")
-    def hll_merge_agg(sks: pd.Series) -> bytes:
-        M = None
-        for b in sks.dropna():
-            Mb = sketch.decode(bytes(b))
-            M = Mb if M is None else hll.merge(M, Mb)
-        if M is None:
-            M = hll.empty(p)
-        return sketch.encode(M)
-
-    @pandas_udf("double")
-    def hll_estimate(sks: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                float(hll.estimate(sketch.decode(bytes(b)))) if b is not None else None
-                for b in sks
-            ],
-            dtype="float64",
-        )
+    names = register_kind_sql(
+        spark, hll_kind(p, hash_mode="farmhash"), "hll",
+        [("estimate", lambda M: float(hll.estimate(M)), "double")],
+    )
 
     @pandas_udf("binary")
     def hll_union(a: pd.Series, b: pd.Series) -> pd.Series:
@@ -175,9 +152,6 @@ def register_sql_functions(spark: SparkSession, p: int = 14) -> list[str]:
         )
 
     fns = {
-        "hll_build_agg": hll_build_agg,
-        "hll_merge_agg": hll_merge_agg,
-        "hll_estimate": hll_estimate,
         "hll_union": hll_union,
         "hll_intersect_est": hll_intersect_est,
         "hll_jaccard": hll_jaccard,
@@ -186,7 +160,7 @@ def register_sql_functions(spark: SparkSession, p: int = 14) -> list[str]:
     }
     for name, fn in fns.items():
         spark.udf.register(name, fn)
-    return list(fns)
+    return names + list(fns)
 
 
 def register_kind_sql(
@@ -196,9 +170,9 @@ def register_kind_sql(
     queries: Sequence[tuple[str, Callable[[object], object], str]] = (),
 ) -> list[str]:
     """Register ``<prefix>_build_agg(value)`` and ``<prefix>_merge_agg
-    (sketch)`` for any mergeable SketchKind, plus scalar per-sketch query
-    functions from (suffix, state -> value, sql_return_type) triples,
-    e.g. for count-sketch F2:
+    (sketch)`` for any mergeable SketchKind (the merge is NULL for a group
+    with no sketch), plus scalar per-sketch query functions from (suffix,
+    state -> value, sql_return_type) triples, e.g. for count-sketch F2:
 
         register_kind_sql(spark, countsketch.kind(2053, 5), "cs",
                           [("f2", countsketch.f2_estimate, "double")])
@@ -210,17 +184,7 @@ def register_kind_sql(
         state = kind.update(kind.zero(), _coerce(v.dropna()))
         return kind.encode(state)
 
-    @pandas_udf("binary")
-    def merge_agg(sks: pd.Series) -> bytes:
-        state = None
-        for b in sks.dropna():
-            sb = kind.decode(bytes(b))
-            state = sb if state is None else kind.merge(state, sb)
-        if state is None:
-            state = kind.zero()
-        return kind.encode(state)
-
-    names = {f"{prefix}_build_agg": build_agg, f"{prefix}_merge_agg": merge_agg}
+    names = {f"{prefix}_build_agg": build_agg, f"{prefix}_merge_agg": merge_udf(kind)}
     for suffix, fn, rtype in queries:
 
         def _mk(fn=fn, rtype=rtype):

@@ -53,7 +53,8 @@ from pyspark.sql.types import (
 
 from . import hll as _hll
 from . import sketch as _sketch
-from .agg import _hashed, _jr_columns_sql, _key_schema
+from .agg import _hashed, _jr_columns_sql
+from .sketches.generic import schema_ddl
 from .hashing import jr_split
 
 _HASH_COL = "__hllspark_hash"
@@ -208,7 +209,7 @@ def assemble_window_sketches(
     (window, keys) group."""
     keys = list(keys or [])
     group_cols = ["window"] + keys
-    key_schema = _key_schema(batch_df, keys)
+    key_schema = schema_ddl(batch_df, keys)
     out_schema = (
         "window struct<start:timestamp,end:timestamp>"
         + (", " + key_schema if key_schema else "")

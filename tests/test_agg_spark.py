@@ -110,16 +110,6 @@ def test_pandas_impl_partition_invariance(spark, events):
     assert outs[0] == outs[1] == outs[2]
 
 
-def test_salted_equals_unsalted(spark, events):
-    a = agg.sketch_by(events, "user_id", ["event_type"], p=10, impl="pandas").collect()
-    b = agg.sketch_by(
-        events, "user_id", ["event_type"], p=10, impl="pandas", salt_buckets=4
-    ).collect()
-    da = {r["event_type"]: bytes(r["sketch"]) for r in a}
-    db = {r["event_type"]: bytes(r["sketch"]) for r in b}
-    assert da == db
-
-
 def test_estimate_and_bitsize_columns(spark, events):
     sk = agg.sketch_by(events, "user_id", ["event_type"], p=8, algo="hlll")
     out = agg.with_estimate(sk).withColumn(
@@ -395,45 +385,6 @@ def test_approx_distinct_grouping_sets_gid_mapping(spark, events):
     )
     # gid 2 = []: single global row
     assert len(by_gid[2]) == 1 and by_gid[2][0]["event_type"] is None
-
-
-def test_key_encode_hash64_matches_plain_grouping(spark, events):
-    """approx_distinct's key_encode='hash64' (probe on xxhash64(key) longs,
-    key carried via FIRST) must return identical estimates to plain string
-    grouping on a collision-free key set."""
-    from hllspark import jvmagg
-
-    if not jvmagg.is_available(spark):
-        pytest.skip("jvm jar not on classpath")
-    est_plain = {
-        r["event_type"]: r["distinct_estimate"]
-        for r in agg.approx_distinct(
-            events, "user_id", ["event_type"], p=10, impl="jvm"
-        ).collect()
-    }
-    est_enc = {
-        r["event_type"]: r["distinct_estimate"]
-        for r in agg.approx_distinct(
-            events, "user_id", ["event_type"], p=10, impl="jvm",
-            key_encode="hash64",
-        ).collect()
-    }
-    assert est_plain == est_enc
-
-
-def test_key_encode_requires_jvm_and_valid_name(spark, events):
-    with pytest.raises(ValueError, match="requires impl='jvm'"):
-        agg.approx_distinct(
-            events, "user_id", ["event_type"], impl="sql", key_encode="hash64"
-        )
-    with pytest.raises(ValueError, match="unknown key_encode"):
-        agg.approx_distinct(
-            events, "user_id", ["event_type"], key_encode="dict"
-        )
-    # sketch_by's partial build keys its register map on the key row's
-    # bytes, with no aggregate probe for the option to cheapen
-    with pytest.raises(TypeError):
-        agg.sketch_by(events, "user_id", ["event_type"], key_encode="hash64")
 
 
 def test_approx_distinct_multi_explicit_pandas_raises(spark, events):

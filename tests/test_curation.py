@@ -221,8 +221,6 @@ def test_cumsum_ops_partition_invariant_with_negative_count(spark):
     select_within_budget give the python running-sum answer at 1 and at
     16 partitions (a partition's offset is the SUM of earlier counts,
     not the largest running sum inside them)."""
-    import math
-
     from hllspark.curation import pack_sequences, select_within_budget
 
     rows = [(i, -5000 if i == 265 else (i * 7) % 13 + 1) for i in range(500)]
@@ -231,8 +229,8 @@ def test_cumsum_ops_partition_invariant_with_negative_count(spark):
     for i, n in rows:
         start, cum = cum, cum + n
         spanned = (cum - 1) // 64 - start // 64 + 1 if n > 0 else 0
-        # chunk_offset is Spark's %, which keeps the dividend's sign
-        want_pack[i] = (start // 64, int(math.fmod(start, 64)), spanned)
+        # chunk_id * 64 + chunk_offset == start, 0 <= chunk_offset < 64
+        want_pack[i] = (start // 64, start % 64, spanned)
         if cum <= 1000:
             want_budget.append(i)
     for parts in (1, 16):

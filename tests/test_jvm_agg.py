@@ -438,18 +438,15 @@ def test_partials_build_runs_nothing_until_an_action(spark, keyed):
 
 
 @pytest.mark.parametrize("impl", ["jvm", "pandas"])
-def test_salted_merge_byte_identical(spark, keyed, impl):
-    """salt_buckets runs the keyed merge twice, by (keys, salt), then by
-    keys; the sketches equal the unsalted build's and impl='sql''s."""
+def test_partials_merge_byte_identical_to_sql(spark, keyed, impl):
+    """Both partial plans merge the partials of a multi-column key, one
+    per (key, partition), to impl='sql''s sketches."""
     keys = ["s", "n"]
 
-    def build(impl, salt_buckets=0):
-        return _sketches(agg.sketch_by(keyed, "v", keys, p=10, algo="hlll", impl=impl,
-                                       salt_buckets=salt_buckets), keys)
+    def build(impl):
+        return _sketches(agg.sketch_by(keyed, "v", keys, p=10, algo="hlll", impl=impl), keys)
 
-    salted = build(impl, salt_buckets=3)
-    assert salted == build(impl)
-    assert salted == build("sql")
+    assert build(impl) == build("sql")
 
 
 _NAN2 = struct.unpack(">d", bytes.fromhex("7ff8000000000001"))[0]
@@ -489,21 +486,42 @@ def test_float_keys_output_normalized(spark):
         assert set(_sketches(agg.sketch_by(df, "v", ["d"], p=8, impl=impl), ["d"])) == want
 
 
+_KINDS = ("cpc", "kmv", "priority")
+
+
+def _build(impl, df, keys):
+    """sketch_by of ``v`` under ``impl``, or one of _KINDS through
+    sketches.generic: cpc (a GroupedState kind), kmv (a sorted-segment
+    kind) or the priority sample of (v, w), three value columns."""
+    from hllspark.sketches import cpc, generic, kmv, priority
+
+    if impl == "cpc":
+        return generic.sketch_agg(df, "v", cpc.kind(256), keys)
+    if impl == "kmv":
+        return generic.sketch_agg(df, "v", kmv.kind(32), keys)
+    if impl == "priority":
+        return priority.sample_agg(df, "v", "w", 8, keys, seed=1)
+    return agg.sketch_by(df, "v", keys, p=8, impl=impl)
+
+
 @pytest.mark.parametrize("impl,jar", [("sql", True), ("sql", False), ("pandas", True),
-                                      ("pandas", False), ("jvm", True)])
+                                      ("pandas", False), ("jvm", True),
+                                      *[(k, True) for k in _KINDS]])
 def test_nan_key_is_its_own_group(spark, monkeypatch, impl, jar):
-    """On k double over NaN, NULL and 2.0, every plan returns groupBy's
-    three keys and the sketches of those three groups.  Keys that cross
-    pandas lose NaN to NULL, so no plan sends them through it as floats."""
-    rows = [(k, i) for i, k in enumerate([float("nan"), None, 2.0] * 40)]
-    df = spark.createDataFrame(rows, "k double, v long").repartition(4)
+    """On k double over NaN, NULL and 2.0, every plan and every kind built
+    through sketches.generic returns groupBy's three keys and the sketches
+    of those three groups.  Keys that cross pandas lose NaN to NULL, so no
+    plan sends them through it as floats."""
+    rows = [(k, i, 1.0 + i % 5) for i, k in enumerate([float("nan"), None, 2.0] * 40)]
+    df = spark.createDataFrame(rows, "k double, v long, w double").repartition(4)
     if not jar:  # as on a session without the jar
         monkeypatch.setattr(jvmagg, "is_available", lambda _spark: False)
-    got = _sketches(agg.sketch_by(df, "v", ["k"], p=8, impl=impl), ["k"])
+    got = _sketches(_build(impl, df, ["k"]), ["k"])
     assert set(got) == _group_by_keys(df, ["k"])
     # the same groups under an int code, which no plan can confuse
     code = F.when(F.isnan("k"), 0).when(F.col("k").isNull(), 1).otherwise(2)
-    by_code = _sketches(agg.sketch_by(df.withColumn("c", code), "v", ["c"], p=8, impl="sql"), ["c"])
+    ref = impl if impl in _KINDS else "sql"
+    by_code = _sketches(_build(ref, df.withColumn("c", code), ["c"]), ["c"])
     nan, two = (struct.pack(">d", x).hex() for x in (float("nan"), 2.0))
     assert got == {(nan,): by_code[(0,)], (None,): by_code[(1,)], (two,): by_code[(2,)]}
 
@@ -524,6 +542,23 @@ def test_pandas_struct_key_matches_sql(spark, monkeypatch, jar):
     got = _sketches(agg.sketch_by(df, "v", ["s"], p=8, impl="pandas"), ["s"])
     assert set(got) == _group_by_keys(df, ["s"]) and len(got) == 10
     assert got == _sketches(agg.sketch_by(df, "v", ["s"], p=8, impl="sql"), ["s"])
+
+
+@pytest.mark.parametrize("kind", _KINDS)
+def test_generic_struct_key_groups_like_group_by(spark, kind):
+    """Struct keys (NULL structs, NULL fields, a NaN field) build for every
+    kind through sketches.generic, as groupBy's groups, each the sketch of
+    its rows alone (checked against the same build keyed by the struct's
+    JSON text)."""
+    xs = (0.0, float("nan"), 2.0)
+    rows = [(None if i % 7 == 0 else (xs[i % 3], None if i % 5 == 0 else i % 2), i, 1.0 + i % 3)
+            for i in range(300)]
+    df = spark.createDataFrame(rows, "s struct<x double, y int>, v long, w double").repartition(3)
+    got = _build(kind, df, ["s"])
+    assert got.count() == df.groupBy("s").count().count() == 10
+    got = {r["j"]: bytes(r["sketch"]) for r in got.select(F.to_json("s").alias("j"), "sketch").collect()}
+    by_json = _build(kind, df.withColumn("j", F.to_json("s")), ["j"])
+    assert got == {r["j"]: bytes(r["sketch"]) for r in by_json.collect()}
 
 
 def test_merge_keys_group_like_group_by(spark):

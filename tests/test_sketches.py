@@ -370,6 +370,20 @@ def test_approx_quantiles_grouped_vs_duckdb(spark):
         assert abs(true_rank - 0.5) < 0.03, (et, r["quantile"], exact[et])
 
 
+def test_approx_quantiles_nan_key_is_its_own_group(spark):
+    """NaN, NULL and 2.0 keys are three groups in approx_quantiles' output,
+    as under groupBy: no key crosses pandas on the way out."""
+    from hllspark.sketches import generic
+
+    ks = [float("nan"), None, 2.0]
+    ev = spark.createDataFrame([(ks[i % 3], float(i)) for i in range(300)], "k double, v double")
+    got = generic.approx_quantiles(ev, "v", [0.0, 1.0], keys=["k"]).collect()
+    by_key = {("nan" if r["k"] != r["k"] else r["k"], r["prob"]): r["quantile"] for r in got}
+    assert len(got) == len(by_key) == 6
+    assert by_key[("nan", 0.0)] == 0.0 and by_key[(None, 1.0)] == 298.0
+    assert by_key[(2.0, 0.0)] == 2.0
+
+
 class TestKMV:
     def test_estimate_within_bound(self):
         from hllspark.sketches import kmv

@@ -196,3 +196,23 @@ def test_sql_float_input_rejected(spark):
         "FROM sqlfuncs_floats"
     ).first()["n"]
     assert abs(n - 2) < 0.5
+
+
+def test_merge_agg_of_only_null_sketches_is_null(spark):
+    """hll_merge_agg skips NULL sketches and merges a group with none to
+    NULL, as agg.merge_sketches does, whatever p the functions were
+    registered with: an empty sketch at that p would not re-merge with
+    the stored sketches."""
+    regs = hll.build(np.arange(1, 200, dtype=np.int64), p=12)
+    rows = [(1, bytearray(sketch.encode(regs))), (1, None), (2, None), (2, None)]
+    spark.createDataFrame(rows, "g int, sk binary").createOrReplaceTempView("sqlfuncs_null_sks")
+    sqlfuncs.register_sql_functions(spark, p=14)
+    try:
+        by_g = "SELECT g, hll_merge_agg(sk) AS sk FROM sqlfuncs_null_sks GROUP BY g"
+        got = {r["g"]: r["sk"] for r in spark.sql(by_g).collect()}
+        assert got[2] is None
+        assert bytes(got[1]) == sketch.encode(regs)
+        again = spark.sql(f"SELECT hll_merge_agg(sk) AS sk FROM ({by_g})").first()["sk"]
+        assert bytes(again) == sketch.encode(regs)
+    finally:
+        sqlfuncs.register_sql_functions(spark, p=12)
