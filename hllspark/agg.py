@@ -9,26 +9,33 @@ always routes to 'pandas'):
 impl='jvm' — dense byte[m] register buffers in the JVM (java/src/hllspark
 via hllspark.jvmagg): per input row just hash + two shifts + clz + array
 max — the same imperative-buffer strategy as Spark's built-in
-approx_count_distinct, and measured at ~1x its throughput (vs ~3x slower
-for impl='sql').  approx_distinct (and its grouping-sets and multi-column
-forms) runs it as an ObjectHashAggregate finishing to the estimate
-(HllEstimateAggregator).  sketch_by, and rolling_distinct through it, run
-it map-side instead, because that aggregate holds only
+approx_count_distinct.  sketch_by, and approx_distinct and
+rolling_distinct through it, build map-side, because an aggregate over
+the rows (ObjectHashAggregate) holds only
 spark.sql.objectHashAggregate.sortBased.fallbackThreshold (128) groups per
 task and then sorts every remaining row of the task: HllSketchPartials
-(mapPartitions) keeps a register map
-per task over Spark's internal rows (UnsafeRow keys), charging each group
-its register, key and entry bytes against that threshold x 2^18 B, and
-emits one hll partial per (group, task) and flush.  Keyed partials are
-then exchanged by key, sorted, and merged one group at a time
-(HllSketchStreamMerge: adjacent equal keys fold into one register
-buffer, encoded once), so neither step is an ObjectHashAggregate and
-neither has a fallback cliff; the keys are float-normalized before the
-partial step, as groupBy normalizes them.  Key-less partials (one group)
-merge with HllSketchMergeAggregator.  Same plan shape as impl='pandas'
-below, with no Python for 'hll' and 'hlll'; an 'hllzstd' target merges the
-hll partials with the pandas UDF (only pyarrow's zstd reproduces its
-frames).
+(mapPartitions) keeps a register map per task, charging each group its
+register, key and entry bytes against that threshold x 2^18 B, and emits
+one hll partial per (group, task) and flush.  It takes the keys and the
+raw value and skips NULL values and hashes itself, through one of two
+readers chosen when the plan first runs: a Parquet, ORC or primitive
+cached-table scan (at most projected to bare columns) of key and value
+types it reads is read as the scan's column batches, with the value
+hashed from its vector and keys mapped to dense per-task ids, so a row
+costs one hash and one register max; any other input is read as Spark's
+internal rows of a null filter and the codegen'd xxhash64 projection,
+keyed by UnsafeRow bytes.  Keyed partials are then exchanged by key,
+sorted, and merged one group at a time (HllSketchStreamMerge: adjacent
+equal keys fold into one register buffer, encoded once), so neither step
+is an ObjectHashAggregate and neither has a fallback cliff; the keys are
+float-normalized before the partial step, as groupBy normalizes them.
+Key-less partials (one group) merge with HllSketchMergeAggregator, and
+approx_distinct estimates the merged hll sketches with HllSketchEstimate.
+Same plan shape as impl='pandas' below, with no Python for 'hll' and
+'hlll'; an 'hllzstd' target merges the hll partials with the pandas UDF
+(only pyarrow's zstd reproduces its frames).  approx_distinct's
+grouping-sets and multi-column forms run one ObjectHashAggregate of
+HllEstimateAggregator buffers finishing to the estimate.
 
 impl='sql' — everything hot stays in the JVM / whole-stage codegen:
 
@@ -82,8 +89,9 @@ farmhash builds (whose hashing is numpy);
 the numpy codec is also the parity reference the JVM one is tested
 against.  Measured on sketch_rollup (4 vCPUs, interleaved pairs):
 vs_builtin 2.24 -> 1.12 with the JVM codec (PLANS.md §55), then below 1.0
-with the map-side partial build (§56) and lower again with the stream
-merge (§57).
+with the map-side partial build (§56), lower again with the stream merge
+(§57) and with the column batch reader (§60), which also takes
+sketch_build (approx_distinct by language) from ~0.92 to ~0.66.
 
 Hash modes:
     'xxhash64'  — production default: hashing in the JVM (codegen'd).
@@ -152,7 +160,9 @@ def _farmhash(values: np.ndarray) -> np.ndarray:
 def _hashed(df: DataFrame, value_col: str, hash_mode: str):
     """(null-filtered df, bigint hash column of value_col) for the JVM hash
     modes: Spark's xxhash64(NULL) is the seed hash, so nulls are dropped
-    BEFORE hashing (COUNT DISTINCT semantics); 'prehashed' casts as is."""
+    BEFORE hashing (COUNT DISTINCT semantics); 'prehashed' casts as is.
+    Not used by impl='jvm''s sketch_by: HllSketchPartials takes the raw
+    value and owns null-skipping and hashing there, by the same rule."""
     v = (
         F.xxhash64(F.col(value_col))
         if hash_mode == "xxhash64"
@@ -359,21 +369,6 @@ def _approx_distinct_sql(df, value_col, keys, p, hash_mode, estimate_col):
     return maxed.groupBy(*keys).agg(est)
 
 
-def _approx_distinct_jvm(df, value_col, keys, p, hash_mode, estimate_col):
-    """scan -> JVM hash projection -> ObjectHashAggregate with a dense
-    byte[m] register buffer finishing to the estimate (hllspark.jvmagg
-    est_agg_column) -> one row per group.  Partial aggregation ships one
-    m-byte buffer per (group, map task): the same shuffle shape as the
-    reference's treeAggregate-style build and Spark's own HLL++ (no
-    per-row (keys, j) map probe)."""
-    filtered, v = _hashed(df, value_col, hash_mode)
-    est = jvmagg.est_agg_column(df.sparkSession, p, _HASH_COL).alias(estimate_col)
-    projected = filtered.select(*keys, v.alias(_HASH_COL))
-    if keys:
-        return projected.groupBy(*keys).agg(est)
-    return projected.agg(est)  # empty input -> zero() buffer -> 0.0
-
-
 def _assemble_sketches(df, maxed, keys, p, algo, m_bits):
     """groupBy(keys).applyInArrow over maxed (j, r) rows derived from
     ``df`` — at most m tiny rows per group reach Python regardless of input
@@ -407,7 +402,15 @@ def _assemble_sketches(df, maxed, keys, p, algo, m_bits):
             table.column(_R_COL).to_numpy().astype(np.uint8),
         )
         sketch = pa.array([_sketch.encode(regs, algo, m_bits)], pa.binary())
-        return table.select(list(keys)).slice(0, 1).append_column(_SKETCH_COL, sketch)
+        out = table.select(list(keys)).slice(0, 1)
+        # timestamps come in zoned by the session time zone's name and go
+        # back only as UTC, the same instants
+        zoned = [f for f in out.schema if pa.types.is_timestamp(f.type) and f.type.tz]
+        for f in zoned:
+            i = out.schema.get_field_index(f.name)
+            utc = out.column(i).cast(pa.timestamp(f.type.unit, "UTC"))
+            out = out.set_column(i, f.with_type(utc.type), utc)
+        return out.append_column(_SKETCH_COL, sketch)
 
     assembled = maxed.groupBy(*group_cols).applyInArrow(assemble, schema=out_schema)
     if not keys:
@@ -430,8 +433,8 @@ def _sortable(dt) -> bool:
 def _sketch_by_partials(df, value_col, keys, p, algo, m_bits, hash_mode, impl):
     """Per-task partial sketches, then one merge per group.  The partial
     step is the jar's HllSketchPartials for impl='jvm' (a register map per
-    task, hll partials) and generic.partials over hll_kind for
-    impl='pandas' (``algo`` partials).
+    task over the keys and the raw value, hll partials) and
+    generic.partials over hll_kind for impl='pandas' (``algo`` partials).
 
     The merge is chosen here, on the partials: keyed partials on a jar
     session are exchanged by key, sorted and merged one group at a time in
@@ -442,9 +445,11 @@ def _sketch_by_partials(df, value_col, keys, p, algo, m_bits, hash_mode, impl):
     stream = bool(keys) and _jvm_merges(df, algo) and all(
         _sortable(df.schema[k].dataType) for k in keys
     )
-    if hash_mode == "farmhash":  # raw values go to Python
+    if impl == "jvm" or hash_mode == "farmhash":  # raw values
         projected, value = df.select(*keys, value_col), value_col
-        if isinstance(df.schema[value_col].dataType, (FloatType, DoubleType)):
+        if hash_mode == "farmhash" and isinstance(
+            df.schema[value_col].dataType, (FloatType, DoubleType)
+        ):
             projected = projected.where(~F.isnan(value_col))  # as no value
     else:
         filtered, v = _hashed(df, value_col, hash_mode)
@@ -452,8 +457,8 @@ def _sketch_by_partials(df, value_col, keys, p, algo, m_bits, hash_mode, impl):
     if stream:
         projected = jvmagg.normalize_keys(projected, len(keys))
 
-    if impl == "jvm":
-        partials = jvmagg.sketch_partials(projected, p, _SKETCH_COL)
+    if impl == "jvm":  # the jar skips NULL values and hashes
+        partials = jvmagg.sketch_partials(projected, p, _SKETCH_COL, hash_mode)
     else:
         kind = hll_kind(p, algo, m_bits, hash_mode)
         partials = generic.partials(projected, value, kind, keys, _SKETCH_COL)
@@ -779,18 +784,20 @@ def approx_distinct(
 ) -> DataFrame:
     """Convenience: build + estimate. DataFrame[keys..., estimate double].
 
-    With the jvm impl (the default when the jar is on the classpath) the
-    whole query is one ObjectHashAggregate finishing to the estimate in the
-    JVM — the plan shape of approx_count_distinct; with impl='sql' hashing,
-    register max and the Flajolet estimator run as native Spark SQL.
-    Neither has a Python stage."""
+    With the jvm impl (the default when the jar is on the classpath) it is
+    sketch_by's jvm plan (per-task partials read from the scan's column
+    batches where it can, the stream merge, or the merge aggregate with no
+    keys) and the JVM estimate function over the merged sketches, built as
+    plain hll whatever algo is (the estimate needs only the registers); with
+    impl='sql' hashing, register max and the Flajolet estimator run as
+    native Spark SQL.  Neither has a Python stage."""
     keys = list(keys or [])
     impl = _resolve_impl(df, hash_mode, impl)
     _validate(p, algo, hash_mode, impl)
-    if impl == "jvm":
-        return _approx_distinct_jvm(df, value_col, keys, p, hash_mode, estimate_col)
     if impl == "sql":
         return _approx_distinct_sql(df, value_col, keys, p, hash_mode, estimate_col)
+    if impl == "jvm":  # the estimate needs only the registers
+        algo = "hll"
     sk = sketch_by(df, value_col, keys, p=p, algo=algo, hash_mode=hash_mode, impl=impl)
     return sk.select(*keys, _estimate_column(df, _SKETCH_COL).alias(estimate_col))
 

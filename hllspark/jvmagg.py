@@ -6,25 +6,32 @@ that with an imperative register buffer.  java/src/hllspark/
 HllRegAggregator.java is the same trick for OUR register semantics: a typed
 Aggregator whose buffer is the dense byte[m] register array, planned as
 ObjectHashAggregate with partial aggregation (one m-byte buffer per group
-per map task crosses the shuffle).  Measured on local[32], 20M rows: the
-JVM build runs at ~0.95-1.1x Spark's built-in HLL++ (vs 3.2x slower for the
-SQL formulation) and produces byte-identical registers to impl='sql' /
-impl='pandas' (same jr_split convention; pytest-gated).
-
-approx_distinct runs that aggregate as HllEstimateAggregator (the same
-buffer, finishing to the estimate); HllRegAggregator itself, with raw
-register bytes out, is kept as the register build perfbench times.
+per map task crosses the shuffle), producing byte-identical registers to
+impl='sql' / impl='pandas' (same jr_split convention; pytest-gated).
+approx_distinct_grouping_sets and approx_distinct_multi run that aggregate
+as HllEstimateAggregator (the same buffer, finishing to the estimate);
+HllRegAggregator itself, with raw register bytes out, is kept as the
+register build perfbench times.
 
 That aggregate holds at most spark.sql.objectHashAggregate.sortBased.
 fallbackThreshold (128) buffers per task; past that it sorts every
 remaining input row of the task.  Many small groups per task (sketch_by
 at a fine grain, rolling_distinct's (keys, bucket) build) hit that sort,
-so every sketch build goes map-side instead:
-HllSketchPartials keeps a per-task hash map from key to register
-buffer, bounded by the same threshold x 2^18 B (the most dense register
-memory ObjectHashAggregate holds per task at any p; each group is
-charged its register, key and map-entry bytes), and streams one HLSK hll
-partial per (group, task) (sketch_partials).  The partials' merge is no
+so every sketch build, and approx_distinct through it, goes map-side
+instead: HllSketchPartials keeps a per-task group map from key to
+register buffer, bounded by the same threshold x 2^18 B (the most dense
+register memory ObjectHashAggregate holds per task at any p; each group
+is charged its register, key and map-entry bytes), and streams one HLSK
+hll partial per (group, task) (sketch_partials).  It takes the keys and
+the raw value and owns null-skipping and hashing, through one of two
+readers chosen at the first action: a Parquet, ORC or cached-table scan
+(under at most a projection of bare columns) whose key and value types it
+reads is read as the scan's column batches, hashing each value straight
+from its vector and mapping keys to dense per-task ids (dictionary-encoded
+strings decoded once per batch), so a row costs one hash and one register
+max; every other input is read as Spark's internal rows of a null filter
+and Spark's xxhash64 projection, keyed by their UnsafeRow bytes.  Both
+readers emit the same partials.  The partials' merge is no
 ObjectHashAggregate either, because that merge would hit the same
 threshold: HllSketchStreamMerge exchanges them by key, sorts, and folds
 each run of equal keys into one register buffer (stream_merge), over keys
@@ -36,9 +43,9 @@ stage: HllSketchMergeAggregator merges sketches of any format with
 partial aggregation (sketch_by's key-less merge, merge_sketches,
 rolling_distinct's window merge, sketch_rollup / sketch_cube, whose
 inputs collapse map-side) and the
-HllSketchEstimate function estimates them (with_estimate,
-rolling_distinct).  The pandas UDFs of hllspark.agg remain for sessions
-without the jar, 'hllzstd' encodes and farmhash builds.
+HllSketchEstimate function estimates them (approx_distinct,
+with_estimate, rolling_distinct).  The pandas UDFs of hllspark.agg remain
+for sessions without the jar, 'hllzstd' encodes and farmhash builds.
 
 Availability: the pre-built jar ships at hllspark/jars/hllspark-jvm.jar
 (source + build script under java/); it must be on the DRIVER classpath at
@@ -57,6 +64,7 @@ speed differs.
 from __future__ import annotations
 
 import os
+import weakref
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -64,9 +72,12 @@ from pyspark.sql.types import DoubleType
 
 # availability is a CLASSPATH property — JVM-wide, so per-application
 # caching is correct.  Registration is per-SparkSession (newSession() has
-# an isolated function registry), so it is NOT cached: re-registering is a
-# handful of py4j calls and always lands in the caller's registry.
+# an isolated function registry), so the names registered are cached per
+# session object: each registration is a dozen py4j reflection round trips.
 _availability: dict[str, bool] = {}
+_registered: "weakref.WeakKeyDictionary[SparkSession, set[str]]" = (
+    weakref.WeakKeyDictionary()
+)
 
 
 def jar_path() -> str:
@@ -133,19 +144,33 @@ def _require(spark: SparkSession) -> None:
         )
 
 
-def _register(spark: SparkSession, flavor: str, *args) -> str:
-    """Register (idempotently) the ``flavor`` UDAF (see _AGGREGATORS) built
-    with constructor ``args`` and return its SQL function name, which
-    encodes the arguments (``hllspark_sketch_12_hlll_3``)."""
-    _require(spark)
-    name = "_".join(["hllspark", flavor, *map(str, args)])
-    jvm = spark._jvm
-    cls, in_enc = _AGGREGATORS[flavor]
-    agg_obj = getattr(jvm.hllspark, cls)(*args)
-    enc = getattr(jvm.org.apache.spark.sql.Encoders, in_enc)()
-    udaf = jvm.org.apache.spark.sql.functions.udaf(agg_obj, enc)
-    spark._jsparkSession.udf().register(name, udaf)
+def _once(spark: SparkSession, name: str, register) -> str:
+    """Call ``register()`` to add ``name`` to ``spark``'s function registry
+    the first time this session asks for it; return ``name``."""
+    names = _registered.setdefault(spark, set())
+    if name not in names:
+        _require(spark)
+        register()
+        names.add(name)
     return name
+
+
+def _register(spark: SparkSession, flavor: str, *args) -> str:
+    """Register the ``flavor`` UDAF (see _AGGREGATORS) built with
+    constructor ``args`` in ``spark``'s function registry, once per
+    session, and return its SQL function name, which encodes the
+    arguments (``hllspark_merge_hlll_3``)."""
+    name = "_".join(["hllspark", flavor, *map(str, args)])
+
+    def register():
+        jvm = spark._jvm
+        cls, in_enc = _AGGREGATORS[flavor]
+        agg_obj = getattr(jvm.hllspark, cls)(*args)
+        enc = getattr(jvm.org.apache.spark.sql.Encoders, in_enc)()
+        udaf = jvm.org.apache.spark.sql.functions.udaf(agg_obj, enc)
+        spark._jsparkSession.udf().register(name, udaf)
+
+    return _once(spark, name, register)
 
 
 def regs_agg_column(spark: SparkSession, p: int, hash_col: str) -> Column:
@@ -160,16 +185,19 @@ def est_agg_column(spark: SparkSession, p: int, hash_col: str) -> Column:
     return F.expr(f"{_register(spark, 'est', p)}(`{hash_col}`)")
 
 
-def sketch_partials(df: DataFrame, p: int, sketch_col: str) -> DataFrame:
-    """Per-task partial sketches of ``df`` (key columns, then a bigint
-    hash column last): DataFrame[keys..., ``sketch_col`` binary],
-    one hll sketch per (group, task), or more when the task's register
-    map reaches its budget.  Merge them by key for the group's sketch.
-    Lazy like any transformation: ``df`` is planned and run at the first
-    action on the result."""
+def sketch_partials(df: DataFrame, p: int, sketch_col: str,
+                    hash_mode: str = "xxhash64") -> DataFrame:
+    """Per-task partial sketches of ``df`` (key columns, then the value
+    column last; NULL values are skipped, the rest hashed per
+    ``hash_mode``, 'xxhash64' or 'prehashed'): DataFrame[keys...,
+    ``sketch_col`` binary], one hll sketch per (group, task), or more when
+    the task's register map reaches its budget.  Merge them by key for the
+    group's sketch.  Lazy like any transformation: ``df`` is planned, its
+    reader chosen (column batches or rows, see HllSketchPartials) and run
+    at the first action on the result."""
     _require(df.sparkSession)
     jdf = df.sparkSession._jvm.hllspark.HllSketchPartials.build(
-        df._jdf, p, sketch_col
+        df._jdf, p, sketch_col, hash_mode
     )
     return DataFrame(jdf, df.sparkSession)
 
@@ -208,8 +236,7 @@ def merge_agg_column(spark: SparkSession, sketch_col: str, algo: str,
 def estimate_column(spark: SparkSession, sketch_col: str) -> Column:
     """Scalar expression: serialized sketch of any format -> distinct-count
     estimate (double), NULL for a NULL sketch."""
-    _require(spark)
-    spark.udf.registerJavaFunction(
+    name = _once(spark, _ESTIMATE_FN, lambda: spark.udf.registerJavaFunction(
         _ESTIMATE_FN, "hllspark.HllSketchEstimate", DoubleType()
-    )
-    return F.expr(f"{_ESTIMATE_FN}(`{sketch_col}`)")
+    ))
+    return F.expr(f"{name}(`{sketch_col}`)")

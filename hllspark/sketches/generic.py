@@ -167,6 +167,9 @@ def partials(
             first = np.unique(codes, return_index=True)[1]
             gids, new = np.empty(len(first), dtype=np.int64), []
             for i, kt in enumerate(view.iloc[first].itertuples(index=False, name=None)):
+                # float keys arrive as text, so a NaN is a NULL of an int or
+                # bool column, and NaNs never compare equal across batches
+                kt = tuple(None if isinstance(x, float) and x != x else x for x in kt)
                 gid = slots.get(kt)
                 if gid is None:
                     gid = slots[kt] = len(slots)

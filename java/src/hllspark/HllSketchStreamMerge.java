@@ -94,7 +94,8 @@ public final class HllSketchStreamMerge implements FlatMapFunction<Iterator<Inte
     final StructType out = new StructType(Arrays.copyOf(fields, nKeys))
         .add(sketch.name(), DataTypes.BinaryType, true, sketch.metadata());
     final Dataset<Row> sorted = partials.repartition(keys).sortWithinPartitions(keys);
-    final JavaRDD<InternalRow> merged = new HllSketchPartials.InputRows(sorted).toJavaRDD()
+    final JavaRDD<InternalRow> merged = new HllSketchPartials.InputRows<InternalRow>(sorted)
+        .toJavaRDD()
         .mapPartitions(new HllSketchStreamMerge(HllSketchCodec.algoId(algo), mBits, keyTypes));
     return partials.sparkSession().internalCreateDataFrame(merged.rdd(), out, false);
   }

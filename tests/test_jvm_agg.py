@@ -8,6 +8,7 @@ NULL and error semantics.  Skipped when the pre-built jar is not loadable
 in the test session.
 """
 
+import datetime
 import struct
 
 import numpy as np
@@ -54,12 +55,14 @@ def test_jvm_sketch_byte_identical_to_sql(spark, events, keys, algo):
 
 
 def test_jvm_estimate_equals_sql_estimate(spark, events):
-    jv = {
-        r["event_type"]: r["distinct_estimate"]
-        for r in agg.approx_distinct(
-            events, "user_id", ["event_type"], p=12, impl="jvm"
-        ).collect()
-    }
+    def estimates(algo):
+        est = agg.approx_distinct(
+            events, "user_id", ["event_type"], p=12, algo=algo, impl="jvm"
+        )
+        assert "Python" not in _plan(est)  # the estimate needs only the registers
+        return {r["event_type"]: r["distinct_estimate"] for r in est.collect()}
+
+    jv = estimates("hll")
     # sketch-path estimate (numpy estimator over identical registers)
     sq = {
         r["event_type"]: r["distinct_estimate"]
@@ -68,6 +71,7 @@ def test_jvm_estimate_equals_sql_estimate(spark, events):
         ).collect()
     }
     assert jv == sq  # bit-identical doubles: same registers, same estimator
+    assert estimates("hllzstd") == sq
 
 
 def test_jvm_partition_invariance(spark, events):
@@ -376,14 +380,11 @@ def test_partials_forced_flush_byte_identical(spark, keyed):
     old = spark.conf.get(conf)
     spark.conf.set(conf, "1")
     try:
-        projected = keyed.where(F.col("v").isNotNull()).select(
-            *keys, F.xxhash64("v").alias(agg._HASH_COL)
-        )
-        n_partials = jvmagg.sketch_partials(projected, p, "sketch").count()
+        n_partials = jvmagg.sketch_partials(keyed.select(*keys, "v"), p, "sketch").count()
         got = _sketches(agg.sketch_by(keyed, "v", keys, p=p, algo="hlll", impl="jvm"), keys)
     finally:
         spark.conf.set(conf, old)
-    assert n_partials == projected.count()
+    assert n_partials == keyed.where(F.col("v").isNotNull()).count()
     assert got == _sketches(agg.sketch_by(keyed, "v", keys, p=p, algo="hlll", impl="sql"), keys)
 
 
@@ -397,17 +398,18 @@ def test_partials_budget_counts_keys_and_entries_at_low_p(spark):
     projected = spark.range(0, 2 * n, numPartitions=1).select(
         (F.col("id") % n).alias("k"), F.xxhash64("id").alias(agg._HASH_COL)
     )
+    assert not _reads_batches(projected, "prehashed")  # the row reader's budget
     conf = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
     old = spark.conf.get(conf)
     try:
         spark.conf.set(conf, "1")
-        flushed = jvmagg.sketch_partials(projected, p, "sketch")
+        flushed = jvmagg.sketch_partials(projected, p, "sketch", "prehashed")
         n_flushed = flushed.count()
         got = _sketches(agg.merge_sketches(flushed, ["k"]), ["k"])
     finally:
         spark.conf.set(conf, old)
     assert n_flushed == 2 * n
-    assert jvmagg.sketch_partials(projected, p, "sketch").count() == n
+    assert jvmagg.sketch_partials(projected, p, "sketch", "prehashed").count() == n
     want = _sketches(
         agg.sketch_by(projected.withColumnRenamed(agg._HASH_COL, "h"), "h", ["k"],
                       p=p, hash_mode="prehashed", impl="sql"),
@@ -435,6 +437,213 @@ def test_partials_build_runs_nothing_until_an_action(spark, keyed):
     assert got == _sketches(
         agg.sketch_by(shuffled, "v", ["s"], p=10, algo="hlll", impl="sql"), ["s"]
     )
+
+
+# ---------------------------------------------------------------------------
+# the partial build's column batch reader
+# ---------------------------------------------------------------------------
+
+_KEY_COLS = ["s_dict", "s_plain", "i", "l", "d", "t", "b", "part"]
+
+
+def _reads_batches(df, hash_mode="xxhash64"):
+    """Whether sketch_partials reads ``df`` (keys, then the value) as its
+    scan's column batches; plans ``df`` and runs no job."""
+    return df.sparkSession._jvm.hllspark.HllSketchPartials.readsBatches(df._jdf, hash_mode)
+
+
+@pytest.fixture(scope="module")
+def typed_parquet(spark, tmp_path_factory):
+    """{name: Parquet DataFrame} of every key and value type the batch
+    reader takes, with NULLs and empty strings, in ~100-row row groups (so
+    dictionaries change between batches) over two files and a hive
+    partition column ``part``: 'dict' with a low-cardinality string
+    dictionary-encoded and a high-cardinality one plain-encoded (the
+    dictionary outgrows its page), 'nodict' written with
+    parquet.enable.dictionary=false, and 'empty' with no rows."""
+    rng = np.random.default_rng(11)
+    day, t0 = datetime.date(2024, 1, 1), datetime.datetime(2024, 1, 1)
+    rows = []
+    for i in range(3000):
+        k = int(rng.integers(0, 6))
+        n = None if i % 11 == 0 else int(rng.integers(0, 400))
+        vs = None if n is None else ("" if n == 0 else f"v{n}")
+        rows.append((
+            None if k == 0 else ["", "a", "bb", "ccc", "dddd"][k - 1],
+            None if i % 13 == 0 else ("" if i % 17 == 0 else f"u{int(rng.integers(0, 2000))}"),
+            None if i % 7 == 0 else k - 2,
+            None if i % 9 == 0 else (k - 3) * 10**12,
+            None if i % 5 == 0 else day + datetime.timedelta(days=k),
+            None if i % 6 == 0 else t0 + datetime.timedelta(hours=k),
+            None if i % 8 == 0 else k % 2 == 0,
+            None if i % 10 == 0 else f"p{k % 3}",
+            vs,
+            None if vs is None else bytearray(vs.encode()),
+            n,
+            None if n is None else n * 10**10 - 7,
+            None if n is None else day + datetime.timedelta(days=n),
+            None if n is None else t0 + datetime.timedelta(seconds=n),
+            1.5 * (k % 3),
+        ))
+    df = spark.createDataFrame(
+        rows,
+        "s_dict string, s_plain string, i int, l long, d date, t timestamp, b boolean,"
+        " part string, v_s string, v_bin binary, v_i int, v_l long, v_d date,"
+        " v_t timestamp, f double",
+    ).repartition(2)
+    base = tmp_path_factory.mktemp("typed")
+    options = {
+        "dict": {"parquet.block.size": 4096, "parquet.dictionary.page.size": 256},
+        "nodict": {"parquet.block.size": 4096, "parquet.enable.dictionary": "false"},
+    }
+    out = {}
+    for name, opts in options.items():
+        df.write.options(**opts).partitionBy("part").parquet(str(base / name))
+        out[name] = spark.read.parquet(str(base / name))
+    df.limit(0).write.parquet(str(base / "empty"))
+    out["empty"] = spark.read.parquet(str(base / "empty"))
+    return out
+
+
+# (keys, value, hash_mode): every key type, multi-column and no keys, then
+# every value type
+_BATCH_CASES = [
+    *[([k], "v_s", "xxhash64") for k in _KEY_COLS],
+    (["s_dict", "i", "b", "part"], "v_s", "xxhash64"),
+    ([], "v_s", "xxhash64"),
+    *[(["s_dict"], v, "xxhash64") for v in ("v_bin", "v_i", "v_l", "v_d", "v_t", "s_plain")],
+    (["i"], "v_l", "prehashed"),
+]
+
+
+@pytest.mark.parametrize("keys,value,hash_mode", _BATCH_CASES)
+@pytest.mark.parametrize("name", ["dict", "nodict"])
+def test_batch_reader_byte_identical_to_sql(spark, typed_parquet, name, keys, value,
+                                            hash_mode):
+    """Over Parquet the partial step reads column batches; sketch_by's
+    sketches are impl='sql''s byte for byte, and approx_distinct's
+    estimates are those of impl='sql''s sketches."""
+    df = typed_parquet[name]
+    assert _reads_batches(df.select(*keys, value), hash_mode)
+
+    def build(impl):
+        return agg.sketch_by(df, value, keys, p=10, hash_mode=hash_mode, impl=impl)
+
+    got = _sketches(build("jvm"), keys)
+    assert got == _sketches(build("sql"), keys)
+    if keys == ["s_dict"] and value == "v_s":
+        assert {(None,), ("",)} <= set(got)
+    est = agg.approx_distinct(df, value, keys, p=10, hash_mode=hash_mode, impl="jvm")
+    want = agg.with_estimate(build("sql"))
+    key_of = lambda r: tuple(_key_bits(r[k]) for k in keys)  # noqa: E731
+    assert ({key_of(r): r["distinct_estimate"] for r in est.collect()}
+            == {key_of(r): r["distinct_estimate"] for r in want.collect()})
+
+
+def test_batch_reader_partials_are_the_row_readers(spark, typed_parquet):
+    """Per task the batch reader emits the row reader's partials, keys and
+    bytes: the same scan read as batches and, under a filter that keeps
+    every row, as rows."""
+    df, keys = typed_parquet["dict"], ["s_dict", "i", "d", "b", "part"]
+    every_row = df.where(F.length(F.coalesce("s_plain", F.lit(""))) >= 0)
+    sel = df.select(*keys, "v_s")
+    assert _reads_batches(sel)
+    assert not _reads_batches(every_row.select(*keys, "v_s"))
+
+    def partials(selection):
+        rows = jvmagg.sketch_partials(selection, 12, "sketch").collect()
+        return sorted((tuple(map(repr, r[:-1])), bytes(r["sketch"])) for r in rows)
+
+    assert partials(sel) == partials(every_row.select(*keys, "v_s"))
+
+
+def test_batch_reader_empty_file(spark, typed_parquet):
+    """A file with no rows: no partials, no keyed sketch, and the empty
+    sketch with no keys."""
+    df = typed_parquet["empty"]
+    assert _reads_batches(df.select("s_dict", "v_s"))
+    assert jvmagg.sketch_partials(df.select("s_dict", "v_s"), 10, "sketch").count() == 0
+    assert agg.sketch_by(df, "v_s", ["s_dict"], p=10, impl="jvm").count() == 0
+    assert (_sketches(agg.sketch_by(df, "v_s", [], p=10, impl="jvm"), [])
+            == _sketches(agg.sketch_by(df, "v_s", [], p=10, impl="sql"), []))
+
+
+@pytest.mark.parametrize("threshold", [1, 3])
+def test_batch_reader_forced_flush(spark, typed_parquet, threshold):
+    """With the fallback threshold at 1 the batch reader flushes after
+    every row with a value, as the row reader does; at 3, every third
+    group, mid-batch, so ids resolved before a flush must not leak past
+    it.  The merged sketches cannot tell."""
+    df, keys, p = typed_parquet["dict"], ["s_dict", "i"], 18
+    conf = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, str(threshold))
+    try:
+        assert _reads_batches(df.select(*keys, "v_s"))
+        n_partials = jvmagg.sketch_partials(df.select(*keys, "v_s"), p, "sketch").count()
+        got = _sketches(agg.sketch_by(df, "v_s", keys, p=p, algo="hlll", impl="jvm"), keys)
+    finally:
+        spark.conf.set(conf, old)
+    if threshold == 1:
+        assert n_partials == df.where(F.col("v_s").isNotNull()).count()
+    assert got == _sketches(agg.sketch_by(df, "v_s", keys, p=p, algo="hlll", impl="sql"), keys)
+
+
+def test_reader_choice_by_input_shape(spark, typed_parquet, tmp_path):
+    """Which reader runs for each input shape: a scan, bare or projected to
+    a subset of its columns, and a cached table of primitive columns are
+    read as batches; a filter, a computed column, a float key, a
+    collated-string key and a cached table with a string column (Spark's
+    cache gives batches of primitive columns only) as rows.  Either way
+    the sketches are impl='sql''s."""
+    df = typed_parquet["dict"]
+    df.select("s_dict", "v_s").write.parquet(str(tmp_path / "two"))
+    df.select(F.collate("s_dict", "UTF8_LCASE").alias("s_dict"), "v_s").write.parquet(
+        str(tmp_path / "collated"))
+    cached = df.select("i", "v_l").cache()
+    cached_string = df.select("s_plain", "v_s").cache()
+    shapes = {  # shape: (input, key, value, read as batches)
+        "bare scan": (spark.read.parquet(str(tmp_path / "two")), "s_dict", "v_s", True),
+        "column subset": (df, "s_dict", "v_s", True),
+        "cached table": (cached, "i", "v_l", True),
+        "filter": (df.where(F.col("i") > 0), "s_dict", "v_s", False),
+        "computed column": (df.withColumn("s_dict", F.upper("s_dict")), "s_dict", "v_s", False),
+        "float key": (df, "f", "v_s", False),
+        "collated string key": (spark.read.parquet(str(tmp_path / "collated")), "s_dict", "v_s",
+                                False),
+        "cached table, string column": (cached_string, "s_plain", "v_s", False),
+    }
+    try:
+        for shape, (input_df, key, value, batches) in shapes.items():
+            assert _reads_batches(input_df.select(key, value)) == batches, shape
+
+            def build(impl):
+                return agg.sketch_by(input_df, value, [key], p=10, impl=impl)
+
+            assert _sketches(build("jvm"), [key]) == _sketches(build("sql"), [key]), shape
+    finally:
+        cached.unpersist()
+        cached_string.unpersist()
+
+
+def test_registered_functions_resolve_in_a_new_session(spark, codec_df):
+    """Registrations are cached per session, and a new session has its
+    own function registry: the merge and estimate functions resolve there
+    too, with the same answers."""
+    def run(session):
+        df = session.createDataFrame(codec_df.select("case", "sketch").collect(),
+                                     codec_df.select("case", "sketch").schema)
+        out = agg.with_estimate(agg.merge_sketches(df, ["case"]))
+        # repr: a saturated sketch estimates to NaN
+        return {r["case"]: (bytes(r["sketch"]), repr(r["distinct_estimate"]))
+                for r in out.collect()}
+
+    want = run(spark)
+    other = spark.newSession()
+    assert not other.catalog.functionExists("hllspark_merge_hll_3")
+    assert run(other) == want
+    assert other.catalog.functionExists("hllspark_merge_hll_3")
+    assert run(spark) == want
 
 
 @pytest.mark.parametrize("impl", ["jvm", "pandas"])

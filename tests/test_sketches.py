@@ -384,6 +384,33 @@ def test_approx_quantiles_nan_key_is_its_own_group(spark):
     assert by_key[(2.0, 0.0)] == 2.0
 
 
+
+@pytest.mark.parametrize("ktype, values", [("int", (0, 1, 2)), ("boolean", (True, False))])
+def test_partials_null_key_one_row_per_partition(spark, ktype, values):
+    """A NULL in an int or boolean key reaches pandas as NaN; it keeps one
+    slot across the Arrow batches of a partition, so one partition of 1000
+    rows in batches of 100 gives one partial row per key."""
+    keys = [*values, None]
+    df = spark.createDataFrame(
+        [(keys[i % len(keys)], i) for i in range(1000)], f"k {ktype}, v long"
+    ).coalesce(1)
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "100")
+    try:
+        rows = generic.partials(df, "v", kll.kind(64), ["k"]).collect()
+        medians = generic.approx_quantiles(df, "v", [0.5], keys=["k"]).collect()
+    finally:
+        spark.conf.set(conf, old)
+    assert sorted(r["k"] is None for r in rows) == [False] * len(values) + [True]
+    # KLL is order-sensitive, so the NULL group's bytes changed with its one
+    # state per partition; its median stays within KLL's rank error
+    for r in medians:
+        group = [i for i in range(1000) if keys[i % len(keys)] == r["k"]]
+        rank = sum(v <= r["quantile"] for v in group) / len(group)
+        assert abs(rank - 0.5) < 0.05, (r["k"], r["quantile"])
+
+
 class TestKMV:
     def test_estimate_within_bound(self):
         from hllspark.sketches import kmv
